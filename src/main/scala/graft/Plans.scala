@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.corpus.Corpus
 import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.search.CompressedSearchEngine
 
 /** Dumps `explain("formatted")` for the load-bearing physical plans into
   * PLANS.md — the audit trail that the plans are the ones a 1000-executor
@@ -29,7 +29,6 @@ object Plans {
 
     val files = Corpus.files(spark, sfDir)
     val t = IndexTables.build(files)
-    val eng = new SearchEngine(t)
     val toksP = graft.index.Stats.postings(files)
     val idx = InvertedIndex.build(toksP, t.nDocs, t.avgdl)
     // write + re-read so the query plans show the real parquet scan
@@ -44,20 +43,11 @@ object Plans {
           "a pruned `ReadSchema` (only doc_id/lang/text reach the scan).",
         Corpus.documents(spark, sfDir)
           .filter(col("lang") === "scala").select("doc_id", "lang", "text")),
-      ("Flagship BM25 token query (uncompressed tables)",
-        "Expect: broadcast of the tiny query-term side into the postings " +
-          "join, hash partial+final aggregation for the per-doc score sum, " +
-          "and `TakeOrderedAndProject` for top-k (no global sort).",
-        eng.search("merge sort window")),
       ("BM25 over the compressed block-max index",
         "Expect: parquet scan of the index with `PushedFilters: [In(term, …)]` " +
           "(term-range file pruning via min/max stats), generate/explode of " +
           "decoded postings, hash agg, `TakeOrderedAndProject`.",
         ceng.searchTopK(Seq("merge", "sort", "window"))),
-      ("Boolean query candidates (AND of two phrases)",
-        "Expect: left-semi joins for candidate membership; no full " +
-          "materialization of either candidate set.",
-        eng.search("\"hash join\" AND \"merge sort\"")),
       ("Boolean query over the compressed engine (shared verify scan)",
         "Expect: ONE scan of the corpus parquet — both phrases' candidate " +
           "sets union with membership flags (doc_id-scale rows), content is " +
@@ -91,11 +81,12 @@ object Plans {
         InvertedIndex.mergeSegments(
           InvertedIndex.segments(toksP, t.nDocs), t.avgdl)),
       ("Phrase adjacency pre-filter (positional postings)",
-        "Expect: `PushedFilters: [In(term, …)]` on the index scan, decode of " +
-          "postings+positions fused with explode, union of slot occurrence " +
-          "rows SEMI-JOINED on the conjunctive candidate set before the hash " +
-          "aggregation on (doc_id, start) — shuffle volume is candidates × " +
-          "query-term occurrences, never corpus-wide occurrences and never " +
+        "Expect: `PushedFilters` on the index scan, posting-level decode of " +
+          "postings+positions fused with explode, union of slot posting rows " +
+          "SEMI-JOINED on the conjunctive candidate set, then ONE doc_id " +
+          "`Exchange` + in-partition Sort + MapPartitions (the streaming " +
+          "per-document sorted intersection) — shuffle volume is candidate " +
+          "postings of the slot terms, never corpus-wide postings and never " +
           "candidate content.",
         ceng.adjacencyCandidates(Seq("merge", "sort"),
           ceng.candidatesAll(Seq("merge", "sort"))).get),

@@ -43,27 +43,27 @@ object Serve {
     sb.append('"').toString
   }
 
+  /** J2/J3 hydrate AFTER top-k: display columns are joined for the result
+    * page only, in the deterministic (score desc, doc_id asc) order. */
+  def hydrate(topk: DataFrame, files: DataFrame): DataFrame =
+    topk.join(files.select("doc_id", "repo", "path", "lang"), Seq("doc_id"))
+      .orderBy(col("score").desc, col("doc_id").asc)
+
   /** One warm serving session over a published checkpoint dir. */
   final class Session(spark: SparkSession, ckptDir: String, corpus: DataFrame,
                       logPath: String) {
     val engine: graft.search.CompressedSearchEngine =
       CheckpointedBuild.load(spark, ckptDir)
     private val files = corpus.persist()
-    private val display = files.select("doc_id", "repo", "path", "lang")
-
-    /** J2/J3 hydrate AFTER top-k: content columns only for the result page. */
-    private def hydrate(topk: DataFrame): DataFrame =
-      topk.join(display, Seq("doc_id"))
-        .orderBy(col("score").desc, col("doc_id").asc)
 
     def query(raw: String, k: Int = 10): DataFrame = {
       QueryLog.append(spark, logPath, Seq(raw))
-      hydrate(engine.search(raw, files, k))
+      hydrate(engine.search(raw, files, k), files)
     }
 
     def page(raw: String, page: Int, limit: Int): DataFrame = {
       QueryLog.append(spark, logPath, Seq(raw))
-      hydrate(engine.searchPage(raw, files, page, limit))
+      hydrate(engine.searchPage(raw, files, page, limit), files)
     }
 
     def suggest(prefix: String): DataFrame =

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.index.{IndexTables, InvertedIndex, Stats}
+import graft.search.CompressedSearchEngine
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -18,21 +18,28 @@ object SparkEntry {
   private def tables(s: SparkSession, dir: String): IndexTables =
     IndexTables.build(Corpus.files(s, dir))
 
-  private def eng(s: SparkSession, dir: String): SearchEngine =
-    new SearchEngine(tables(s, dir))
-
-  private def cengFrom(t: IndexTables): CompressedSearchEngine = {
-    val idx = InvertedIndex.build(graft.index.Stats.postings(t.files),
+  /** The serving engine over an in-memory index of `files`, built and
+    * scored with `analyzer` — every search entry below runs through it, so
+    * the DuckDB oracles certify the code path Serve/HttpServe run. */
+  private def engine(files: DataFrame,
+                     analyzer: String = "simple"): CompressedSearchEngine = {
+    val t = IndexTables.build(files, analyzer)
+    new CompressedSearchEngine(
+      InvertedIndex.build(Stats.postings(files, analyzer), t.nDocs, t.avgdl),
       t.nDocs, t.avgdl)
-    new CompressedSearchEngine(idx, t.nDocs, t.avgdl)
   }
 
-  private def ceng(s: SparkSession, dir: String): CompressedSearchEngine =
-    cengFrom(tables(s, dir))
+  /** `raw` through the serving lifecycle over `dir`'s corpus, top-10. */
+  private def searchCorpus(s: SparkSession, dir: String, raw: String): DataFrame = {
+    val files = Corpus.files(s, dir)
+    engine(files).search(raw, files)
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
-    eng(spark, "/root/testdata/sf0.001").searchDisplay("merge sort window")
+  def entry(spark: SparkSession): DataFrame = {
+    val files = Corpus.files(spark, "/root/testdata/sf0.001")
+    Serve.hydrate(engine(files).search("merge sort window", files), files)
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -56,66 +63,76 @@ object SparkEntry {
     }),
     // E5 conjunctive candidates
     "q_candidates_all" -> ((s, dir) =>
-      eng(s, dir).candidatesAll(Seq("hash", "join")).orderBy("doc_id")),
+      engine(Corpus.files(s, dir)).candidatesAll(Seq("hash", "join"))
+        .orderBy("doc_id")),
     // E4 disjunctive candidates
     "q_candidates_any" -> ((s, dir) =>
-      eng(s, dir).candidatesAny(Seq("dup", "vector")).orderBy("doc_id")),
+      engine(Corpus.files(s, dir)).decoded(Some(Seq("dup", "vector")))
+        .select("doc_id").distinct().orderBy("doc_id")),
     // §3.1 flagship: multi-term BM25 top-10
     "q_bm25_tokens" -> ((s, dir) =>
-      eng(s, dir).search("merge sort window")),
+      searchCorpus(s, dir, "merge sort window")),
     // rare+common term mix
     "q_bm25_rare" -> ((s, dir) =>
-      eng(s, dir).search("dup stream")),
+      searchCorpus(s, dir, "dup stream")),
     // P4 phrase semantics (conjunctive candidates + raw substring filter)
     "q_phrase" -> ((s, dir) =>
-      eng(s, dir).search("\"hash join\"")),
+      searchCorpus(s, dir, "\"hash join\"")),
     // E1 AND over phrase-filtered sets
     "q_bool_and" -> ((s, dir) =>
-      eng(s, dir).search("\"merge sort\" AND \"table scan\"")),
+      searchCorpus(s, dir, "\"merge sort\" AND \"table scan\"")),
     // E2 OR
     "q_bool_or" -> ((s, dir) =>
-      eng(s, dir).search("\"batch batch\" OR \"window agg\"")),
+      searchCorpus(s, dir, "\"batch batch\" OR \"window agg\"")),
     // E3 NOT
     "q_bool_not" -> ((s, dir) =>
-      eng(s, dir).search("\"sort merge\" NOT \"hash join\"")),
+      searchCorpus(s, dir, "\"sort merge\" NOT \"hash join\"")),
     // A2 + §2.11: delta-gap varbyte posting codec — encode∘decode = id
     "q_index_roundtrip" -> ((s, dir) =>
-      ceng(s, dir).decoded(None).orderBy("term", "doc_id")),
+      engine(Corpus.files(s, dir)).decoded(None).orderBy("term", "doc_id")),
     // block-max skip metadata (128-posting blocks)
     "q_index_stats" -> ((s, dir) =>
-      ceng(s, dir).index.groupBy("term")
+      engine(Corpus.files(s, dir)).index.groupBy("term")
         .agg(first(col("df")).as("df"),
           sum(size(col("blocks"))).cast("long").as("nblocks"))
         .orderBy("term")),
-    // BM25 over the compressed index — must equal the uncompressed path
+    // exhaustive BM25 top-k straight from decoded postings (no query parse)
     "q_bm25_compressed" -> ((s, dir) =>
-      ceng(s, dir).searchTopK(Seq("merge", "sort", "window"))),
+      engine(Corpus.files(s, dir)).searchTopK(Seq("merge", "sort", "window"))),
     // MaxScore/block-range pruned top-k — rank-identical to exhaustive
     "q_bm25_pruned" -> ((s, dir) =>
-      ceng(s, dir).searchPruned(Seq("merge", "sort", "window"), 10, force = true)),
+      engine(Corpus.files(s, dir))
+        .searchPruned(Seq("merge", "sort", "window"), 10, force = true)),
     // Batch multi-query search (offline query-replay / relevance-eval):
     // 3 queries scored in ONE index scan, per-qid top-k from one window
     "q_batch_search" -> ((s, dir) =>
-      ceng(s, dir).searchMany(Seq(
+      engine(Corpus.files(s, dir)).searchMany(Seq(
         0L -> Seq("merge", "sort", "window"),
         1L -> Seq("dup", "stream"),
         2L -> Seq("hash", "join")))),
-    // positional payload roundtrip: decode(encode(positions)) == posexplode
-    "q_positions" -> ((s, dir) =>
-      ceng(s, dir).occurrencesAll()
+    // positional payload roundtrip: decode(encode(positions)) == posexplode,
+    // through the same posting-level decoder the adjacency pre-filter runs
+    "q_positions" -> ((s, dir) => {
+      graft.functions.GraftFunctions.register(s)
+      engine(Corpus.files(s, dir)).index
+        .select(col("term"), explode(graft.functions.GraftFunctions
+          .decodeDocPositions(col("postings"), col("positions"))).as("e"))
+        .select(col("term"), col("e.doc_id").as("doc_id"),
+          explode(col("e.ps")).as("pos"))
         .select(col("term"), col("doc_id"), col("pos").cast("long").as("pos"))
-        .orderBy("term", "doc_id", "pos")),
+        .orderBy("term", "doc_id", "pos")
+    }),
     // P4 phrase over the compressed index WITH the positional adjacency
     // pre-filter forced on (the sf0.01 corpus is below the phrase gate) —
     // must hash-match the plain substring-semantics oracle
     "q_phrase_pos" -> ((s, dir) => {
-      val t = tables(s, dir)
-      cengFrom(t).search("\"hash join\"", t.files, forcePositional = true)
+      val files = Corpus.files(s, dir)
+      engine(files).search("\"hash join\"", files, forcePositional = true)
     }),
     // E1 boolean AND through the same positional phrase path
     "q_bool_and_pos" -> ((s, dir) => {
-      val t = tables(s, dir)
-      cengFrom(t).search("\"merge sort\" AND \"table scan\"", t.files,
+      val files = Corpus.files(s, dir)
+      engine(files).search("\"merge sort\" AND \"table scan\"", files,
         forcePositional = true)
     }),
     // S7 checkpointed build + resume: full bucketed pipeline with lineage
@@ -236,26 +253,25 @@ object SparkEntry {
       search.QueryLog.suggest(search.QueryLog.replay(s,
         s"/tmp/graft_querylog_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"), "s")),
     // O2: pagination — page 2 of 3-per-page over the flagship query
-    "q_paged" -> ((s, dir) =>
-      eng(s, dir).searchPage("merge sort window", page = 2, limit = 3)),
+    "q_paged" -> ((s, dir) => {
+      val files = Corpus.files(s, dir)
+      engine(files).searchPage("merge sort window", files, page = 2, limit = 3)
+    }),
     // F13: paragraph snippets for the flagship query's result page
     // (first matching newline block, 100-word truncation, whole-doc fallback)
-    "q_snippets" -> ((s, dir) => {
-      val e = eng(s, dir)
-      search.Extras.withSnippets(e.search("merge sort window"),
-        e.t.files, "merge sort window")
-    }),
+    "q_snippets" -> ((s, dir) =>
+      search.Extras.withSnippets(searchCorpus(s, dir, "merge sort window"),
+        Corpus.files(s, dir), "merge sort window")),
     // F13 boolean path: paragraph must satisfy the AND of both phrases
     "q_snippets_bool" -> ((s, dir) => {
-      val e = eng(s, dir)
       val q = "\"merge sort\" AND \"table scan\""
-      search.Extras.withSnippets(e.search(q), e.t.files, q)
+      search.Extras.withSnippets(searchCorpus(s, dir, q), Corpus.files(s, dir), q)
     }),
     // F12: phrase occurrence counts over phrase candidates
     "q_phrase_count" -> ((s, dir) => {
-      val e = eng(s, dir)
-      search.Extras.phraseCounts(e.phraseCandidates("hash join"),
-        e.t.files, "hash join")
+      val files = Corpus.files(s, dir)
+      search.Extras.phraseCounts(
+        engine(files).phraseCandidates("hash join", files), files, "hash join")
     }),
     // code-aware analyzer (identifier/camelCase/snake subtokens + Porter
     // stem): DuckDB-oracled via a generated pure-SQL Porter stemmer
@@ -264,9 +280,10 @@ object SparkEntry {
     "q_tf_code" -> ((s, dir) =>
       IndexTables.build(Corpus.files(s, dir), "code").tf
         .orderBy("doc_id", "term")),
-    "q_bm25_code" -> ((s, dir) =>
-      new SearchEngine(IndexTables.build(Corpus.files(s, dir), "code"), "code")
-        .search("merge sort window"))
+    "q_bm25_code" -> ((s, dir) => {
+      val files = Corpus.files(s, dir)
+      engine(files, "code").search("merge sort window", files, analyzer = "code")
+    })
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

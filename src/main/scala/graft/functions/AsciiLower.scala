@@ -189,7 +189,6 @@ object GraftFunctions {
   val AsciiContainsName = "graft_ascii_contains"
   val CompactTokensName = "graft_compact_tokens"
   val DecodePostingsName = "graft_decode_postings"
-  val DecodePositionsName = "graft_decode_positions"
   val DecodeDocPositionsName = "graft_decode_doc_positions"
   val DecodeBlocksName = "graft_decode_blocks"
   val CosineSimName = "graft_cosine"
@@ -221,8 +220,6 @@ object GraftFunctions {
       CompactTokensName, exprs => CompactTokens(exprs.head), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       DecodePostingsName, exprs => DecodePostings(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodePositionsName, exprs => DecodePositions(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       DecodeDocPositionsName,
       exprs => DecodeDocPositions(exprs(0), exprs(1)), "built-in")
@@ -272,11 +269,6 @@ object GraftFunctions {
 
   /** `graft_decode_postings(c)`: var-byte chunk → array<struct<doc_id,tf,len>>. */
   def decodePostings(c: Column): Column = call_function(DecodePostingsName, c)
-
-  /** `graft_decode_positions(postings, positions)`: occurrence rows
-    * array<struct<doc_id, pos>>. */
-  def decodePositions(postings: Column, positions: Column): Column =
-    call_function(DecodePositionsName, postings, positions)
 
   /** `graft_decode_doc_positions(postings, positions)`: posting-granular
     * rows array<struct<doc_id, ps: array<int>>> (see DecodeDocPositions). */

@@ -6,16 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Posting-granular decode of a chunk's positions: one entry per POSTING —
-  * `array<struct<doc_id: bigint, ps: array<int>>>` — instead of one entry
-  * per occurrence ([[DecodePositions]]).
+/** Native codegen'd decode of a posting chunk PLUS its parallel position
+  * stream into one entry per POSTING — `array<struct<doc_id: bigint,
+  * ps: array<int>>>` — the only positions decoder.
   *
-  * Feeds the phrase adjacency pre-filter's candidate semi join at posting
-  * granularity: the join probes (and the union rows that flow into it) drop
-  * by the per-document term frequency factor — on a code corpus tf ≥ 8 for
-  * every present term — and positions explode to occurrence rows only AFTER
-  * the candidate narrowing, where the (doc_id, start) aggregation needs
-  * them. Wire format identical to [[DecodePositions]].
+  * Feeds the phrase adjacency pre-filter
+  * (CompressedSearchEngine.adjacencyCandidates): its candidate semi join
+  * probes one row per posting, and the doc-grouped sorted intersection
+  * consumes the position arrays directly, so positions never explode to
+  * occurrence rows on the query path. The `q_positions` roundtrip explodes
+  * `ps` to get occurrence rows. The BM25 scoring path uses
+  * [[DecodePostings]] and never touches the positions column.
+  *
+  * Wire format of `positions` (PostingCodec.encodeWithPos): per posting, in
+  * chunk posting order: vint(count) then count delta-gap varints (prev = -1).
+  * doc ids come from the postings stream (left child).
   */
 case class DecodeDocPositions(left: Expression, right: Expression)
     extends BinaryExpression {

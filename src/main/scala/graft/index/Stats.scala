@@ -117,12 +117,6 @@ object Stats {
     tokens(files, analyzer).groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"))
 
-  /** docstats straight from the token stream (no tf intermediate) — the
-    * build-path variant: a narrow (doc_id) count with map-side partial
-    * aggregation, so its exchange is tiny. */
-  def docstatsFromTokens(tokens: DataFrame): DataFrame =
-    tokens.groupBy("doc_id").agg(count(lit(1)).as("len"))
-
   /** docstats(doc_id, len) — document length in tokens (BM25 length norm). */
   def docstats(tf: DataFrame): DataFrame =
     tf.groupBy("doc_id").agg(sum("tf").as("len"))
@@ -143,8 +137,10 @@ object Stats {
 }
 
 /** All derived tables for one corpus, built once and reused by the query
-  * entries. Small-scale convenience wrapper; the scale path persists these
-  * as bucketed tables (see graft.index.IndexBuilder). */
+  * entries (`q_tf`, `q_docstats`, `q_termstats`, `q_corpus_stats`) and for
+  * the search engine's `nDocs`/`avgdl`. Small-scale convenience wrapper; the
+  * scale path builds the compressed index instead
+  * (graft.checkpoint.CheckpointedBuild, graft.index.InvertedIndex). */
 final case class IndexTables(
     files: DataFrame,
     tf: DataFrame,

@@ -50,13 +50,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
   /** Decoded view of the index: (term, df, doc_id, tf, len) — also the
     * encode∘decode = id roundtrip surface checked against the tf oracle. */
-  def decoded(terms: Option[Seq[String]] = None): DataFrame = {
-    val base = terms.fold(index)(ts => rowsFor(ts))
-    base.select(col("term"), col("df"),
-        explode(decodeCol(col("postings"))).as("p"))
-      .select(col("term"), col("df"), col("p.doc_id").as("doc_id"),
-        col("p.tf").as("tf"), col("p.len").as("len"))
-  }
+  def decoded(terms: Option[Seq[String]] = None): DataFrame =
+    decodedFrom(terms.fold(index)(rowsFor))
 
   private def scoreDecoded(decodedRows: DataFrame, k: Int): DataFrame =
     decodedRows
@@ -116,7 +111,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     }.otherwise(lit(0L))
 
   /** E5 conjunctive candidates from the index alone (docs containing ALL
-    * terms), mirroring SearchEngine.candidatesAll over decoded postings.
+    * terms) — checked against the DuckDB oracle (`q_candidates_all`) and,
+    * through the phrase and boolean paths, against `LocalOracle` in specs.
     * ONE single-phase aggregation (bit_or of per-term bits + popcount — the
     * same trick adjacencyCandidates uses) instead of countDistinct's
     * two-exchange plan: halves the exchanges of every phrase/bool candidate
@@ -132,19 +128,6 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     else decoded(Some(terms)).groupBy("doc_id")
       .agg(bit_or(termMaskCol(terms.distinct)).as("tm"))
       .filter(bit_count(col("tm")) === terms.length).select("doc_id")
-
-  /** Decoded occurrence view (term, doc_id, pos) over the whole index (or a
-    * term subset) — the positions encode∘decode = id roundtrip surface. */
-  def occurrencesAll(terms: Option[Seq[String]] = None): DataFrame =
-    occurrences(terms.fold(index)(ts => rowsFor(ts)))
-
-  /** Occurrence rows (term, doc_id, pos) decoded from index chunk rows —
-    * postings + the parallel positions column, fused decode (codegen'd). */
-  private def occurrences(chunkRows: DataFrame): DataFrame =
-    chunkRows.select(col("term"),
-        explode(graft.functions.GraftFunctions.decodePositions(
-          col("postings"), col("positions"))).as("o"))
-      .select(col("term"), col("o.doc_id").as("doc_id"), col("o.pos").as("pos"))
 
   /** Positional adjacency pre-filter for the phrase path — a SOUND superset
     * of the raw-substring match (never drops a true match), used only to
@@ -162,17 +145,17 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * keeps the plain candidate set (both plans are exact — this is a
     * cost-based choice between them).
     *
-    * Evaluation is one union of the slots' occurrence rows, semi-joined down
-    * to the conjunctive candidate set `cand0` BEFORE the aggregation (for
-    * common code tokens the corpus-wide occurrence stream dwarfs the
-    * candidates — round 3 measured the unjoined plan superlinear, 16→106→256 s
-    * across a 1.2/4.8/9.6M ladder, pure shuffle spill of occurrences the
-    * candidates never needed), normalized to the would-be match start
-    * (pos − slot), then the same count-distinct reduction as candidatesAll on
-    * (doc_id, start): shuffle volume is candidates × query-term occurrences,
-    * never candidate content and never corpus-wide occurrences. Since every
-    * surviving doc is already in `cand0`, the result needs no further
-    * intersection with it. */
+    * Evaluation is one union of the slots' POSTING rows (doc_id, positions,
+    * slot), semi-joined down to the conjunctive candidate set `cand0` BEFORE
+    * any shuffle (for common code tokens the corpus-wide posting stream
+    * dwarfs the candidates — round 3 measured the unjoined plan superlinear,
+    * 16→106→256 s across a 1.2/4.8/9.6M ladder, pure shuffle spill the
+    * candidates never needed), then one doc_id shuffle feeding a streaming
+    * per-document n-way sorted intersection of slot-normalized positions
+    * ([[CompressedSearchEngine.adjacentDocs]]): shuffle volume is candidate
+    * postings of the query/slot terms, never candidate content and never
+    * corpus-wide postings. Since every surviving doc is already in `cand0`,
+    * the result needs no further intersection with it. */
   def adjacencyCandidates(phraseToks: Seq[String],
                           cand0: DataFrame): Option[DataFrame] = {
     val n = phraseToks.length
@@ -192,9 +175,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     // POSTING-granular slot streams (doc_id, ps, slot): the candidate semi
     // join below probes one row per posting instead of one per occurrence —
     // on a high-tf code corpus (content ×8 ⇒ tf ≥ 8 for every present
-    // term) that is ≥8× fewer union rows and join probes; positions explode
-    // to occurrence rows only AFTER the narrowing, where the (doc_id,
-    // start) aggregation needs them.
+    // term) that is ≥8× fewer union rows and join probes; the doc-grouped
+    // check below consumes the position arrays without exploding them.
     val slotDfs = slots.zipWithIndex.map { case (ts, i) =>
       rowsFor(ts).select(
           explode(graft.functions.GraftFunctions.decodeDocPositions(
@@ -211,9 +193,9 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     // aggregation: exploding to occurrence rows and bit_or-masking starts
     // built a hash aggregate over ~one key per OCCURRENCE (measured at the
     // 480k bench corpus: 11.8M (doc,start) keys, 2.9 s of the 3.8 s
-    // adjacency cost — noop-isolated, tools/PosProfile). Here the
-    // POSTING-level rows (doc_id, positions array, slot) shuffle once on
-    // doc_id — packed primitive arrays, ~tf× fewer rows and bytes — and a
+    // adjacency cost, noop-isolated). Here the POSTING-level rows (doc_id,
+    // positions array, slot) shuffle once on doc_id — packed primitive
+    // arrays, ~tf× fewer rows and bytes — and a
     // streaming per-doc n-way sorted intersection over slot-normalized
     // positions answers "∃ start: every slot occupied" with early exit and
     // zero per-occurrence keys. Explicit partition count (REPARTITION_BY_NUM,
@@ -286,7 +268,9 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   }
 
   /** Full query lifecycle over the persisted index + corpus (serving path):
-    * parse → candidates → BM25 → top-k, mirroring SearchEngine.search.
+    * parse → candidates → BM25 → top-k. Certified against the DuckDB
+    * oracles (`q_bm25_*`, `q_phrase*`, `q_bool_*`, `q_paged`, `q_snippets*`)
+    * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec).
     * `forcePositional` forces the adjacency pre-filter below the phrase
     * gate (tests/bench exercise both exact plans). */
   def search(raw: String, files: DataFrame, k: Int = 10,
@@ -606,15 +590,13 @@ object CompressedSearchEngine {
     * against its fixed 3-round-trip cost; extrapolating the trend the
     * crossover sits around 5·10^7–10^8 docs, so the default gate is 64M
     * (the round-2 10M default was an unmeasured extrapolation). */
-  val PruneGateDocs: Long =
-    sys.env.get("SPARK_GRAFT_PRUNE_GATE").map(_.toLong).getOrElse(64_000_000L)
+  val PruneGateDocs: Long = 64_000_000L
 
   /** Dictionary-expansion cap for the phrase adjacency pre-filter: if a
     * boundary token expands to more terms than this (e.g. a one-letter
     * token), the pre-filter is skipped and the plain candidate-set plan runs
     * (both plans are exact). */
-  val MaxExpandTerms: Int =
-    sys.env.get("SPARK_GRAFT_MAX_EXPAND").map(_.toInt).getOrElse(1000)
+  val MaxExpandTerms: Int = 1000
 
   /** Corpus size above which the phrase path switches from the
     * substring-scan-over-candidates plan to the positional adjacency
@@ -631,10 +613,9 @@ object CompressedSearchEngine {
     * conjunctive candidates hold most of their query terms' occurrences,
     * so the gap (4.4–14.7×) is structural, not a plan bug. No crossover on
     * this corpus shape: the default stays the substring plan at every size
-    * (gate = ∞). The positional plan remains available (forcePositional /
-    * this env knob) for corpora where content is large relative to
+    * (gate = ∞). The positional plan remains available (`forcePositional`)
+    * for corpora where content is large relative to
     * query-term postings — long documents, rare phrase tokens — which the
     * replicated code corpus cannot represent. See GATES.md. */
-  val PhraseGateDocs: Long =
-    sys.env.get("SPARK_GRAFT_PHRASE_GATE").map(_.toLong).getOrElse(Long.MaxValue)
+  val PhraseGateDocs: Long = Long.MaxValue
 }

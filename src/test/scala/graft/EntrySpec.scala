@@ -26,15 +26,16 @@ class EntrySpec extends SparkSpec {
   test("search results rank-identical to in-memory oracle on sf0.001") {
     val docs = Corpus.files(spark, dir).select("doc_id", "content").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val t = graft.index.IndexTables.build(Corpus.files(spark, dir))
-    val eng = new graft.search.SearchEngine(t)
-    for (q <- Seq("merge sort window", "dup stream", "\"hash join\"",
-        "\"merge sort\" AND \"table scan\"", "\"batch batch\" OR \"window agg\"",
-        "\"sort merge\" NOT \"hash join\"")) {
-      val got = eng.search(q, 10).collect()
+    // the SparkEntry queries themselves, i.e. the serving search path
+    for ((name, q) <- Seq("q_bm25_tokens" -> "merge sort window",
+        "q_bm25_rare" -> "dup stream", "q_phrase" -> "\"hash join\"",
+        "q_bool_and" -> "\"merge sort\" AND \"table scan\"",
+        "q_bool_or" -> "\"batch batch\" OR \"window agg\"",
+        "q_bool_not" -> "\"sort merge\" NOT \"hash join\"")) {
+      val got = SparkEntry.queries(name)(spark, dir).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = LocalOracle.search(docs, "simple", q, 10)
-      assert(got === want, s"query [$q]")
+      assert(got === want, s"$name [$q]")
     }
   }
 }

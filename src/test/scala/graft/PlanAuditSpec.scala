@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
 import graft.index.{IndexTables, InvertedIndex}
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.search.CompressedSearchEngine
 
 /** Asserts the physical-plan properties the engine's 100 TB posture depends
   * on (the same plans PLANS.md documents): pushdown reaches the parquet
-  * scan, the query side broadcasts the small side, top-k plans as
+  * scan, candidate sets are semi-join probes, top-k plans as
   * TakeOrderedAndProject (never a global sort), and the index build has
   * exactly the intended exchanges. */
 class PlanAuditSpec extends SparkSpec {
@@ -19,7 +19,16 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
 
   private lazy val t = IndexTables.build(Corpus.files(spark, sf))
-  private lazy val eng = new SearchEngine(t)
+
+  /** The serving engine over sf's index, written to and re-read from
+    * `idxPath` so plans show the real parquet index scan. */
+  private def engineAt(idxPath: String): CompressedSearchEngine = {
+    InvertedIndex.write(
+      InvertedIndex.build(graft.index.Stats.postings(Corpus.files(spark, sf)),
+        t.nDocs, t.avgdl), idxPath)
+    new CompressedSearchEngine(
+      InvertedIndex.load(spark, idxPath), t.nDocs, t.avgdl)
+  }
 
   test("predicate and projection reach the parquet scan") {
     val p = plan(Corpus.documents(spark, sf)
@@ -28,23 +37,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("ReadSchema: struct<doc_id:bigint,lang:string"), p)
   }
 
-  test("token query: broadcast join + TakeOrderedAndProject top-k") {
-    val p = plan(eng.search("merge sort window"))
-    assert(p.contains("TakeOrderedAndProject"), p)
-    assert(p.contains("BroadcastHashJoin"), p)
-    assert(!p.contains("GlobalSort"), p)
-  }
-
   test("compressed index scan pushes the query-term IN filter") {
-    val idxPath = "/tmp/graft_planspec_index"
-    InvertedIndex.write(
-      InvertedIndex.build(graft.index.Stats.postings(Corpus.files(spark, sf)),
-        t.nDocs, t.avgdl), idxPath)
-    val ce = new CompressedSearchEngine(
-      InvertedIndex.load(spark, idxPath), t.nDocs, t.avgdl)
+    val ce = engineAt("/tmp/graft_planspec_index")
     val p = plan(ce.searchTopK(Seq("merge", "sort")))
     assert(p.contains("PushedFilters: [In(term, [merge,sort])]"), p)
     assert(p.contains("TakeOrderedAndProject"), p)
+    assert(!p.contains("GlobalSort"), p)
   }
 
   test("segment build: one (term, salt) repartition, single fused tokenize, " +
@@ -104,11 +102,6 @@ class PlanAuditSpec extends SparkSpec {
     assert(evals == 1, s"expected 1 simhashval eval, got $evals in:\n$p")
   }
 
-  test("boolean NOT candidates: anti join, no distinct aggregates on the sets") {
-    val p = plan(eng.search("\"sort merge\" NOT \"hash join\""))
-    assert(p.contains("LeftAnti"), p)
-  }
-
   test("near-dup pairs plan is an LSH-bucket equi-join, never a cartesian") {
     val p = plan(ops.Similarity.nearDupPairs(Corpus.embeddings(spark, sf)))
     assert(!p.contains("CartesianProduct"), p)
@@ -127,17 +120,15 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("candidate membership is a semi join, not a materialized set") {
-    val p = plan(eng.search("\"hash join\" AND \"merge sort\""))
+    val files = Corpus.files(spark, sf)
+    val p = plan(engineAt("/tmp/graft_planspec_index").search(
+      "\"hash join\" AND \"merge sort\"", files))
+    // the corpus scan is semi-joined on s1 ∩ s2 before the substring verify
     assert(p.contains("LeftSemi"), p)
   }
 
   test("compressed boolean query verifies both phrases in ONE corpus scan") {
-    val idxPath = "/tmp/graft_planspec_index_bool"
-    InvertedIndex.write(
-      InvertedIndex.build(graft.index.Stats.postings(Corpus.files(spark, sf)),
-        t.nDocs, t.avgdl), idxPath)
-    val ce = new CompressedSearchEngine(
-      InvertedIndex.load(spark, idxPath), t.nDocs, t.avgdl)
+    val ce = engineAt("/tmp/graft_planspec_index_bool")
     val files = Corpus.files(spark, sf)
     // phrases chosen to co-occur at sf0.001 (AND/NOT nonempty) — an empty
     // intermediate would let AQE empty-propagate the corpus scan away

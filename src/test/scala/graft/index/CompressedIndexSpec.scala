@@ -1,11 +1,12 @@
 package graft.index
 
 import graft.SparkSpec
-import graft.search.{CompressedSearchEngine, SearchEngine}
+import graft.oracle.LocalOracle
+import graft.search.CompressedSearchEngine
 import org.apache.spark.sql.functions._
 
-/** Compressed index == uncompressed stats tables == pruned path, on seeded
-  * random corpora (FIXTURES.md §5 properties). */
+/** Compressed index == uncompressed stats tables == in-memory oracle ==
+  * pruned path, on seeded random corpora (FIXTURES.md §5 properties). */
 class CompressedIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -68,12 +69,12 @@ class CompressedIndexSpec extends SparkSpec {
     assert(dup === dedup)
   }
 
-  test("compressed exhaustive == uncompressed engine scores") {
-    val (t, ce) = build(13, 150, 8)
-    val se = new SearchEngine(t, "simple")
+  test("compressed exhaustive == in-memory oracle scores") {
+    val (_, ce) = build(13, 150, 8)
     for (terms <- Seq(Seq("merge", "sort"), Seq("dup"), Seq("rareterm", "hash", "join"))) {
       val got = ce.searchTopK(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val want = se.scoreTopK(terms, None, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = LocalOracle.search(corpus(13, 150), "simple",
+        terms.mkString(" "), 10)
       assert(got === want, s"terms $terms")
     }
   }

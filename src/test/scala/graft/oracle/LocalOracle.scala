@@ -15,25 +15,26 @@ object LocalOracle {
   private def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  def search(docs: Seq[(Long, String)], analyzer: String, raw: String,
-             k: Int = 10, docLang: String = ""): Seq[(Long, Double)] = {
+  /** Term statistics of one corpus and the reference's candidate algebra. */
+  private final class Corpus(docs: Seq[(Long, String)], analyzer: String,
+                             docLang: String) {
     // documents tokenize with their language's keyword stop set (per-lang
     // dispatch); queries have no language and keep keywords
-    def docTokens(c: String): Seq[String] = analyzer match {
+    private def docTokens(c: String): Seq[String] = analyzer match {
       case "code" => Analyzer.codeTokens(c, docLang)
       case _      => Analyzer.queryTokens(analyzer, c)
     }
-    val toks: Map[Long, Seq[String]] =
-      docs.map { case (id, c) => id -> docTokens(c) }.toMap
-    val tf: Map[Long, Map[String, Int]] =
-      toks.map { case (id, ts) => id -> ts.groupBy(identity).map { case (t, g) => t -> g.size } }
-    val df: Map[String, Int] =
+    private val tf: Map[Long, Map[String, Int]] =
+      docs.map { case (id, c) =>
+        id -> docTokens(c).groupBy(identity).map { case (t, g) => t -> g.size }
+      }.toMap
+    private val df: Map[String, Int] =
       tf.values.flatMap(_.keys).toSeq.groupBy(identity).map { case (t, g) => t -> g.size }
-    val n = docs.size.toLong
-    val lens = tf.collect { case (id, m) if m.nonEmpty => id -> m.values.sum }
-    val avgdl = if (lens.isEmpty) 0.0 else lens.values.sum.toDouble / lens.size
+    private val n = docs.size.toLong
+    private val lens = tf.collect { case (id, m) if m.nonEmpty => id -> m.values.sum }
+    private val avgdl = if (lens.isEmpty) 0.0 else lens.values.sum.toDouble / lens.size
 
-    def qtoks(s: String) = Analyzer.queryTokens(analyzer, s).distinct
+    def qtoks(s: String): Seq[String] = Analyzer.queryTokens(analyzer, s).distinct
 
     def candAll(terms: Seq[String]): Set[Long] =
       if (terms.isEmpty) Set.empty
@@ -45,7 +46,7 @@ object LocalOracle {
         .filter(id => byId(id).toLowerCase.contains(phrase.toLowerCase))
     }
 
-    def score(terms: Seq[String], cand: Option[Set[Long]]): Seq[(Long, Double)] = {
+    def score(terms: Seq[String], cand: Option[Set[Long]], k: Int): Seq[(Long, Double)] = {
       val hits = docs.collect {
         case (id, _) if terms.exists(t => tf(id).contains(t)) &&
           cand.forall(_.contains(id)) => id
@@ -61,19 +62,29 @@ object LocalOracle {
         id -> round4(s)
       }.sortBy { case (id, s) => (-s, id) }.take(k)
     }
+  }
 
+  /** P4 phrase candidates: docs holding every phrase token whose lowered
+    * content contains the lowered phrase (`dbManager.java:324-341`). */
+  def phraseCandidates(docs: Seq[(Long, String)], analyzer: String,
+                       phrase: String, docLang: String = ""): Set[Long] =
+    new Corpus(docs, analyzer, docLang).phraseCand(phrase)
+
+  def search(docs: Seq[(Long, String)], analyzer: String, raw: String,
+             k: Int = 10, docLang: String = ""): Seq[(Long, Double)] = {
+    val c = new Corpus(docs, analyzer, docLang)
     QueryParser.parse(raw) match {
-      case Tokens(text) => score(qtoks(text), None)
-      case Phrase(p)    => score(qtoks(p), Some(phraseCand(p)))
+      case Tokens(text) => c.score(c.qtoks(text), None, k)
+      case Phrase(p)    => c.score(c.qtoks(p), Some(c.phraseCand(p)), k)
       case Bool(op, p1, p2) =>
-        val c1 = phraseCand(p1); val c2 = phraseCand(p2)
+        val c1 = c.phraseCand(p1); val c2 = c.phraseCand(p2)
         val cand = op match {
           case "and" => c1 intersect c2
           case "or"  => c1 union c2
           case "not" => c1 diff c2
         }
-        val terms = if (op == "not") qtoks(p1) else (qtoks(p1) ++ qtoks(p2)).distinct
-        score(terms, Some(cand))
+        val terms = if (op == "not") c.qtoks(p1) else (c.qtoks(p1) ++ c.qtoks(p2)).distinct
+        c.score(terms, Some(cand), k)
     }
   }
 }

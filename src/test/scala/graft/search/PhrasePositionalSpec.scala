@@ -2,10 +2,12 @@ package graft.search
 
 import graft.SparkSpec
 import graft.index.{IndexTables, InvertedIndex, Stats}
+import graft.oracle.LocalOracle
+import org.apache.spark.sql.functions._
 
 /** The positional adjacency pre-filter must be invisible: phrase results
   * through the compressed engine (adjacency + substring verify) must equal
-  * the substring-only baseline (uncompressed SearchEngine) on corpora built
+  * the substring-only baseline (the in-memory LocalOracle) on corpora built
   * to break naive token-adjacency:
   *
   *  - a match can start MID-TOKEN ("rehash join" contains "hash join" while
@@ -34,14 +36,13 @@ class PhrasePositionalSpec extends SparkSpec {
       t.nDocs, t.avgdl, saltBuckets = 4)
     new CompressedSearchEngine(idx, t.nDocs, t.avgdl)
   }
-  private lazy val se = new SearchEngine(t)
 
   test("phrase candidates: positional path == substring baseline on " +
       "boundary-adversarial docs") {
     val got = ce.phraseCandidates("hash join", files, forcePositional = true)
       .collect().map(_.getLong(0)).sorted.toSeq
-    val want = se.phraseCandidates("hash join")
-      .collect().map(_.getLong(0)).sorted.toSeq
+    val want = LocalOracle.phraseCandidates(docs, "simple", "hash join")
+      .toSeq.sorted
     assert(got === want)
     assert(got === Seq(0L, 1L, 3L))
   }
@@ -61,8 +62,7 @@ class PhrasePositionalSpec extends SparkSpec {
         "\"hash join\" OR \"nothing to\"", "\"hash join\" NOT \"rehash\"")) {
       val got = ce.search(q, files, 10, forcePositional = true).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val want = se.search(q, 10).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = LocalOracle.search(docs, "simple", q, 10)
       assert(got === want, s"query [$q]")
     }
   }
@@ -75,15 +75,18 @@ class PhrasePositionalSpec extends SparkSpec {
         "\"hash join\" NOT \"hash join\"")) {
       val got = ce.search(q, files, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val want = se.search(q, 10).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val want = LocalOracle.search(docs, "simple", q, 10)
       assert(got === want, s"query [$q]")
     }
   }
 
   test("positions roundtrip: decode(encode) == posexplode of the analyzer") {
-    val got = ce.occurrencesAll()
-      .select("term", "doc_id", "pos")
+    graft.functions.GraftFunctions.register(spark)
+    val got = ce.index
+      .select(col("term"), explode(graft.functions.GraftFunctions
+        .decodeDocPositions(col("postings"), col("positions"))).as("e"))
+      .select(col("term"), col("e.doc_id").as("doc_id"),
+        explode(col("e.ps")).as("pos"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSeq.sorted
     val want = Stats.tokensPos(files)
       .select("term", "doc_id", "pos")

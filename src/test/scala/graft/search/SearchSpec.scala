@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.index.IndexTables
+import graft.index.{IndexTables, InvertedIndex, Stats}
 import graft.oracle.LocalOracle
 import org.apache.spark.sql.functions._
 
@@ -16,8 +16,9 @@ class QueryParserSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-/** Rank-identity of the Spark engine vs the in-memory oracle on seeded
-  * random corpora, across analyzers and all query forms (SURVEY.md §5). */
+/** Rank-identity of the serving engine (CompressedSearchEngine.search) vs
+  * the in-memory oracle on seeded random corpora, across analyzers and all
+  * query forms (SURVEY.md §5). */
 class SearchSpec extends SparkSpec {
   import spark.implicits._
 
@@ -46,21 +47,27 @@ class SearchSpec extends SparkSpec {
     "\"zzz absent phrase\" OR \"merge\""
   )
 
-  private def enginFor(docs: Seq[(Long, String)], analyzer: String): SearchEngine = {
+  /** The serving engine over `docs`, as a raw query → top-10 function. */
+  private def engineFor(docs: Seq[(Long, String)],
+                        analyzer: String): String => Seq[(Long, Double)] = {
     val files = docs.toDF("doc_id", "content")
       .withColumn("repo", lit("r")).withColumn("path", lit("p"))
       .withColumn("commit", lit("c")).withColumn("lang", lit("scala"))
       .withColumn("sha", sha2(col("content"), 256))
-    new SearchEngine(IndexTables.build(files, analyzer), analyzer)
+    val t = IndexTables.build(files, analyzer)
+    val eng = new CompressedSearchEngine(
+      InvertedIndex.build(Stats.postings(files, analyzer), t.nDocs, t.avgdl),
+      t.nDocs, t.avgdl)
+    raw => eng.search(raw, files, 10, analyzer).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
   for (analyzer <- Seq("simple", "code"); seed <- Seq(1, 2)) {
     test(s"engine == oracle ($analyzer, seed=$seed)") {
       val docs = randomCorpus(seed, 40)
-      val eng = enginFor(docs, analyzer)
+      val search = engineFor(docs, analyzer)
       for (q <- queryForms) {
-        val got = eng.search(q, 10).collect()
-          .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        val got = search(q)
         val want = LocalOracle.search(docs, analyzer, q, 10, docLang = "scala")
         assert(got === want, s"query [$q] analyzer=$analyzer seed=$seed")
       }
