@@ -1,253 +1,33 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.checkpoint.CheckpointedBuild
 
-/** Accumulates per-stage executor CPU time and per-task durations so the
-  * timed build can report (a) CPU utilization — the window-contamination
-  * detector: host co-tenant theft deschedules threads, so wall grows while
-  * JVM CPU counters stall and utilization collapses (a clean 4-core window
-  * measures ≈0.95) — and (b) task skew (max/median task duration over
-  * stages with ≥ 8 tasks, SURVEY §7.4-5's salted-build promise). */
-private final class BuildMetricsListener extends SparkListener {
-  import scala.collection.concurrent.TrieMap
-  import scala.collection.mutable.ArrayBuffer
-  private val stageCpu = TrieMap.empty[Int, Long] // ns
-  private val taskDur = TrieMap.empty[Int, ArrayBuffer[Long]] // ms
-  private val stageShuffleRead = TrieMap.empty[Int, Boolean]
-  def reset(): Unit = { stageCpu.clear(); taskDur.clear(); stageShuffleRead.clear() }
-  override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-    stageCpu.put(sc.stageInfo.stageId, sc.stageInfo.taskMetrics.executorCpuTime)
-  override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-    if (te.taskInfo != null && te.taskInfo.successful) {
-      taskDur.getOrElseUpdate(te.stageId, ArrayBuffer.empty)
-        .synchronized { taskDur(te.stageId) += te.taskInfo.duration }
-      if (te.taskMetrics != null &&
-          te.taskMetrics.shuffleReadMetrics.totalBytesRead > 0)
-        stageShuffleRead.put(te.stageId, true)
-    }
-  def cpuSec: Double = stageCpu.values.sum / 1e9
-  /** Max max/median task duration over significant ≥8-task REDUCE stages
-    * (stages whose tasks read shuffle data; 1.0 if none). This is the stage
-    * class SURVEY §7.4-5's "no task > 2× median" promise is about: the
-    * (term, salt) repartition exists exactly to bound reduce-side hot-term
-    * skew, so the metric measures whether the salting works. Significant =
-    * the stage carries ≥ 5% of the build's summed task time — a stage of
-    * millisecond tasks posts a meaningless 5-10× ratio when one task catches
-    * a GC pause or a cold page-cache read. */
-  def taskSkew: Double = maxRatio(skewDetail.filter(_._6))
-  /** Same over significant map/scan stages (no shuffle read). Scan-task time
-    * varies with per-split document content length (heavy-tailed corpus) —
-    * not addressable by key salting; bounded instead by many-splits-per-core
-    * wave amortization (16 MB splits ⇒ ≥8 waves per stage at the bench
-    * sizes, thousands at cluster scale). Reported for transparency. */
-  def taskSkewScan: Double = maxRatio(skewDetail.filterNot(_._6))
-  private def maxRatio(d: Seq[(Int, Int, Long, Long, Double, Boolean)]) =
-    if (d.isEmpty) 1.0 else d.map(_._5).max
-  /** (stageId, nTasks, sumMs, maxMs, max/median, readsShuffle) per
-    * significant stage, heaviest first — the evidence behind [[taskSkew]]. */
-  def skewDetail: Seq[(Int, Int, Long, Long, Double, Boolean)] = {
-    val all = taskDur.toSeq.map { case (id, ds) => (id, ds.toSeq) }
-    val total = all.iterator.flatMap(_._2).map(_.toDouble).sum
-    all.collect {
-      // Max-task floor (1 s): a stage whose LONGEST task is sub-second
-      // cannot gate the build or evidence a hot key — at that granularity
-      // max/median measures committer variance and page-cache luck, not
-      // balance (observed: a byte-uniform 32-task index write posting 8×
-      // from 0.1-0.9 s tasks once the r6 persist removal pushed it over
-      // the 5% significance line). Real skew stages (multi-second
-      // stragglers) are unaffected.
-      case (id, ds) if ds.length >= 8 && ds.map(_.toDouble).sum >= 0.05 * total &&
-          ds.max >= 1000L =>
-        val s = ds.sorted
-        // Median over BUSY tasks (≥ max/10) only: a bucket's scan stage is
-        // planned over the whole corpus file list and parquet min/max
-        // pruning empties ~3/4 of its tasks in milliseconds — an all-task
-        // median then measures the pruning, not the balance (observed 64×
-        // "skew" on a stage whose busy tasks were uniform within 15%). A
-        // genuinely hot-key stage is unaffected: its straggler dwarfs a
-        // busy-task median exactly as it dwarfs the all-task one.
-        val busy = s.filter(_ >= s.last / 10)
-        val med = math.max(1L, busy(busy.length / 2))
-        (id, ds.length, ds.sum, s.last, s.last.toDouble / med,
-          stageShuffleRead.getOrElse(id, false))
-    }.sortBy(-_._3)
-  }
-}
-
-/** spark-submit entry point for the index build (north rule: "runs via
-  * spark-submit ... at N and 4N executors").
+/** spark-submit entry point for the index build: builds the checkpointed
+  * index of the `files` corpus derived from `<sfDir>/documents.parquet`
+  * and prints one JSON line with the build wall time and throughput.
   *
-  * Usage: IndexBuildJob <sfDir> <outDir> <targetFiles> <parallelism> [warmupFiles]
-  *
-  * With warmupFiles > 0, an un-timed build of that many files runs first in
-  * the same JVM (JIT warm-up) so the timed measurement is steady-state —
-  * Bench forks one JVM per parallelism level with the identical protocol.
-  * SPARK_GRAFT_DEBUG=1 prints per-stage wall/CPU/GC telemetry.
+  * Usage: IndexBuildJob <sfDir> <outDir> <parallelism>
   */
 object IndexBuildJob {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir, targetStr, parStr) = args.take(4)
-    val warmupFiles = if (args.length > 4) args(4).toLong else 0L
-    val target = targetStr.toLong
-    // parallelism spec: "N" → local[N] (threads) or "ExC" (e.g. "8x4") →
-    // local-cluster[E,C,mem]: E separate executor JVMs × C cores — the
-    // honest sandbox proxy for an E-executor cluster.
-    val (par, builder) = parStr.split("x") match {
-      case Array(e, c) =>
-        val execs = e.toInt; val cores = c.toInt
-        val memMb = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "6144").toInt
-        val b = GraftSession
-          .builder(s"graft-index-build-${execs}x$cores", execs * cores)
-          .master(s"local-cluster[$execs,$cores,$memMb]")
-          .config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
-          .config("spark.executor.memory", s"${memMb}m")
-        (execs * cores, b)
-      case _ =>
-        (parStr.toInt, GraftSession.builder(s"graft-index-build-$parStr", parStr.toInt))
-    }
+    val Array(sfDir, outDir, parStr) = args
+    val par = parStr.toInt
     // Task granularity: with shuffle.partitions == cores and 128 MB input
     // splits, every stage at N=4 runs 4-5 coarse tasks — a 5th task is a
     // whole extra wave (3 cores idle), and reduce-side term skew lands
-    // directly in the stage wall. N=1 pays neither cost (sequential), so
-    // coarse granularity is a pure tax on the LARGER level of the scaling
-    // pair. 4 partitions per core + ~16 MB splits keep the tail bounded at
-    // a quarter wave; on a real cluster this is the standard 2-4 tasks per
-    // core rule.
-    val spark = builder
+    // directly in the stage wall. 4 partitions per core + ~16 MB splits
+    // keep the tail bounded at a quarter wave (the standard 2-4 tasks per
+    // core rule).
+    val spark = GraftSession.builder(s"graft-index-build-$par", par)
       .config("spark.sql.shuffle.partitions", (par * 4).toString)
       .config("spark.sql.files.maxPartitionBytes", (16L << 20).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    if (sys.env.get("SPARK_GRAFT_DEBUG").contains("1"))
-      spark.sparkContext.addSparkListener(new SparkListener {
-        override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-          val i = sc.stageInfo
-          val m = i.taskMetrics
-          println(f"[stage ${i.stageId}%3d] ${i.name.take(60)}%-60s tasks=${i.numTasks}%4d " +
-            f"wall=${(i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L)) / 1e3}%7.2fs " +
-            f"cpu=${m.executorCpuTime / 1e9}%8.2fs run=${m.executorRunTime / 1e3}%8.2fs " +
-            f"gc=${m.jvmGCTime / 1e3}%6.2fs shW=${m.shuffleWriteMetrics.bytesWritten / 1e6}%8.1fMB")
-        }
-      })
-
-    def corpusOf(targetFiles: Long) =
-      IndexBuildJob.corpusOf(spark, sfDir, targetFiles)
-
-    val metrics = new BuildMetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    val nBuckets = sys.env.getOrElse("SPARK_GRAFT_NBUCKETS", "4").toInt
-    if (warmupFiles > 0) {
-      val (wf, _) = corpusOf(warmupFiles)
-      CheckpointedBuild.run(wf, s"${outDir}_warm", nBuckets = nBuckets, saltBuckets = 32)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"${outDir}_warm"))
-    }
-    val (files, nFiles) = corpusOf(target)
-    metrics.reset() // measure the timed build only
-    val steal0 = IndexBuildJob.stealJiffies
+    val files = corpus.Corpus.files(spark, sfDir)
     val t0 = System.nanoTime()
-    CheckpointedBuild.run(files, outDir, nBuckets = nBuckets, saltBuckets = 32)
+    val stats = CheckpointedBuild.run(files, outDir, nBuckets = 4)
     val sec = (System.nanoTime() - t0) / 1e9
-    val stealSec = (IndexBuildJob.stealJiffies - steal0) / 100.0
-    // Listener events are posted async; a fixed sleep is a race after a
-    // large build (a lagging bus would undercount cpu_sec and misreport a
-    // clean window as host theft in the forensics channel — ADVICE r4).
-    // Poll until the accumulated CPU counter is stable for a few ticks.
-    var prevCpu = -1.0
-    var stableTicks = 0
-    var waitedMs = 0
-    while (stableTicks < 3 && waitedMs < 10000) {
-      Thread.sleep(100); waitedMs += 100
-      val c = metrics.cpuSec
-      if (c == prevCpu) stableTicks += 1 else { stableTicks = 0; prevCpu = c }
-    }
-    val cpu = metrics.cpuSec
-    val util = cpu / (sec * par)
-    println(f"""{"build_sec": $sec%.3f, "files": $nFiles, "files_per_sec": ${nFiles / sec}%.1f, "parallelism": $par, "cpu_sec": $cpu%.3f, "util": $util%.4f, "task_skew": ${metrics.taskSkew}%.3f, "task_skew_scan": ${metrics.taskSkewScan}%.3f, "steal_sec": $stealSec%.2f}""")
-    if (sys.env.get("SPARK_GRAFT_DEBUG").contains("1"))
-      metrics.skewDetail.foreach { case (id, n, sum, mx, r, red) =>
-        println(f"[skew] stage $id%3d ${if (red) "reduce" else "scan  "} " +
-          f"tasks=$n%4d sum=${sum / 1e3}%8.2fs " +
-          f"max=${mx / 1e3}%6.2fs max/med=$r%.3f")
-      }
+    println(f"""{"build_sec": $sec%.3f, "files": ${stats.nDocs}, "files_per_sec": ${stats.nDocs / sec}%.1f, "parallelism": $par}""")
     spark.stop()
-  }
-
-  /** Cumulative host-steal jiffies from /proc/stat (field 8 after "cpu") —
-    * nonzero deltas during a timed run mean the hypervisor descheduled this
-    * guest's vCPUs (co-tenant contention), i.e. the wall time is
-    * contaminated. Returns 0 when unreadable. */
-  def stealJiffies: Long = scala.util.Try {
-    val line = scala.io.Source.fromFile("/proc/stat").getLines().next()
-    line.trim.split("\\s+").drop(1).lift(7).map(_.toLong).getOrElse(0L)
-  }.getOrElse(0L)
-
-  /** Deterministic replicated benchmark corpus, written once as
-    * doc_id-range-sorted parquet at a size-keyed shared /tmp cache path
-    * (see below) and read back — the
-    * honest input shape for a build benchmark (a real corpus is a table on
-    * storage, not a cached DataFrame). A heap cache of the corpus stops
-    * fitting somewhere between 1M and 2M files and every extra build pass
-    * then thrashes the spill tier — measured as a fake 4×-data → 24×-time
-    * "superlinearity" that vanishes with a parquet-backed corpus.
-    * Range-sorted files mean each bucket job's doc_id filter prunes to its
-    * own files via parquet min/max stats, the same pruning an
-    * Iceberg-partitioned 100 TB input would give. */
-  def corpusOf(spark: SparkSession, sfDir: String,
-               targetFiles: Long): (org.apache.spark.sql.DataFrame, Long) = {
-    val rep2 = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "8").toInt
-    val docs0 = corpus.Corpus.documents(spark, sfDir)
-    val n = docs0.count()
-    // the sf documents table is ONE parquet file: without a repartition the
-    // whole replicate+md5+sha2 chain below runs as a single task (measured
-    // 31 s single-threaded at 1.92M files — untimed but real wall per fork)
-    val docs = docs0.repartition(
-      math.max(32, spark.sparkContext.defaultParallelism * 4))
-    val r = math.max(1L, targetFiles / n)
-    // replicated id is materialized in its own select first so the
-    // repo/path/commit derivations below see the NEW doc_id (inside one
-    // select, col("doc_id") would still resolve to the input column and
-    // all r replicas would share identical metadata)
-    val f = docs
-      .select(col("doc_id"), col("text"), col("lang"), col("source"),
-        explode(sequence(lit(0L), lit(r - 1))).as("rep"))
-      .select((col("doc_id") * r + col("rep")).as("doc_id"),
-        col("text"), col("lang"), col("source"))
-      .select(col("doc_id"),
-        concat(lit("org"), (col("doc_id") % 10).cast("string"), lit("/"), col("source")).as("repo"),
-        concat(lit("src/doc_"), col("doc_id").cast("string")).as("path"),
-        md5(concat(lit("commit"), col("doc_id").cast("string"))).as("commit"),
-        col("lang"),
-        array_join(array_repeat(col("text"), rep2), " ").as("content"))
-      .withColumn("sha", sha2(col("content"), 256))
-    // The corpus is a pure deterministic function of (sfDir, n·r, repeat):
-    // cache it at a size-keyed SHARED path so the many forks of one bench
-    // run (2 levels × reps × retries + warm-ups) write it once each size
-    // instead of ~2-3 min of identical parquet writing per fork — that tax
-    // was ~10 min of every full run and ate the retry budget under the
-    // wall-clock deadline. A `_graft_complete` marker distinguishes a
-    // finished write from a killed fork's partial dir.
-    // v-prefix mirrors the checkpoint-dir convention: bump it whenever the
-    // synthesis formula above changes, or a stale /tmp cache from an older
-    // build silently becomes the benchmark input.
-    val key = s"v1_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}_${n * r}_rep$rep2"
-    val corpusPath = s"/tmp/graft_bench_corpus_$key"
-    val marker = java.nio.file.Paths.get(corpusPath, "_graft_complete")
-    if (java.nio.file.Files.exists(marker))
-      return (spark.read.parquet(corpusPath), n * r)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(corpusPath))
-    // file count scales with the corpus (~15 MB/file): files are the
-    // split-packing unit, so constant-size files keep scan-task
-    // granularity fine at every target size (128 files at 7.68M docs
-    // would be 210 MB monoliths whose 128 MB row groups cap split
-    // granularity no matter what maxPartitionBytes says)
-    val nCorpusFiles = math.max(128L, n * r / 30000L).toInt
-    f.repartitionByRange(nCorpusFiles, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .write.mode("overwrite").parquet(corpusPath)
-    java.nio.file.Files.createFile(marker)
-    (spark.read.parquet(corpusPath), n * r)
   }
 }

@@ -91,8 +91,8 @@ object CheckpointedBuild {
   }
 
   /** Run (or resume) the bucketed build. Returns corpus stats.
-    * `bucketConc` ≤ 0 → auto (env SPARK_GRAFT_BUCKET_CONC, else sequential
-    * below 16 cores, +1 in-flight bucket per 16 cores). All table data goes
+    * `bucketConc` ≤ 0 → auto (up to 4 in-flight buckets, sequential on a
+    * single core; see the comment at the bucket pool). All table data goes
     * through `io` (the Iceberg seam — graft.sources.TableIO); manifests are
     * the build's own lineage artifacts and stay JSON. With `verifyResume`
     * (default), completed buckets are re-validated against the CURRENT
@@ -304,13 +304,12 @@ object CheckpointedBuild {
       // core gains nothing (no idle slots to backfill: local[1] measured
       // 123.1 s sequential vs 126.4 s at conc=2, i.e. noise-level slower),
       // and stays sequential. The cap bounds transient memory (concurrent
-      // bucket scans) no matter how wide the cluster; raise via
-      // SPARK_GRAFT_BUCKET_CONC only with executor memory to match.
+      // bucket scans) no matter how wide the cluster; raise it via
+      // `bucketConc` only with executor memory to match.
       val defConc =
         math.min(4, math.max(1, spark.sparkContext.defaultParallelism))
       val conc = math.max(1, math.min(todo.size,
-        if (bucketConc > 0) bucketConc
-        else sys.env.get("SPARK_GRAFT_BUCKET_CONC").map(_.toInt).getOrElse(defConc)))
+        if (bucketConc > 0) bucketConc else defConc))
       val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
       try {
         import scala.concurrent.{Await, ExecutionContext, Future}

@@ -6,18 +6,11 @@ import org.apache.spark.sql.functions._
 /** Corpus sources for the engine.
   *
   * The north-rule input shape is `files(repo, path, commit, lang, content)`
-  * (BASELINE.json `input_hint`). Two deterministic providers:
-  *
-  *  - [[files]]: derives the shape from the driver's read-only
-  *    `documents.parquet` (TESTDATA.md) with pure column expressions that
-  *    DuckDB reproduces verbatim, so every driver-checked oracle can rebuild
-  *    the identical corpus. Per-row invariant column `sha = sha2(content,256)`
-  *    (BASELINE.json:15).
-  *
-  *  - [[synthetic]]: fully in-engine generated corpus (seed-free, pure
-  *    function of `spark.range` ids) with planted marker terms for golden
-  *    BM25 queries (FIXTURES.md §1/§3) — used by unit tests and by Bench for
-  *    scale runs; generation is distributed (no driver-side materialization).
+  * (BASELINE.json `input_hint`). [[files]] derives it from the driver's
+  * read-only `documents.parquet` (TESTDATA.md) with pure column expressions
+  * that DuckDB reproduces verbatim, so every driver-checked oracle can
+  * rebuild the identical corpus. Per-row invariant column
+  * `sha = sha2(content,256)` (BASELINE.json:15).
   */
 object Corpus {
 
@@ -41,52 +34,4 @@ object Corpus {
       col("text").as("content"),
       sha2(col("text"), 256).as("sha")
     )
-
-  /** Vocabulary for the synthetic corpus: identifier-shaped terms plus the
-    * planted markers used by golden queries (FIXTURES.md §3). */
-  private val markerTerms = Seq(
-    "zebraquery", "quokkamerge", "pandasort", "lynxshuffle", "koalawindow")
-
-  /** Distributed deterministic corpus of `n` synthetic source files.
-    * Content is a pure function of `doc_id` (hash-chained ints), so the same
-    * (n, spark) always yields byte-identical rows on any partitioning. */
-  def synthetic(spark: SparkSession, n: Long): DataFrame = {
-    val langs = Seq("scala", "java", "py", "js", "go", "md")
-    val genContent = udf { (id: Long) =>
-      val rnd = new scala.util.Random(id * 2654435761L + 42L)
-      val nWords = 30 + rnd.nextInt(270)
-      val kw = Seq("def", "val", "class", "object", "return", "import",
-        "match", "case", "for", "while", "if", "else")
-      val sb = new StringBuilder
-      var i = 0
-      while (i < nWords) {
-        val r = rnd.nextInt(100)
-        val w =
-          if (r < 25) kw(rnd.nextInt(kw.length))
-          else if (r < 27 && id % 7 == 0) markerTerms(rnd.nextInt(markerTerms.length))
-          else {
-            val stems = Seq("parse", "build", "merge", "scan", "index", "shard",
-              "token", "score", "fetch", "cache", "split", "batch")
-            val suff = Seq("Request", "Response", "Worker", "Manager", "_util",
-              "_impl", "Count", "Buffer")
-            stems(rnd.nextInt(stems.length)) + suff(rnd.nextInt(suff.length)) +
-              (if (rnd.nextInt(4) == 0) rnd.nextInt(10).toString else "")
-          }
-        sb.append(w)
-        sb.append(if (i % 12 == 11) "\n" else " ")
-        i += 1
-      }
-      sb.toString
-    }
-    spark.range(n).select(
-      col("id").as("doc_id"),
-      concat(lit("org"), (col("id") % 37).cast("string"), lit("/repo"),
-        (col("id") % 11).cast("string")).as("repo"),
-      concat(lit("src/gen/F"), col("id").cast("string"), lit(".src")).as("path"),
-      md5(concat(lit("c"), col("id").cast("string"))).as("commit"),
-      element_at(typedLit(langs), (col("id") % langs.size).cast("int") + 1)
-        .as("lang"),
-      genContent(col("id")).as("content")
-    ).withColumn("sha", sha2(col("content"), 256))
-  }
 }

@@ -225,7 +225,9 @@ object Dedup {
     // representatives() would then keep several docs of one true cluster).
     // Near-clique LSH graphs converge in a handful of rounds; a component
     // whose propagation distance exceeds maxIter is the documented cue to
-    // switch to large-star/small-star — fail loudly instead of guessing.
+    // switch to large-star/small-star — fail loudly instead of guessing,
+    // releasing the last round's cached frame first (null when maxIter = 0).
+    if (!done && prev != null) prev.unpersist()
     require(done,
       s"clusters: min-label propagation did not converge in $maxIter " +
         "rounds (component diameter exceeds maxIter); raise maxIter or " +

@@ -80,7 +80,7 @@ object Similarity {
     * so on the driver's isotropic fixture (max pairwise cosine 0.48 — no
     * near-dup structure; "neighbors" are noise at cos ≈ 0.3, expected
     * Hamming ≈ 3 of 8) recall ≥ 0.9 needs radius 4 (the recorded default;
-    * Bench records recall@10 and the probe fraction). On a clustered real
+    * recall@10 = 1.0 is recorded in BENCH_r05.json). On a clustered real
     * embedding corpus (near-dups at cos ≥ 0.9 ⇒ per-bit agreement ≥ 0.92)
     * radius 1 already recalls ≥ ~0.95 — tune radius/nBits to the corpus.
     * The probe ring is exploded on the tiny query side and the scan is an
@@ -186,8 +186,7 @@ object Similarity {
   /** Default multi-probe radius: smallest radius with measured recall@10
     * ≥ 0.9 against brute force on the driver's embeddings fixture (see
     * [[annLsh]] — the fixture is isotropic, which forces a wide ring). */
-  val AnnProbeRadius: Int =
-    sys.env.get("SPARK_GRAFT_ANN_RADIUS").map(_.toInt).getOrElse(4)
+  val AnnProbeRadius: Int = 4
 
   /** Axis-aligned sign LSH bucket over the `embedding` column: bit d =
     * (v[d+1] > 0), d ∈ [0, nBits). Exact on float inputs (no accumulation),

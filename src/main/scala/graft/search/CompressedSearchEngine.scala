@@ -272,7 +272,7 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * oracles (`q_bm25_*`, `q_phrase*`, `q_bool_*`, `q_paged`, `q_snippets*`)
     * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec).
     * `forcePositional` forces the adjacency pre-filter below the phrase
-    * gate (tests/bench exercise both exact plans). */
+    * gate (specs and the `q_*_pos` oracles exercise both exact plans). */
   def search(raw: String, files: DataFrame, k: Int = 10,
              analyzer: String = "simple",
              forcePositional: Boolean = false): DataFrame = {
@@ -396,8 +396,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * decode work a prune could save is smaller than the two extra adaptive
     * round-trips it costs (measured: 3-job pruning loses to the single
     * exhaustive job up to at least 10^6 docs), so small corpora take the
-    * exhaustive path unless `force` is set (tests/bench exercise the
-    * machinery with force=true). */
+    * exhaustive path unless `force` is set (specs and `q_bm25_pruned`
+    * exercise the machinery with force=true). */
   def searchPruned(terms: Seq[String], k: Int = 10,
                    force: Boolean = false): DataFrame = {
     if (terms.isEmpty) return searchTopK(terms, k)
@@ -583,7 +583,7 @@ object CompressedSearchEngine {
   /** Corpus size above which adaptive MaxScore pruning pays for its extra
     * driver round-trips (see [[CompressedSearchEngine.searchPruned]]).
     *
-    * MEASURED at the design point (GateBench, 32 cores, 3-term query,
+    * MEASURED at the design point (GATES.md, 32 cores, 3-term query,
     * median of 3): exhaustive vs forced-pruned was 0.73 s/1.42 s at 1.2M
     * docs, 2.66/4.57 at 4.8M, 6.36/8.90 at 9.6M — the ratio narrows
     * 1.95× → 1.72× → 1.40× as the decode work the prune saves grows
@@ -602,7 +602,7 @@ object CompressedSearchEngine {
     * substring-scan-over-candidates plan to the positional adjacency
     * pre-filter (see [[CompressedSearchEngine.phraseCandidates]]).
     *
-    * MEASURED (GateBench ladder, 32 cores; re-run in round 4 after the
+    * MEASURED (GATES.md ladder, 32 cores; re-run in round 4 after the
     * candidate semi-join fix in [[adjacencyCandidates]]): substring
     * 3.17 / 4.84 / 9.70 s at 1.2M / 4.8M / 9.6M docs vs positional
     * 13.8 / 71.2 / 121.3 s (r3 pre-fix: 16.4 / 106 / 256 — the fix removed

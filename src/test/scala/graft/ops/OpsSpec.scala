@@ -55,9 +55,11 @@ class OpsSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
     assert(Dedup.clusters(empty).isEmpty)
     // non-convergence within maxIter must fail loudly, never return a
-    // silently-truncated (wrong) labeling
+    // silently-truncated (wrong) labeling — and must leave no cached frame
+    val cached = spark.sparkContext.getPersistentRDDs.size
     val ex = intercept[IllegalArgumentException](Dedup.clusters(chain, maxIter = 2))
     assert(ex.getMessage.contains("did not converge"))
+    assert(spark.sparkContext.getPersistentRDDs.size === cached)
   }
 
   test("simhash: identical docs get identical hashes; hash is stable") {
