@@ -2,6 +2,8 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
+import java.util.concurrent.{LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** HTTP front over [[Serve.Session]] — the reference's flagship entry point
   * is a REST controller (`Backend/TextController.java:30-44`: query/page/
@@ -11,14 +13,27 @@ import java.net.InetSocketAddress
   *   GET /search?query=Q[&page=P&limit=N] → JSON array of result rows
   *   GET /suggest?prefix=S                → JSON array of (query, cnt)
   *
-  * Requests are handled on the dispatcher thread (executor null): the
-  * session's engine is one warm Spark driver, so requests serialize onto it
-  * exactly like the REPL front in [[Serve.main]]. */
+  * Requests run on a fixed pool of `defaultParallelism` worker threads, as
+  * the reference's Spring controller runs each request on a pooled worker:
+  * concurrent requests are concurrent Spark jobs on the one warm session.
+  * The session serializes the only shared mutable state, its query-log
+  * append. Workers are named daemon threads and idle ones time out, so a
+  * stopped server leaves no live threads behind. */
 object HttpServe {
 
   /** Start the front on `port` (0 = ephemeral); returns the bound server. */
   def start(session: Serve.Session, port: Int): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val n = session.spark.sparkContext.defaultParallelism
+    val ids = new AtomicInteger()
+    val pool = new ThreadPoolExecutor(n, n, 5, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, s"HttpServe-worker-${ids.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    server.setExecutor(pool)
     def params(ex: HttpExchange): Map[String, String] =
       Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").toSeq
         .filter(_.contains("=")).map { kv =>

@@ -11,12 +11,16 @@ import graft.search.QueryLog
   * HTTP framework: a REPL over stdin against ONE loaded engine.
   *
   * What "long-lived" buys and what this entry exercises: the published index
-  * is loaded ONCE (parquet scans served from the persisted engine DataFrame),
-  * the phrase-expansion term dictionary is materialized once and cached
-  * across queries (CompressedSearchEngine.termDict), the display corpus is
-  * persisted once — per-query work is only the query's own plan. Every
-  * query is appended to the query log (S10), so `:suggest` reflects the
-  * session's history like the reference's suggestion endpoint.
+  * is loaded ONCE (one engine over the index's parquet files, which every
+  * query scans with its own pushed-down term filter; the index is not
+  * cached), the phrase-expansion term dictionary is materialized once and
+  * cached across queries (CompressedSearchEngine.termDict), the display
+  * corpus is persisted once — per-query work is only the query's own plan.
+  * Every query is appended to the query log (S10) before it is searched, so
+  * `:suggest` reflects the session's history like the reference's
+  * suggestion endpoint. A session is safe to call from several threads (the
+  * [[HttpServe]] workers): appends to the log are serialized, and
+  * everything else a request does is its own Spark job.
   *
   * Protocol (one request per line, one JSON line per result row):
   *   <query>                 top-10 BM25 (tokens / "phrase" / boolean)
@@ -44,25 +48,35 @@ object Serve {
   }
 
   /** J2/J3 hydrate AFTER top-k: display columns are joined for the result
-    * page only, in the deterministic (score desc, doc_id asc) order. */
+    * page only, in the deterministic (score desc, doc_id asc) order. The
+    * join yields at most k rows, so they are sorted in one partition: a
+    * global sort would first run a range-sampling job of its own. */
   def hydrate(topk: DataFrame, files: DataFrame): DataFrame =
     topk.join(files.select("doc_id", "repo", "path", "lang"), Seq("doc_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
+      .repartition(1)
+      .sortWithinPartitions(col("score").desc, col("doc_id").asc)
 
   /** One warm serving session over a published checkpoint dir. */
-  final class Session(spark: SparkSession, ckptDir: String, corpus: DataFrame,
+  final class Session(val spark: SparkSession, ckptDir: String, corpus: DataFrame,
                       logPath: String) {
     val engine: graft.search.CompressedSearchEngine =
       CheckpointedBuild.load(spark, ckptDir)
     private val files = corpus.persist()
+    private val logLock = new Object
+
+    /** Two parquet appends into one directory share `<logPath>/_temporary`,
+      * which the first job to commit deletes under the other; so appends
+      * take turns. Each stays synchronous, so a later `:suggest` sees it. */
+    private def log(raw: String): Unit =
+      logLock.synchronized(QueryLog.append(spark, logPath, Seq(raw)))
 
     def query(raw: String, k: Int = 10): DataFrame = {
-      QueryLog.append(spark, logPath, Seq(raw))
+      log(raw)
       hydrate(engine.search(raw, files, k), files)
     }
 
     def page(raw: String, page: Int, limit: Int): DataFrame = {
-      QueryLog.append(spark, logPath, Seq(raw))
+      log(raw)
       hydrate(engine.searchPage(raw, files, page, limit), files)
     }
 

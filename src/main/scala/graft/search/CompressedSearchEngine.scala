@@ -31,12 +31,14 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * branches execute across their query matrix. */
   @volatile private[graft] var lastPrunedUsedCandidates: Option[Boolean] = None
 
+  // the engine's queries call the Graft functions by name; registered once
+  // here, not per query, so concurrent requests don't rewrite the registry
+  graft.functions.GraftFunctions.register(index.sparkSession)
+
   // native codegen'd decode (graft.functions.DecodePostings) — stays inside
   // whole-stage codegen fused with the explode, no catalyst↔Scala converters
-  private def decodeCol(c: org.apache.spark.sql.Column) = {
-    graft.functions.GraftFunctions.register(index.sparkSession)
+  private def decodeCol(c: org.apache.spark.sql.Column) =
     graft.functions.GraftFunctions.decodePostings(c)
-  }
 
   private def rowsFor(terms: Seq[String]): DataFrame =
     index.filter(col("term").isin(terms: _*))
@@ -236,7 +238,6 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   def phraseCandidates(phrase: String, files: DataFrame,
                        analyzer: String = "simple",
                        forcePositional: Boolean = false): DataFrame = {
-    graft.functions.GraftFunctions.register(files.sparkSession)
     // AsciiContains folds [A-Z] on the fly during the byte search — the
     // verify scan no longer allocates a lowered copy of every candidate's
     // content (guide §4: one fused primitive loop per row)
@@ -487,14 +488,12 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * skip-pointer read path, graft.functions.DecodePostingsBlocks). */
   private def decodedBlocksFrom(chunkRows: DataFrame, lo: org.apache.spark.sql.Column,
                                 hi: org.apache.spark.sql.Column,
-                                minw: org.apache.spark.sql.Column): DataFrame = {
-    graft.functions.GraftFunctions.register(chunkRows.sparkSession)
+                                minw: org.apache.spark.sql.Column): DataFrame =
     chunkRows.select(col("term"), col("df"),
         explode(graft.functions.GraftFunctions.decodeBlocks(
           col("postings"), col("blocks"), lo, hi, minw)).as("p"))
       .select(col("term"), col("df"), col("p.doc_id").as("doc_id"),
         col("p.tf").as("tf"), col("p.len").as("len"))
-  }
 }
 
 object CompressedSearchEngine {

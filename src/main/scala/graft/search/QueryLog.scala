@@ -2,6 +2,7 @@ package graft.search
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
 import graft.analyze.Analyzer
 
 /** Real query-log sink + suggestions (SURVEY.md §2.1 S10, §2.4 A11, §2.6 O3).
@@ -41,11 +42,18 @@ object QueryLog {
       io.append(rows.toDF("query", "normalized").coalesce(1), path)
   }
 
+  /** The log table's columns, as [[append]] writes them. */
+  private val Schema: StructType =
+    new StructType().add("query", StringType).add("normalized", StringType)
+
   /** Load the append log back through the same table seam as [[append]] —
-    * a non-parquet TableIO must round-trip (ADVICE r2). */
+    * a non-parquet TableIO must round-trip (ADVICE r2). The schema is
+    * fixed, not inferred: a load that races the first append finds a log
+    * directory holding only the writer's `_temporary`, and reads it as an
+    * empty log. */
   def load(spark: SparkSession, path: String,
            io: graft.sources.TableIO = graft.sources.ParquetTableIO): DataFrame =
-    io.read(spark, path)
+    io.read(spark, path, Some(Schema))
 
   /** A11: the reference's `$inc count` upsert counter as a groupBy-count
     * view over the append log: (query, normalized, cnt). */

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Thin table-I/O seam between the engine and the table format (SURVEY.md
   * §7.1 step 1). The north rule names Iceberg tables; this sandbox has no
@@ -12,8 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * change for every caller, no engine edits.
   */
 trait TableIO {
-  /** Read the table's current snapshot. */
-  def read(spark: SparkSession, table: String): DataFrame
+  /** Read the table's current snapshot; with a `schema`, the table is read
+    * as that schema instead of one inferred from its files (an existing
+    * table with no committed files then reads as empty). */
+  def read(spark: SparkSession, table: String,
+           schema: Option[StructType] = None): DataFrame
 
   /** Atomically replace the table's content (write-audit-publish).
     * `options` are format-layer hints (e.g. parquet row-group size for the
@@ -34,8 +38,9 @@ trait TableIO {
 /** Parquet-directory implementation: a "table" is a directory path; commits
   * are Hadoop-committer-atomic part-file sets. */
 object ParquetTableIO extends TableIO {
-  def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(table)
+  def read(spark: SparkSession, table: String,
+           schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(spark.read.schema).parquet(table)
 
   def overwrite(df: DataFrame, table: String,
                 options: Map[String, String] = Map.empty): Unit =

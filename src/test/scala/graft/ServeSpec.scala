@@ -1,14 +1,35 @@
 package graft
 
+import com.sun.net.httpserver.HttpServer
 import graft.corpus.Corpus
-import java.nio.file.Files
+import graft.search.QueryLog
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{Callable, Executors}
+import scala.jdk.CollectionConverters._
 
 class ServeSpec extends SparkSpec {
 
+  private lazy val files = Corpus.files(spark, "/root/testdata/sf0.001")
+
+  /** One published checkpoint; each test opens its own session on it. */
+  private lazy val dir = {
+    val d = Files.createTempDirectory("graft-serve").toString
+    checkpoint.CheckpointedBuild.run(files, d, nBuckets = 2)
+    d
+  }
+
+  /** One GET round-trip: (status, body), the error body on a 4xx/5xx. */
+  private def fetch(server: HttpServer, pathQ: String): (Int, String) = {
+    val c = java.net.URI.create(
+      s"http://127.0.0.1:${server.getAddress.getPort}$pathQ").toURL
+      .openConnection().asInstanceOf[java.net.HttpURLConnection]
+    val code = c.getResponseCode
+    val src = scala.io.Source.fromInputStream(
+      if (code < 400) c.getInputStream else c.getErrorStream, "UTF-8")
+    try (code, src.mkString) finally src.close()
+  }
+
   test("serving session: warm engine answers queries, pages, suggestions") {
-    val dir = Files.createTempDirectory("graft-serve").toString
-    val files = Corpus.files(spark, "/root/testdata/sf0.001")
-    checkpoint.CheckpointedBuild.run(files, dir, nBuckets = 2)
     val s = new Serve.Session(spark, dir, files, s"$dir/querylog")
     try {
       val hits = s.handle("merge sort window")
@@ -34,11 +55,11 @@ class ServeSpec extends SparkSpec {
       val server = HttpServe.start(s, 0)
       try {
         def get(pathQ: String): String = {
-          val url = java.net.URI.create(
-            s"http://127.0.0.1:${server.getAddress.getPort}$pathQ").toURL
-          val src = scala.io.Source.fromInputStream(url.openStream(), "UTF-8")
-          try src.mkString finally src.close()
+          val (code, body) = fetch(server, pathQ)
+          assert(code === 200, body)
+          body
         }
+        def status(pathQ: String): Int = fetch(server, pathQ)._1
         val body = get("/search?query=merge+sort+window")
         assert(body.startsWith("[") && body.endsWith("]"))
         assert(body.split("\\{\"doc_id\"").length - 1 === 10)
@@ -46,10 +67,6 @@ class ServeSpec extends SparkSpec {
         assert(paged === "[" + all.slice(3, 6).mkString(",") + "]")
         val sugBody = get("/suggest?prefix=merge")
         assert(sugBody.contains("merge sort window"))
-        def status(pathQ: String): Int = java.net.URI.create(
-          s"http://127.0.0.1:${server.getAddress.getPort}$pathQ").toURL
-          .openConnection().asInstanceOf[java.net.HttpURLConnection]
-          .getResponseCode
         // a malformed request is a JSON error, not a dead socket
         assert(status("/search") === 400)
         // pagination params come together: a lone page (or limit) is a 400,
@@ -63,5 +80,50 @@ class ServeSpec extends SparkSpec {
         assert(inj.startsWith("[") && !inj.contains("\"cnt\":"))
       } finally server.stop(0)
     } finally s.close()
+  }
+
+  test("concurrent HTTP clients get the sequential responses; no query-log append is lost") {
+    val logPath = Files.createTempDirectory("graft-serve-log").toString + "/querylog"
+    // a load that races the first append sees only the writer's _temporary
+    Files.createDirectories(Paths.get(logPath, "_temporary", "0"))
+    assert(QueryLog.load(spark, logPath).count() === 0)
+    // suggestions come from a history no concurrent search adds to, so the
+    // suggest response stays fixed while the searches append
+    QueryLog.append(spark, logPath, Seq("shuffle service", "shuffle service", "Shuffle join"))
+    val reqs = Seq(
+      "/search?query=merge+sort+window",
+      "/search?query=merge+sort+window&page=2&limit=3",
+      "/search?query=%22hash+join%22",
+      "/search?query=%22hash+join%22+OR+%22merge+sort%22",
+      "/suggest?prefix=shuffle")
+    val searches = reqs.count(_.startsWith("/search"))
+    val clients = 8
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.size
+    val s = new Serve.Session(spark, dir, files, logPath)
+    val server = HttpServe.start(s, 0)
+    try {
+      val want = reqs.map(fetch(server, _))
+      assert(want.forall { case (code, body) =>
+        code == 200 && body.startsWith("[{") && body.endsWith("}]") })
+      val logged = QueryLog.load(spark, logPath).count()
+      // each client sends every request once, starting at its own offset,
+      // so different request kinds overlap
+      val pool = Executors.newFixedThreadPool(clients)
+      val got = try pool.invokeAll((0 until clients).map { c =>
+          (() => reqs.indices.map(j => (c + j) % reqs.size)
+            .map(i => i -> fetch(server, reqs(i)))): Callable[Seq[(Int, (Int, String))]]
+        }.asJava).asScala.toSeq.flatMap(_.get())
+        finally pool.shutdown()
+      assert(QueryLog.load(spark, logPath).count() === logged + clients * searches)
+      assert(got.size === clients * reqs.size)
+      got.foreach { case (i, resp) => assert(resp === want(i), reqs(i)) }
+    } finally {
+      server.stop(0)
+      s.close()
+    }
+    val live = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive &&
+      !t.isDaemon && (t.getName.startsWith("HttpServe") || t.getName == "HTTP-Dispatcher"))
+    assert(live.isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size === cachedBefore)
   }
 }
