@@ -88,19 +88,11 @@ object HttpServe {
   }
 
   /** args: <sfDir> [port] [ckptDir] — builds the checkpoint if not yet
-    * published (resumable), then serves until the process is killed. */
+    * published (resumable, [[Serve.open]]), then serves until the process
+    * is killed. */
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
-    val ckptDir = args.lift(2).getOrElse(
-      s"/tmp/graft_serve_v3_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    val spark = GraftSession.builder("graft-http-serve",
-      Runtime.getRuntime.availableProcessors()).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val files = corpus.Corpus.files(spark, sfDir)
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$ckptDir/scalars.json")))
-      checkpoint.CheckpointedBuild.run(files, ckptDir, nBuckets = 4)
-    val session = new Serve.Session(spark, ckptDir, files, s"$ckptDir/querylog")
+    val session = Serve.open("graft-http-serve", args.headOption, args.lift(2))
     val server = start(session, port)
     println(s"""{"status": "serving", "port": ${server.getAddress.getPort}, "n_docs": ${session.engine.nDocs}}""")
     Thread.currentThread().join() // serve until killed

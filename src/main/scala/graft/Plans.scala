@@ -80,16 +80,6 @@ object Plans {
           "no per-term aggregate buffers).",
         InvertedIndex.mergeSegments(
           InvertedIndex.segments(toksP, t.nDocs), t.avgdl)),
-      ("Phrase adjacency pre-filter (positional postings)",
-        "Expect: `PushedFilters` on the index scan, posting-level decode of " +
-          "postings+positions fused with explode, union of slot posting rows " +
-          "SEMI-JOINED on the conjunctive candidate set, then ONE doc_id " +
-          "`Exchange` + in-partition Sort + MapPartitions (the streaming " +
-          "per-document sorted intersection) — shuffle volume is candidate " +
-          "postings of the slot terms, never corpus-wide postings and never " +
-          "candidate content.",
-        ceng.adjacencyCandidates(Seq("merge", "sort"),
-          ceng.candidatesAll(Seq("merge", "sort"))).get),
       ("Batch multi-query search (offline query replay)",
         "Expect: ONE index parquet scan with `PushedFilters: [In(term, …)]` " +
           "covering the whole batch's terms, the (qid, term) queries table " +

@@ -13,9 +13,8 @@ import graft.search.QueryLog
   * What "long-lived" buys and what this entry exercises: the published index
   * is loaded ONCE (one engine over the index's parquet files, which every
   * query scans with its own pushed-down term filter; the index is not
-  * cached), the phrase-expansion term dictionary is materialized once and
-  * cached across queries (CompressedSearchEngine.termDict), the display
-  * corpus is persisted once — per-query work is only the query's own plan.
+  * cached), the display corpus is persisted once — per-query work is only
+  * the query's own plan.
   * Every query is appended to the query log (S10) before it is searched, so
   * `:suggest` reflects the session's history like the reference's
   * suggestion endpoint. A session is safe to call from several threads (the
@@ -111,19 +110,28 @@ object Serve {
     def close(): Unit = files.unpersist()
   }
 
-  /** args: <sfDir> [ckptDir]. Builds the checkpoint if not yet published
-    * (resumable — a second Serve on the same dir skips straight to load). */
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val ckptDir = args.lift(1).getOrElse(
+  /** The serving fronts' shared start-up: a local session on every core
+    * over the corpus in `sfDirArg` (default sf0.001), serving the checkpoint
+    * in `ckptDirArg` (default: a /tmp dir named after the corpus). The
+    * checkpoint is built first if not yet published (resumable — a second
+    * start on the same dir skips straight to load). */
+  def open(appName: String, sfDirArg: Option[String],
+           ckptDirArg: Option[String]): Session = {
+    val sfDir = sfDirArg.getOrElse("/root/testdata/sf0.001")
+    val ckptDir = ckptDirArg.getOrElse(
       s"/tmp/graft_serve_v3_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}")
-    val spark = GraftSession.builder("graft-serve",
+    val spark = GraftSession.builder(appName,
       Runtime.getRuntime.availableProcessors()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val files = corpus.Corpus.files(spark, sfDir)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$ckptDir/scalars.json")))
       CheckpointedBuild.run(files, ckptDir, nBuckets = 4)
-    val session = new Session(spark, ckptDir, files, s"$ckptDir/querylog")
+    new Session(spark, ckptDir, files, s"$ckptDir/querylog")
+  }
+
+  /** args: <sfDir> [ckptDir] (see [[open]]). */
+  def main(args: Array[String]): Unit = {
+    val session = open("graft-serve", args.headOption, args.lift(1))
     println(s"""{"status": "serving", "n_docs": ${session.engine.nDocs}}""")
     Iterator.continually(scala.io.StdIn.readLine())
       .takeWhile(l => l != null && l.trim != ":quit")
@@ -137,6 +145,6 @@ object Serve {
           println(s"""{"error": ${Serve.jsonString(msg)}}""") }
       }
     session.close()
-    spark.stop()
+    session.spark.stop()
   }
 }

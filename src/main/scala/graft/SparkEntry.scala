@@ -111,7 +111,7 @@ object SparkEntry {
         1L -> Seq("dup", "stream"),
         2L -> Seq("hash", "join")))),
     // positional payload roundtrip: decode(encode(positions)) == posexplode,
-    // through the same posting-level decoder the adjacency pre-filter runs
+    // through the posting-level positions decoder
     "q_positions" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       engine(Corpus.files(s, dir)).index
@@ -122,19 +122,13 @@ object SparkEntry {
         .select(col("term"), col("doc_id"), col("pos").cast("long").as("pos"))
         .orderBy("term", "doc_id", "pos")
     }),
-    // P4 phrase over the compressed index WITH the positional adjacency
-    // pre-filter forced on (the sf0.01 corpus is below the phrase gate) —
-    // must hash-match the plain substring-semantics oracle
-    "q_phrase_pos" -> ((s, dir) => {
-      val files = Corpus.files(s, dir)
-      engine(files).search("\"hash join\"", files, forcePositional = true)
-    }),
-    // E1 boolean AND through the same positional phrase path
-    "q_bool_and_pos" -> ((s, dir) => {
-      val files = Corpus.files(s, dir)
-      engine(files).search("\"merge sort\" AND \"table scan\"", files,
-        forcePositional = true)
-    }),
+    // duplicates q_phrase: the positional phrase plan these two once
+    // certified is gone, and both names stay part of the query set
+    "q_phrase_pos" -> ((s, dir) =>
+      searchCorpus(s, dir, "\"hash join\"")),
+    // duplicates q_bool_and (see q_phrase_pos)
+    "q_bool_and_pos" -> ((s, dir) =>
+      searchCorpus(s, dir, "\"merge sort\" AND \"table scan\"")),
     // S7 checkpointed build + resume: full bucketed pipeline with lineage
     // manifests, then query the published index
     "q_bm25_checkpointed" -> ((s, dir) => {

@@ -34,7 +34,7 @@ final case class TermEntry(term: String, tf: Int, len: Int, pos: Array[Byte])
   *
   * Tokenization is byte-identical to [[AsciiTokens]] (maximal `[A-Za-z0-9]+`
   * runs, ASCII-lowercased — reference `Utils/Utils.java:14` semantics);
-  * `PhrasePositionalSpec` cross-validates the fused output against the
+  * `PhraseSpec` cross-validates the fused output against the
   * per-token `Stats.tokensPos` path.
   */
 case class CompactTokens(child: Expression) extends UnaryExpression {

@@ -10,12 +10,9 @@ import org.apache.spark.sql.types._
   * stream into one entry per POSTING — `array<struct<doc_id: bigint,
   * ps: array<int>>>` — the only positions decoder.
   *
-  * Feeds the phrase adjacency pre-filter
-  * (CompressedSearchEngine.adjacencyCandidates): its candidate semi join
-  * probes one row per posting, and the doc-grouped sorted intersection
-  * consumes the position arrays directly, so positions never explode to
-  * occurrence rows on the query path. The `q_positions` roundtrip explodes
-  * `ps` to get occurrence rows. The BM25 scoring path uses
+  * No query reads positions: this decoder serves the `q_positions` oracle
+  * and PhraseSpec's roundtrip, which certify the stored column by
+  * exploding `ps` to occurrence rows. The BM25 scoring path uses
   * [[DecodePostings]] and never touches the positions column.
   *
   * Wire format of `positions` (PostingCodec.encodeWithPos): per posting, in

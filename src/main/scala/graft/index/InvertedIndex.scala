@@ -9,9 +9,9 @@ import PostingCodec.BlockMeta
   * single decode task) stays bounded even for ubiquitous code tokens at
   * 10^12-file scale — the document-partitioned layout ubiquitous in sharded
   * IR systems. `max_weight` is the chunk-level bound (max over its blocks).
-  * `positions` is the parallel in-document token-position stream (phrase
-  * adjacency pre-filter); it lives in its own parquet column so the BM25
-  * scoring path never reads a byte of it (column pruning).
+  * `positions` is the parallel in-document token-position stream, which no
+  * query reads; it lives in its own parquet column so the BM25 scoring
+  * path never reads a byte of it (column pruning).
   */
 final case class IndexChunk(chunk_id: Int, first_doc_id: Long,
                             last_doc_id: Long, n: Int, max_weight: Double,

@@ -25,8 +25,8 @@ object PostingCodec {
   /** Posting with its in-document token positions (0-based, sorted). The
     * positions travel in a SEPARATE self-contained byte stream (per posting:
     * vint(count), then delta-gap varints with prev = -1), stored as its own
-    * parquet column — the BM25 scoring path never reads it (column pruned),
-    * only the phrase adjacency pre-filter does. */
+    * parquet column — no query reads it (column pruned); only the
+    * `q_positions` roundtrip decodes it. */
   final case class PosPosting(doc_id: Long, tf: Int, len: Int,
                               positions: Array[Int])
 

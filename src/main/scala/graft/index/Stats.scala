@@ -42,12 +42,9 @@ object Stats {
 
   /** Positional token stream (doc_id, term, pos, len) — pos is the 0-based
     * token index in the document's analyzer output, len the document's token
-    * count. This is the index-build input: ONE tokenize pass produces
-    * everything the build needs (len rides in the row — `size(toks)` from
-    * the same materialized array — so there is no docstats join and no
-    * second tokenize), the builder folds tf out of the sorted stream itself
-    * (no (doc,term) groupBy), and positions feed the phrase adjacency
-    * pre-filter. The intermediate select materializes `toks` once per row so
+    * count. The per-token reference path: the build reads [[postings]]
+    * instead, and PhraseSpec checks the stored positions against this
+    * stream. The intermediate select materializes `toks` once per row so
     * the generator and `size` share it. */
   def tokensPos(files: DataFrame, analyzer: String = "simple"): DataFrame = {
     val toksCol: DataFrame => DataFrame = analyzer match {

@@ -15,12 +15,12 @@ import org.apache.spark.sql.functions._
   *    block-max WAND block skipping (see its doc). Guaranteed
   *    rank-identical to the exhaustive path (asserted in tests and by the
   *    shared DuckDB oracle).
-  *  - [[search]]: the full serving lifecycle (token/phrase/boolean), with
-  *    the positional adjacency pre-filter on phrases above the gate.
+  *  - [[search]]: the full serving lifecycle (token/phrase/boolean):
+  *    phrases take conjunctive candidates from the index, then the raw
+  *    substring verify over the corpus.
   *
   * Everything stays distributed: the only `collect`s are O(#query-terms)
-  * metadata rows, the k threshold scores, and the bounded dictionary
-  * expansion — never postings.
+  * metadata rows and the k threshold scores — never postings.
   */
 final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
                                    val avgdl: Double) {
@@ -42,13 +42,6 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
   private def rowsFor(terms: Seq[String]): DataFrame =
     index.filter(col("term").isin(terms: _*))
-
-  /** Term dictionary for phrase boundary expansion, materialized once per
-    * engine on first phrase query (serving engines are long-lived): the
-    * expansion filter then scans the cached vocab instead of re-reading the
-    * index's term column per query. Vocabulary is tiny next to postings. */
-  private lazy val termDict: DataFrame =
-    index.select("term").distinct().persist()
 
   /** Decoded view of the index: (term, df, doc_id, tf, len) — also the
     * encode∘decode = id roundtrip surface checked against the tf oracle. */
@@ -115,12 +108,12 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   /** E5 conjunctive candidates from the index alone (docs containing ALL
     * terms) — checked against the DuckDB oracle (`q_candidates_all`) and,
     * through the phrase and boolean paths, against `LocalOracle` in specs.
-    * ONE single-phase aggregation (bit_or of per-term bits + popcount — the
-    * same trick adjacencyCandidates uses) instead of countDistinct's
-    * two-exchange plan: halves the exchanges of every phrase/bool candidate
-    * pass. Duplicate terms in `terms` make the filter unsatisfiable in both
-    * formulations (countDistinct ≤ distinct < length ⇔ popcount ≤ distinct
-    * < length). Falls back to countDistinct past 63 distinct terms. */
+    * ONE single-phase aggregation (bit_or of per-term bits + popcount)
+    * instead of countDistinct's two-exchange plan: halves the exchanges of
+    * every phrase/bool candidate pass. Duplicate terms in `terms` make the
+    * filter unsatisfiable in both formulations (countDistinct ≤ distinct <
+    * length ⇔ popcount ≤ distinct < length). Falls back to countDistinct
+    * past 63 distinct terms. */
   def candidatesAll(terms: Seq[String]): DataFrame =
     if (terms.isEmpty) index.sparkSession.range(0).select(col("id").as("doc_id"))
     else if (terms.distinct.length > 63)
@@ -131,135 +124,22 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
       .agg(bit_or(termMaskCol(terms.distinct)).as("tm"))
       .filter(bit_count(col("tm")) === terms.length).select("doc_id")
 
-  /** Positional adjacency pre-filter for the phrase path — a SOUND superset
-    * of the raw-substring match (never drops a true match), used only to
-    * shrink the candidate set before the authoritative substring verify.
-    *
-    * Soundness: if `asciiLower(content)` contains the phrase substring, the
-    * phrase's internal separators are non-alphanumeric, so content token
-    * boundaries align with them inside the matched span. The span therefore
-    * covers consecutive content tokens w₀ t₂ … tₙ₋₁ wₙ where w₀ ENDS WITH t₁
-    * (the match may start mid-token: "rehash join" contains "hash join") and
-    * wₙ STARTS WITH tₙ ("hash joins"), middle tokens exact. The boundary
-    * slots are expanded from the index's term dictionary (a term-column-only
-    * scan — tiny next to candidate content); if the expansion exceeds
-    * [[CompressedSearchEngine.MaxExpandTerms]], returns None and the caller
-    * keeps the plain candidate set (both plans are exact — this is a
-    * cost-based choice between them).
-    *
-    * Evaluation is one union of the slots' POSTING rows (doc_id, positions,
-    * slot), semi-joined down to the conjunctive candidate set `cand0` BEFORE
-    * any shuffle (for common code tokens the corpus-wide posting stream
-    * dwarfs the candidates — round 3 measured the unjoined plan superlinear,
-    * 16→106→256 s across a 1.2/4.8/9.6M ladder, pure shuffle spill the
-    * candidates never needed), then one doc_id shuffle feeding a streaming
-    * per-document n-way sorted intersection of slot-normalized positions
-    * ([[CompressedSearchEngine.adjacentDocs]]): shuffle volume is candidate
-    * postings of the query/slot terms, never candidate content and never
-    * corpus-wide postings. Since every surviving doc is already in `cand0`,
-    * the result needs no further intersection with it. */
-  def adjacencyCandidates(phraseToks: Seq[String],
-                          cand0: DataFrame): Option[DataFrame] = {
-    val n = phraseToks.length
-    if (n < 2) return None // single token: candidatesAll already exact-narrow
-    val t1 = phraseToks.head
-    val tn = phraseToks.last
-    val max = CompressedSearchEngine.MaxExpandTerms
-    val exp = termDict
-      .filter(endswith(col("term"), lit(t1)) || startswith(col("term"), lit(tn)))
-      .limit(max + 1)
-      .collect().map(_.getString(0))
-    if (exp.length > max) return None
-    val s1 = (t1 +: exp.filter(_.endsWith(t1)).toSeq).distinct
-    val sn = (tn +: exp.filter(_.startsWith(tn)).toSeq).distinct
-    val slots: Seq[Seq[String]] =
-      s1 +: phraseToks.slice(1, n - 1).map(Seq(_)) :+ sn
-    // POSTING-granular slot streams (doc_id, ps, slot): the candidate semi
-    // join below probes one row per posting instead of one per occurrence —
-    // on a high-tf code corpus (content ×8 ⇒ tf ≥ 8 for every present
-    // term) that is ≥8× fewer union rows and join probes; the doc-grouped
-    // check below consumes the position arrays without exploding them.
-    val slotDfs = slots.zipWithIndex.map { case (ts, i) =>
-      rowsFor(ts).select(
-          explode(graft.functions.GraftFunctions.decodeDocPositions(
-            col("postings"), col("positions"))).as("e"))
-        .select(col("e.doc_id").as("doc_id"), col("e.ps").as("ps"),
-          lit(i).as("slot"))
-    }
-    // candidate narrowing before the doc-grouped check — AQE turns this into
-    // a broadcast semi join when cand0 is small, so the posting stream is
-    // filtered map-side and only candidate postings reach the shuffle
-    val narrowed = slotDfs.reduce(_ unionByName _)
-      .join(cand0, Seq("doc_id"), "left_semi")
-    // Doc-grouped adjacency check instead of the (doc_id, start)
-    // aggregation: exploding to occurrence rows and bit_or-masking starts
-    // built a hash aggregate over ~one key per OCCURRENCE (measured at the
-    // 480k bench corpus: 11.8M (doc,start) keys, 2.9 s of the 3.8 s
-    // adjacency cost, noop-isolated). Here the POSTING-level rows (doc_id,
-    // positions array, slot) shuffle once on doc_id — packed primitive
-    // arrays, ~tf× fewer rows and bytes — and a
-    // streaming per-doc n-way sorted intersection over slot-normalized
-    // positions answers "∃ start: every slot occupied" with early exit and
-    // zero per-occurrence keys. Explicit partition count (REPARTITION_BY_NUM,
-    // exempt from AQE size coalescing): the check is CPU-per-posting bound
-    // while its shuffle bytes are tiny — the same trap as the build's
-    // encode stage. Works for any slot count (no 63-slot mask cap).
-    val spark = index.sparkSession
-    import spark.implicits._
-    val matched = narrowed
-      .select(col("doc_id"), col("slot"), col("ps"))
-      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
-      .sortWithinPartitions("doc_id")
-      .as[(Long, Int, Array[Int])]
-      .mapPartitions(rows =>
-        CompressedSearchEngine.adjacentDocs(rows, n))
-      .toDF("doc_id")
-    // no .distinct(): every consumer is a left_semi probe or a flag groupBy,
-    // both of which tolerate (and dedup) repeated doc_ids (and this path
-    // already emits each matching doc once)
-    Some(matched)
-  }
-
-  /** P4 phrase candidates: conjunctive tokens, optionally narrowed by the
-    * positional adjacency pre-filter, verified by the raw substring filter
-    * over the corpus (`dbManager.java:324-341` semantics — the verify is
-    * authoritative; adjacency only prunes, so both plans are exact).
-    *
-    * Cost-based plan choice (same crossover logic as the MaxScore gate):
-    * below [[CompressedSearchEngine.PhraseGateDocs]] docs the substring
-    * verify over the conjunctive candidates is a bounded content scan and
-    * the adjacency pass's extra shuffle stages cost more than they save
-    * (measured: 0.7 s vs 2.4 s per phrase at 6·10^4 docs); above it the
-    * candidate content scan grows with the corpus (the one scale-killer of
-    * the round-1 query path) while adjacency shuffles only query-term
-    * postings. The adjacency step applies only under the "simple" analyzer,
-    * whose token positions align with content substrings (the code
-    * analyzer's subtoken expansion breaks alignment). */
+  /** P4 phrase candidates: conjunctive tokens from the index, verified by
+    * the raw substring filter over the corpus (`dbManager.java:324-341`
+    * semantics — the verify is authoritative). GATES.md measured a
+    * positional token-adjacency pre-filter 4.4–14.7× slower than this plan
+    * at every corpus size, so it is the only one. */
   def phraseCandidates(phrase: String, files: DataFrame,
-                       analyzer: String = "simple",
-                       forcePositional: Boolean = false): DataFrame = {
+                       analyzer: String = "simple"): DataFrame = {
     // AsciiContains folds [A-Z] on the fly during the byte search — the
     // verify scan no longer allocates a lowered copy of every candidate's
     // content (guide §4: one fused primitive loop per row)
-    files.join(phraseCandSet(phrase, analyzer, forcePositional),
-        Seq("doc_id"), "left_semi")
+    val cand = candidatesAll(
+      graft.analyze.Analyzer.queryTokens(analyzer, phrase).distinct)
+    files.join(cand, Seq("doc_id"), "left_semi")
       .filter(graft.functions.GraftFunctions.asciiContains(col("content"),
         lit(graft.functions.AsciiLower.lowerString(phrase))))
       .select("doc_id")
-  }
-
-  /** The PRE-verify candidate set of a phrase (index-only — conjunctive
-    * tokens, optionally narrowed by the positional adjacency pre-filter).
-    * Factored out of [[phraseCandidates]] so the boolean path can combine
-    * two phrases' candidate sets and verify both in ONE corpus scan. */
-  private def phraseCandSet(phrase: String, analyzer: String,
-                            forcePositional: Boolean): DataFrame = {
-    val ordered = graft.analyze.Analyzer.queryTokens(analyzer, phrase)
-    val cand0 = candidatesAll(ordered.distinct)
-    val usePositional = analyzer == "simple" &&
-      (forcePositional || nDocs >= CompressedSearchEngine.PhraseGateDocs)
-    if (usePositional) adjacencyCandidates(ordered, cand0).getOrElse(cand0)
-    else cand0
   }
 
   private def scoreCand(terms: Seq[String], cand: Option[DataFrame], k: Int): DataFrame = {
@@ -271,24 +151,20 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   /** Full query lifecycle over the persisted index + corpus (serving path):
     * parse → candidates → BM25 → top-k. Certified against the DuckDB
     * oracles (`q_bm25_*`, `q_phrase*`, `q_bool_*`, `q_paged`, `q_snippets*`)
-    * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec).
-    * `forcePositional` forces the adjacency pre-filter below the phrase
-    * gate (specs and the `q_*_pos` oracles exercise both exact plans). */
+    * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec). */
   def search(raw: String, files: DataFrame, k: Int = 10,
-             analyzer: String = "simple",
-             forcePositional: Boolean = false): DataFrame = {
+             analyzer: String = "simple"): DataFrame = {
     def toks(s: String) = graft.analyze.Analyzer.queryTokens(analyzer, s).distinct
-    def phr(p: String) = phraseCandidates(p, files, analyzer, forcePositional)
     QueryParser.parse(raw) match {
       case Tokens(text) => scoreCand(toks(text), None, k)
-      case Phrase(p)    => scoreCand(toks(p), Some(phr(p)), k)
+      case Phrase(p)    =>
+        scoreCand(toks(p), Some(phraseCandidates(p, files, analyzer)), k)
       case Bool(op, p1, p2) =>
         // ONE shared corpus scan for both phrases' substring verifies (the
         // naive per-phrase phraseCandidates plan scans `files` content
-        // twice — round 3 measured bool_or at 2× phrase from that), and —
-        // non-positional path — ONE shared INDEX scan for both phrases'
-        // conjunctive candidate sets: the union of both phrases' tokens is
-        // decoded once and a single bit_or mask aggregation yields both
+        // twice — round 3 measured bool_or at 2× phrase from that), and ONE
+        // shared INDEX scan for both phrases' conjunctive candidate sets:
+        // the union of both phrases' tokens is decoded once and a single bit_or mask aggregation yields both
         // memberships ("does this doc hold all of phrase i's tokens" = mask
         // covers the phrase's bits), replacing two decode+agg subtrees plus
         // the union/outer-join flag plumbing with one exchange. The
@@ -299,42 +175,30 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
         // candidates∩substring semantics (reference dbManager verify): a
         // doc outside a phrase's candidate set cannot match it even if the
         // raw substring happens to occur.
-        val usePositional = analyzer == "simple" &&
-          (forcePositional || nDocs >= CompressedSearchEngine.PhraseGateDocs)
         val ts1 = toks(p1)
         val ts2 = toks(p2)
         // (doc_id, in1, in2) int flags; rows only for docs in s1 ∪ s2
+        val u = (ts1 ++ ts2).distinct
         val flagged: DataFrame =
-          if (usePositional) {
-            // adjacency pre-filter works per phrase — keep per-set plans
-            val s1 = phraseCandSet(p1, analyzer, forcePositional)
-            val s2 = phraseCandSet(p2, analyzer, forcePositional)
-            s1.select(col("doc_id"), lit(1).as("in1"), lit(0).as("in2"))
-              .unionByName(s2.select(col("doc_id"), lit(0).as("in1"), lit(1).as("in2")))
+          if (u.isEmpty || u.length > 63)
+            // no tokens (empty sets) or a >63-term union: per-set fallback
+            candidatesAll(ts1).select(col("doc_id"), lit(1).as("in1"), lit(0).as("in2"))
+              .unionByName(candidatesAll(ts2)
+                .select(col("doc_id"), lit(0).as("in1"), lit(1).as("in2")))
               .groupBy("doc_id")
               .agg(max(col("in1")).as("in1"), max(col("in2")).as("in2"))
-          } else {
-            val u = (ts1 ++ ts2).distinct
-            if (u.isEmpty || u.length > 63)
-              // no tokens (empty sets) or a >63-term union: per-set fallback
-              candidatesAll(ts1).select(col("doc_id"), lit(1).as("in1"), lit(0).as("in2"))
-                .unionByName(candidatesAll(ts2)
-                  .select(col("doc_id"), lit(0).as("in1"), lit(1).as("in2")))
-                .groupBy("doc_id")
-                .agg(max(col("in1")).as("in1"), max(col("in2")).as("in2"))
-            else {
-              val bit = u.zipWithIndex.map { case (t, i) => t -> (1L << i) }.toMap
-              // empty phrase ⇒ empty candidate set ⇒ never a member
-              val m1 = if (ts1.isEmpty) -1L else ts1.map(bit).reduce(_ | _)
-              val m2 = if (ts2.isEmpty) -1L else ts2.map(bit).reduce(_ | _)
-              def memberOf(m: Long) =
-                if (m == -1L) lit(0)
-                else when(col("tm").bitwiseAND(lit(m)) === m, 1).otherwise(0)
-              decoded(Some(u)).groupBy("doc_id")
-                .agg(bit_or(termMaskCol(u)).as("tm"))
-                .select(col("doc_id"), memberOf(m1).as("in1"), memberOf(m2).as("in2"))
-                .filter(col("in1") === 1 || col("in2") === 1)
-            }
+          else {
+            val bit = u.zipWithIndex.map { case (t, i) => t -> (1L << i) }.toMap
+            // empty phrase ⇒ empty candidate set ⇒ never a member
+            val m1 = if (ts1.isEmpty) -1L else ts1.map(bit).reduce(_ | _)
+            val m2 = if (ts2.isEmpty) -1L else ts2.map(bit).reduce(_ | _)
+            def memberOf(m: Long) =
+              if (m == -1L) lit(0)
+              else when(col("tm").bitwiseAND(lit(m)) === m, 1).otherwise(0)
+            decoded(Some(u)).groupBy("doc_id")
+              .agg(bit_or(termMaskCol(u)).as("tm"))
+              .select(col("doc_id"), memberOf(m1).as("in1"), memberOf(m2).as("in2"))
+              .filter(col("in1") === 1 || col("in2") === 1)
           }
         def lowered(p: String) = lit(graft.functions.AsciiLower.lowerString(p))
         // zero-allocation case-folding byte search (graft.functions
@@ -498,87 +362,6 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
 object CompressedSearchEngine {
 
-  /** Streaming per-document adjacency check over doc_id-sorted posting rows
-    * `(doc_id, slot, positions)`: emits each doc_id for which some start
-    * position has EVERY slot i occupied at start + i — i.e. the n-way
-    * sorted intersection of the slot-normalized (pos − slot) position sets
-    * is non-empty (early exit on first witness). One document's arrays are
-    * live at a time; input order within a document is irrelevant. */
-  private[search] def adjacentDocs(rows: Iterator[(Long, Int, Array[Int])],
-                                   n: Int): Iterator[Long] = new Iterator[Long] {
-    private var pending: (Long, Int, Array[Int]) = null
-    private var nextDoc = 0L
-    private var hasNextDoc = false
-
-    private def docMatches(perSlot: Array[scala.collection.mutable.ArrayBuffer[Array[Int]]]): Boolean = {
-      val norm = new Array[Array[Int]](n)
-      var i = 0
-      while (i < n) {
-        val bufs = perSlot(i)
-        if (bufs == null) return false // a slot with no occurrences
-        var tot = 0
-        bufs.foreach(tot += _.length)
-        val a = new Array[Int](tot)
-        var o = 0
-        bufs.foreach { b =>
-          var j = 0
-          while (j < b.length) { a(o) = b(j) - i; o += 1; j += 1 }
-        }
-        if (a.isEmpty) return false
-        java.util.Arrays.sort(a)
-        norm(i) = a
-        i += 1
-      }
-      // n-way sorted intersection, pointers advance to the running max
-      val ptr = new Array[Int](n)
-      var target = norm(0)(0)
-      var agree = 0 // how many consecutive arrays currently sit on target
-      var k = 0
-      while (true) {
-        val a = norm(k)
-        var p = ptr(k)
-        while (p < a.length && a(p) < target) p += 1
-        if (p == a.length) return false
-        ptr(k) = p
-        if (a(p) == target) {
-          agree += 1
-          if (agree == n) return true
-        } else { // a(p) > target: restart agreement from this array
-          target = a(p)
-          agree = 1
-        }
-        k = (k + 1) % n
-      }
-      false // unreachable
-    }
-
-    private def advance(): Unit = {
-      hasNextDoc = false
-      while (!hasNextDoc && (pending != null || rows.hasNext)) {
-        var cur = if (pending != null) pending else rows.next()
-        pending = null
-        val doc = cur._1
-        val perSlot = new Array[scala.collection.mutable.ArrayBuffer[Array[Int]]](n)
-        var done = false
-        while (!done) {
-          val slot = cur._2
-          if (perSlot(slot) == null)
-            perSlot(slot) = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
-          perSlot(slot) += cur._3
-          if (rows.hasNext) {
-            val nx = rows.next()
-            if (nx._1 == doc) cur = nx
-            else { pending = nx; done = true }
-          } else done = true
-        }
-        if (docMatches(perSlot)) { nextDoc = doc; hasNextDoc = true }
-      }
-    }
-
-    advance()
-    def hasNext: Boolean = hasNextDoc
-    def next(): Long = { val d = nextDoc; advance(); d }
-  }
   /** Corpus size above which adaptive MaxScore pruning pays for its extra
     * driver round-trips (see [[CompressedSearchEngine.searchPruned]]).
     *
@@ -590,31 +373,4 @@ object CompressedSearchEngine {
     * crossover sits around 5·10^7–10^8 docs, so the default gate is 64M
     * (the round-2 10M default was an unmeasured extrapolation). */
   val PruneGateDocs: Long = 64_000_000L
-
-  /** Dictionary-expansion cap for the phrase adjacency pre-filter: if a
-    * boundary token expands to more terms than this (e.g. a one-letter
-    * token), the pre-filter is skipped and the plain candidate-set plan runs
-    * (both plans are exact). */
-  val MaxExpandTerms: Int = 1000
-
-  /** Corpus size above which the phrase path switches from the
-    * substring-scan-over-candidates plan to the positional adjacency
-    * pre-filter (see [[CompressedSearchEngine.phraseCandidates]]).
-    *
-    * MEASURED (GATES.md ladder, 32 cores; re-run in round 4 after the
-    * candidate semi-join fix in [[adjacencyCandidates]]): substring
-    * 3.17 / 4.84 / 9.70 s at 1.2M / 4.8M / 9.6M docs vs positional
-    * 13.8 / 71.2 / 121.3 s (r3 pre-fix: 16.4 / 106 / 256 — the fix removed
-    * the shuffle-spill cliff, 2.1× at 9.6M, and the top step is sub-linear
-    * now). The substring verify scans candidate CONTENT at memchr speed
-    * while the adjacency pass shuffles the candidate docs' per-OCCURRENCE
-    * rows of the query/slot terms — on a high-tf code corpus the
-    * conjunctive candidates hold most of their query terms' occurrences,
-    * so the gap (4.4–14.7×) is structural, not a plan bug. No crossover on
-    * this corpus shape: the default stays the substring plan at every size
-    * (gate = ∞). The positional plan remains available (`forcePositional`)
-    * for corpora where content is large relative to
-    * query-term postings — long documents, rare phrase tokens — which the
-    * replicated code corpus cannot represent. See GATES.md. */
-  val PhraseGateDocs: Long = Long.MaxValue
 }

@@ -6,11 +6,10 @@ import org.apache.spark.sql.types.StructType
 /** Thin table-I/O seam between the engine and the table format (SURVEY.md
   * §7.1 step 1). The north rule names Iceberg tables; this sandbox has no
   * Iceberg jar, so the bundled implementation is Parquet directories with
-  * the same contract surface: overwrite-publish, conflict-free append, and
-  * snapshot listing. Swapping in Iceberg is implementing this trait with
-  * catalog calls (`spark.read.table` / `writeTo(...).append()` /
-  * `.snapshots` metadata table) and passing it to the build — a config
-  * change for every caller, no engine edits.
+  * the same contract surface: read, overwrite-publish and conflict-free
+  * append. Swapping in Iceberg is implementing this trait with catalog
+  * calls (`spark.read.table` / `writeTo(...).append()`) and passing it to
+  * the build — a config change for every caller, no engine edits.
   */
 trait TableIO {
   /** Read the table's current snapshot; with a `schema`, the table is read
@@ -27,12 +26,6 @@ trait TableIO {
 
   /** Conflict-free append of one batch (Iceberg: fast-append snapshot). */
   def append(df: DataFrame, table: String): Unit
-
-  /** Committed snapshot identifiers, oldest first (Iceberg: the snapshots
-    * metadata table; Parquet: committed part-files as the unit of commit). */
-  def listSnapshots(spark: SparkSession, table: String): Seq[String]
-
-  def exists(table: String): Boolean
 }
 
 /** Parquet-directory implementation: a "table" is a directory path; commits
@@ -48,17 +41,4 @@ object ParquetTableIO extends TableIO {
 
   def append(df: DataFrame, table: String): Unit =
     df.write.mode("append").parquet(table)
-
-  def listSnapshots(spark: SparkSession, table: String): Seq[String] = {
-    val dir = java.nio.file.Paths.get(table)
-    if (!java.nio.file.Files.isDirectory(dir)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(dir).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.endsWith(".parquet") || n.startsWith("part-"))
-      .toSeq.sorted
-  }
-
-  def exists(table: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(table))
 }

@@ -13,7 +13,7 @@ class ServeSpec extends SparkSpec {
 
   /** One published checkpoint; each test opens its own session on it. */
   private lazy val dir = {
-    val d = Files.createTempDirectory("graft-serve").toString
+    val d = tmpDir("graft-serve")
     checkpoint.CheckpointedBuild.run(files, d, nBuckets = 2)
     d
   }
@@ -83,7 +83,7 @@ class ServeSpec extends SparkSpec {
   }
 
   test("concurrent HTTP clients get the sequential responses; no query-log append is lost") {
-    val logPath = Files.createTempDirectory("graft-serve-log").toString + "/querylog"
+    val logPath = tmpDir("graft-serve-log") + "/querylog"
     // a load that races the first append sees only the writer's _temporary
     Files.createDirectories(Paths.get(logPath, "_temporary", "0"))
     assert(QueryLog.load(spark, logPath).count() === 0)

@@ -7,13 +7,10 @@ import java.nio.file.Files
 
 class CheckpointedBuildSpec extends SparkSpec {
 
-  private def tmpDir(tag: String): String =
-    Files.createTempDirectory(s"graft-ckpt-$tag").toString
-
   private lazy val files = Corpus.files(spark, "/root/testdata/sf0.001").cache()
 
   test("fresh build publishes manifests, metrics and a queryable index") {
-    val out = tmpDir("fresh")
+    val out = tmpDir("graft-ckpt-fresh")
     val stats = CheckpointedBuild.run(files, out, nBuckets = 4)
     assert(stats.nDocs === files.count())
     val ms = CheckpointedBuild.readManifests(out)
@@ -29,8 +26,8 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("resume after mid-build failure == fresh build") {
-    val freshDir = tmpDir("a")
-    val resumeDir = tmpDir("b")
+    val freshDir = tmpDir("graft-ckpt-a")
+    val resumeDir = tmpDir("graft-ckpt-b")
     CheckpointedBuild.run(files, freshDir, nBuckets = 4)
     // interrupted run: dies after 2 buckets
     intercept[CheckpointedBuild.InjectedFailure] {
@@ -54,12 +51,12 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("resume == fresh at every possible failure point") {
-    val freshDir = tmpDir("allfresh")
+    val freshDir = tmpDir("graft-ckpt-allfresh")
     CheckpointedBuild.run(files, freshDir, nBuckets = 3)
     val want = CheckpointedBuild.load(spark, freshDir)
       .decoded(None).orderBy("term", "doc_id").collect().toSeq
     for (failAt <- 0 to 2) {
-      val dir = tmpDir(s"fail$failAt")
+      val dir = tmpDir(s"graft-ckpt-fail$failAt")
       intercept[CheckpointedBuild.InjectedFailure] {
         CheckpointedBuild.run(files, dir, nBuckets = 3, failAfterBuckets = failAt)
       }
@@ -71,8 +68,8 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("concurrent bucket jobs == sequential build") {
-    val seqDir = tmpDir("seq")
-    val concDir = tmpDir("conc")
+    val seqDir = tmpDir("graft-ckpt-seq")
+    val concDir = tmpDir("graft-ckpt-conc")
     CheckpointedBuild.run(files, seqDir, nBuckets = 4, bucketConc = 1)
     CheckpointedBuild.run(files, concDir, nBuckets = 4, bucketConc = 4)
     val a = CheckpointedBuild.load(spark, seqDir)
@@ -86,7 +83,7 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("resume invalidates buckets whose input slice changed (snapshot check)") {
-    val dir = tmpDir("stale")
+    val dir = tmpDir("graft-ckpt-stale")
     CheckpointedBuild.run(files, dir, nBuckets = 4)
     val msBefore = CheckpointedBuild.readManifests(dir)
     // the corpus changes under the checkpoint dir: one doc's content edited
@@ -98,7 +95,7 @@ class CheckpointedBuildSpec extends SparkSpec {
       .withColumn("sha", sha2(col("content"), 256))
     // resuming into the same dir must rebuild the touched bucket, not skip it
     CheckpointedBuild.run(filesB, dir, nBuckets = 4)
-    val freshB = tmpDir("staleFresh")
+    val freshB = tmpDir("graft-ckpt-staleFresh")
     CheckpointedBuild.run(filesB, freshB, nBuckets = 4)
     val got = CheckpointedBuild.load(spark, dir)
       .decoded(None).orderBy("term", "doc_id").collect().toSeq
@@ -113,7 +110,7 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("incremental append rebuilds only the appended range's buckets") {
-    val dir = tmpDir("incr")
+    val dir = tmpDir("graft-ckpt-incr")
     val b = files.agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     val width = math.max(1L, (hi - lo + 4) / 4)
@@ -149,7 +146,7 @@ class CheckpointedBuildSpec extends SparkSpec {
         s"$dir/segments/bucket=$i")) === segMtimes(i), s"bucket $i segments")
     }
     // appended result == fresh full build
-    val freshDir = tmpDir("incrFresh")
+    val freshDir = tmpDir("graft-ckpt-incrFresh")
     CheckpointedBuild.run(files, freshDir, nBuckets = 4, idDomain = domain)
     assert(CheckpointedBuild.load(spark, dir)
       .decoded(None).orderBy("term", "doc_id").collect().toSeq ===
@@ -158,14 +155,14 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("streaming ingest (foreachBatch appends) == fresh batch build") {
-    val freshDir = tmpDir("streamfresh")
+    val freshDir = tmpDir("graft-ckpt-streamfresh")
     CheckpointedBuild.run(files, freshDir, nBuckets = 4)
     val want = CheckpointedBuild.load(spark, freshDir)
       .decoded(None).orderBy("term", "doc_id").collect().toSeq
 
-    val src = tmpDir("streamsrc")
-    val store = s"${tmpDir("streamstore")}/docs"
-    val out = tmpDir("streamidx")
+    val src = tmpDir("graft-ckpt-streamsrc")
+    val store = s"${tmpDir("graft-ckpt-streamstore")}/docs"
+    val out = tmpDir("graft-ckpt-streamidx")
     val b = files.agg(min("doc_id"), max("doc_id")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     val cut = lo + math.max(1L, (hi - lo + 2) / 2)
@@ -184,13 +181,13 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("resume with a smaller nBuckets cleans orphan buckets (no double merge)") {
-    val dir = tmpDir("shrink")
+    val dir = tmpDir("graft-ckpt-shrink")
     CheckpointedBuild.run(files, dir, nBuckets = 6)
     assert(CheckpointedBuild.readManifests(dir).length === 6)
     val stats = CheckpointedBuild.run(files, dir, nBuckets = 4)
     assert(stats.nDocs === files.count()) // no double count from orphans
     assert(CheckpointedBuild.readManifests(dir).length === 4)
-    val freshDir = tmpDir("shrinkFresh")
+    val freshDir = tmpDir("graft-ckpt-shrinkFresh")
     CheckpointedBuild.run(files, freshDir, nBuckets = 4)
     assert(CheckpointedBuild.load(spark, dir)
       .decoded(None).orderBy("term", "doc_id").collect().toSeq ===
@@ -199,7 +196,7 @@ class CheckpointedBuildSpec extends SparkSpec {
   }
 
   test("checkpointed search equals direct in-memory build") {
-    val out = tmpDir("eq")
+    val out = tmpDir("graft-ckpt-eq")
     CheckpointedBuild.run(files, out, nBuckets = 3)
     val ck = CheckpointedBuild.load(spark, out)
     val t = graft.index.IndexTables.build(files)

@@ -5,10 +5,9 @@ import graft.index.{IndexTables, InvertedIndex, Stats}
 import graft.oracle.LocalOracle
 import org.apache.spark.sql.functions._
 
-/** The positional adjacency pre-filter must be invisible: phrase results
-  * through the compressed engine (adjacency + substring verify) must equal
-  * the substring-only baseline (the in-memory LocalOracle) on corpora built
-  * to break naive token-adjacency:
+/** Phrase semantics: results through the compressed engine (conjunctive
+  * candidates from the index + substring verify) must equal the in-memory
+  * LocalOracle on docs built to break a naive token-adjacency reading:
   *
   *  - a match can start MID-TOKEN ("rehash join" contains "hash join" while
   *    the tokens are [rehash, join]),
@@ -17,8 +16,10 @@ import org.apache.spark.sql.functions._
   *  - a doc with the substring but MISSING an exact token stays excluded
   *    (the reference ANDs the substring with conjunctive token candidates,
   *    `dbManager.java:250-256` + `:324-341`).
+  *
+  * It also certifies the stored positions column against the analyzer.
   */
-class PhrasePositionalSpec extends SparkSpec {
+class PhraseSpec extends SparkSpec {
   import spark.implicits._
 
   private val docs = Seq(
@@ -37,9 +38,8 @@ class PhrasePositionalSpec extends SparkSpec {
     new CompressedSearchEngine(idx, t.nDocs, t.avgdl)
   }
 
-  test("phrase candidates: positional path == substring baseline on " +
-      "boundary-adversarial docs") {
-    val got = ce.phraseCandidates("hash join", files, forcePositional = true)
+  test("phrase candidates == substring baseline on boundary-adversarial docs") {
+    val got = ce.phraseCandidates("hash join", files)
       .collect().map(_.getLong(0)).sorted.toSeq
     val want = LocalOracle.phraseCandidates(docs, "simple", "hash join")
       .toSeq.sorted
@@ -47,28 +47,8 @@ class PhrasePositionalSpec extends SparkSpec {
     assert(got === Seq(0L, 1L, 3L))
   }
 
-  test("adjacency pre-filter alone is a sound superset (keeps every " +
-      "substring match, drops the non-adjacent doc)") {
-    val adj = ce.adjacencyCandidates(Seq("hash", "join"),
-        ce.candidatesAll(Seq("hash", "join"))).get
-      .collect().map(_.getLong(0)).toSet
-    assert(Set(0L, 1L, 3L).subsetOf(adj))
-    assert(!adj.contains(2L))
-    assert(!adj.contains(5L))
-  }
-
-  test("full phrase + boolean search: compressed positional == baseline") {
-    for (q <- Seq("\"hash join\"", "\"hash join\" AND \"join beta\"",
-        "\"hash join\" OR \"nothing to\"", "\"hash join\" NOT \"rehash\"")) {
-      val got = ce.search(q, files, 10, forcePositional = true).collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val want = LocalOracle.search(docs, "simple", q, 10)
-      assert(got === want, s"query [$q]")
-    }
-  }
-
-  test("full phrase + boolean search: compressed NON-positional (fused " +
-      "single-scan boolean candidates, r6) == baseline") {
+  test("full phrase + boolean search (fused single-scan boolean " +
+      "candidates) == baseline") {
     for (q <- Seq("\"hash join\"", "\"hash join\" AND \"join beta\"",
         "\"hash join\" OR \"nothing to\"", "\"hash join\" NOT \"rehash\"",
         "\"hash join\" AND \"hash join\"", "\"absent\" OR \"hash join\"",
