@@ -45,7 +45,7 @@ object Plans {
           .filter(col("lang") === "scala").select("doc_id", "lang", "text")),
       ("BM25 over the compressed block-max index",
         "Expect: parquet scan of the index with `PushedFilters: [In(term, …)]` " +
-          "(term-range file pruning via min/max stats), generate/explode of " +
+          "(row-group pruning via min/max stats), generate/explode of " +
           "decoded postings, hash agg, `TakeOrderedAndProject`.",
         ceng.searchTopK(Seq("merge", "sort", "window"))),
       ("Boolean query over the compressed engine (shared verify scan)",

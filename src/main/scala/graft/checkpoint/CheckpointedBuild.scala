@@ -329,9 +329,7 @@ object CheckpointedBuild {
       segAll.select("term", "seg", "pos", "n"), avgdl)
     // Output partition count from the manifests' byte sums (segment bytes ≈
     // final payload bytes: the merge byte-concatenates the same streams) —
-    // free metadata, so the write path needs no persist and no byte agg
-    // (see InvertedIndex.write: the columnar-cache materialization of 4 MB
-    // chunk payloads was pure GC pressure in the timed build).
+    // free metadata, so the write runs no byte-agg job (InvertedIndex.write).
     val idxBytes = ms.map(_.bytes).sum
     InvertedIndex.write(index, s"$outDir/index",
       nPartitions = InvertedIndex.writeParts(spark, idxBytes), io = io)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions.call_function
@@ -197,36 +198,30 @@ object GraftFunctions {
   val SimHashName = "graft_simhash"
   val FingerprintName = "graft_fingerprint"
 
+  /** Define every Graft function on `spark`'s session, skipping the names
+    * it already has: engines and posting builders call this on every
+    * construction, and a replace would rewrite the registry under serving
+    * threads that are resolving these names. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiContainsName, exprs => AsciiContains(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CosineSimName, exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SignBucketName, exprs => SignBucket(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinHashSigsName, exprs => MinHashSigs(exprs(0),
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimHashName, exprs => SimHashVal(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FingerprintName, exprs => FingerprintMin(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiLowerName, exprs => AsciiLower(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      AsciiTokensName, exprs => AsciiTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      CompactTokensName, exprs => CompactTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodePostingsName, exprs => DecodePostings(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodeDocPositionsName,
-      exprs => DecodeDocPositions(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DecodeBlocksName,
-      exprs => DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    def define(name: String, builder: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    define(AsciiContainsName, exprs => AsciiContains(exprs(0), exprs(1)))
+    define(CosineSimName, exprs => CosineSim(exprs(0), exprs(1)))
+    define(SignBucketName, exprs => SignBucket(exprs(0),
+      exprs(1).eval().asInstanceOf[Int]))
+    define(MinHashSigsName, exprs => MinHashSigs(exprs(0),
+      exprs(1).eval().asInstanceOf[Int]))
+    define(SimHashName, exprs => SimHashVal(exprs.head))
+    define(FingerprintName, exprs => FingerprintMin(exprs.head))
+    define(AsciiLowerName, exprs => AsciiLower(exprs.head))
+    define(AsciiTokensName, exprs => AsciiTokens(exprs.head))
+    define(CompactTokensName, exprs => CompactTokens(exprs.head))
+    define(DecodePostingsName, exprs => DecodePostings(exprs.head))
+    define(DecodeDocPositionsName, exprs => DecodeDocPositions(exprs(0), exprs(1)))
+    define(DecodeBlocksName,
+      exprs => DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)))
   }
 
   /** `ascii_lower(c)` — caller must have [[register]]ed on the session that

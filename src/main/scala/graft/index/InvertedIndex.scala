@@ -46,8 +46,10 @@ final case class SegmentRow(term: String, salt: Long, seg: Array[Byte],
   *
   * Final layout: `index(term, df, chunk_id, first_doc_id, last_doc_id, n,
   * max_weight, blocks, postings, positions)`; [[write]] range-partitions by
-  * term so parquet min/max stats prune segment files by query term at read
-  * time.
+  * term into [[writeParts]] files, so each file holds one term range and
+  * parquet min/max stats prune row groups by query term inside each scan
+  * task (they do not prune files at planning: every query opens every
+  * file).
   */
 object InvertedIndex {
   val ChunkSize = 1 << 17
@@ -250,23 +252,31 @@ object InvertedIndex {
     * and profiled 10.2 s of GC in the write stage (the same
     * accumulate-big-arrays storm the old persist path had); at 32
     * partitions the same data streams through short tasks with zero GC.
-    * On a wide cluster the byte term dominates and nothing changes. */
-  def writeParts(spark: SparkSession, payloadBytes: Long): Int =
-    math.max(math.max(32L, 2L * spark.sparkContext.defaultParallelism),
-      (payloadBytes + WriteTargetBytes - 1) / WriteTargetBytes).toInt
+    * On a wide cluster the byte term dominates and nothing changes.
+    * Saturating: no byte count overflows the ceiling or the Int result.
+    * Query scans do not pay a task per small file: GraftSession's open
+    * cost packs them into one wave. */
+  def writeParts(spark: SparkSession, payloadBytes: Long): Int = {
+    val byBytes = payloadBytes / WriteTargetBytes +
+      (if (payloadBytes % WriteTargetBytes > 0) 1 else 0)
+    math.min(Int.MaxValue.toLong, math.max(
+      math.max(32L, 2L * spark.sparkContext.defaultParallelism), byBytes)).toInt
+  }
 
   /** Persist with explicit range partitioning of terms (north rule): each
-    * output file covers a contiguous term range → min/max parquet stats give
-    * query-term file pruning, and heavy terms are spread over the range
-    * space rather than hashed into one file.
+    * output file covers a contiguous term range, and heavy terms are spread
+    * over the range space rather than hashed into one file. Every query
+    * still opens every file; parquet min/max stats prune row groups inside
+    * a task, not files at planning.
     *
     * `nPartitions` ≤ 0 → auto-size from the index's payload bytes (one cheap
-    * agg over the already-persisted chunks): ceil(bytes / 128 MB), min 32 —
-    * a fixed default under-splits a 100×-scale index (VERDICT r4 #6: the lc
-    * forensics recorded reduce-stage skew ~10 on the fixed-32 write, heavy
-    * top-term range vs tiny median). Range partitioning is on
-    * (term, chunk_id), so a hot term's many chunks span MULTIPLE output
-    * partitions — more partitions directly split the hottest term range. */
+    * agg over the already-persisted chunks) by [[writeParts]]: ceil(bytes /
+    * 128 MB), min max(32, 2×cores) — a fixed default under-splits a
+    * 100×-scale index (VERDICT r4 #6: the lc forensics recorded reduce-stage
+    * skew ~10 on the fixed-32 write, heavy top-term range vs tiny median).
+    * Range partitioning is on (term, chunk_id), so a hot term's many chunks
+    * span MULTIPLE output partitions — more partitions directly split the
+    * hottest term range. */
   def write(index: DataFrame, path: String, nPartitions: Int = -1,
             io: graft.sources.TableIO = graft.sources.ParquetTableIO): Unit = {
     // Row groups sized to ONE chunk row (ChunkTargetBytes): parquet scans

@@ -63,9 +63,10 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   /** Batch multi-query search — the offline query-replay / relevance-eval
     * shape: score N queries in ONE index scan. The (qid, term) queries
     * table is broadcast into the decoded postings (a single
-    * `In(term, ∪ terms)` parquet scan, so term-range file pruning is paid
-    * once for the whole batch), scores aggregate per (qid, doc_id) with
-    * map-side partial aggregation, and per-query top-k comes from one
+    * `In(term, ∪ terms)` parquet scan, so opening the index files and
+    * pruning their row groups is paid once for the whole batch), scores
+    * aggregate per (qid, doc_id) with map-side partial aggregation, and
+    * per-query top-k comes from one
     * window pass over qid partitions. At scale this replaces Q sequential
     * index scans with one: shuffle volume is Σ per-query scored postings
     * and the scan/decode cost is shared. Rank-identical per qid to

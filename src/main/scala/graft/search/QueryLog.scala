@@ -50,7 +50,9 @@ object QueryLog {
     * a non-parquet TableIO must round-trip (ADVICE r2). The schema is
     * fixed, not inferred: a load that races the first append finds a log
     * directory holding only the writer's `_temporary`, and reads it as an
-    * empty log. */
+    * empty log. Every append adds one small file; a session built by
+    * [[graft.GraftSession]] packs them into about one wave of scan tasks,
+    * so a long session's log does not cost a task per logged query. */
   def load(spark: SparkSession, path: String,
            io: graft.sources.TableIO = graft.sources.ParquetTableIO): DataFrame =
     io.read(spark, path, Some(Schema))

@@ -70,6 +70,18 @@ class ExtrasSpec extends SparkSpec {
     assert(got.map(_.getLong(1)).toSeq === got.map(_.getLong(1)).toSeq.sorted.reverse)
   }
 
+  test("query log: a log of many small appends is read in one wave of tasks") {
+    import graft.search.QueryLog
+    val path = tmpDir("graft-querylog") + "/log"
+    (1 to 10).foreach(i => QueryLog.append(spark, path, Seq(s"query $i")))
+    // read with the engine sessions' scan settings, not the test session's
+    withConf(GraftSession.scanConf) {
+      val log = QueryLog.load(spark, path)
+      assert(log.count() === 10)
+      assert(log.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
+    }
+  }
+
   test("pagination: pages tile the top-k, pages past the end are empty") {
     val all = e.search("merge sort window", t.files, 9).collect().toSeq
     val paged = (1 to 3).flatMap(p =>

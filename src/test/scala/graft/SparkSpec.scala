@@ -19,6 +19,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
+  /** Run `body` with `conf` set on the shared session, then restore the
+    * previous values. */
+  def withConf[T](conf: Map[String, String])(body: => T): T = {
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
   override def afterAll(): Unit =
     try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
     finally super.afterAll()

@@ -20,6 +20,16 @@ class CheckpointedBuildSpec extends SparkSpec {
     assert(ms.forall(m => m.sha_ok === m.rows)) // sha256 invariant per row
     assert(ms.map(_.postings).sum ===
       graft.index.Stats.tf(files).count())
+    // the index is written in at most the files its payload bytes ask for
+    // (range bounds come from a row sample: a small index can fill fewer)
+    val indexFiles = new java.io.File(s"$out/index").list().count(_.endsWith(".parquet"))
+    assert(indexFiles > spark.sparkContext.defaultParallelism)
+    assert(indexFiles <= graft.index.InvertedIndex.writeParts(spark, ms.map(_.bytes).sum))
+    // ... and an engine session scans those small files in one wave of tasks
+    withConf(graft.GraftSession.scanConf) {
+      assert(spark.read.parquet(s"$out/index").rdd.getNumPartitions <=
+        spark.sparkContext.defaultParallelism)
+    }
     val eng = CheckpointedBuild.load(spark, out)
     val hits = eng.searchTopK(Seq("merge", "sort"), 10).collect()
     assert(hits.nonEmpty)

@@ -182,4 +182,25 @@ class CompressedIndexSpec extends SparkSpec {
     assert(allPos.map(_.positions.toSeq).toSeq === pps.map(_.positions.toSeq))
     assert(chunks.forall(c => c.first_doc_id <= c.last_doc_id))
   }
+
+  test("writeParts: floor of max(32, 2 x cores), ceil(bytes / 128 MB) above, never overflows") {
+    val floor = math.max(32, 2 * spark.sparkContext.defaultParallelism)
+    val mb = 1L << 20
+    val target = InvertedIndex.WriteTargetBytes
+    assert(target === 128 * mb)
+    assert(InvertedIndex.writeParts(spark, 0L) === floor)
+    assert(InvertedIndex.writeParts(spark, 17L * mb / 10) === floor)
+    assert(InvertedIndex.writeParts(spark, 64 * target + 1) === math.max(floor, 65))
+    // sizes no manifest reaches saturate instead of wrapping
+    assert(InvertedIndex.writeParts(spark, 1L << 60) === Int.MaxValue)
+    assert(InvertedIndex.writeParts(spark, Long.MaxValue) === Int.MaxValue)
+    for (bytes <- (0L to 200L).map(i => i * i * i * 7919L * 1024L) ++
+        Seq(target - 1, target, target + 1, 1L << 40)) {
+      val parts = InvertedIndex.writeParts(spark, bytes)
+      assert(parts >= floor, s"$bytes bytes")
+      assert(bytes <= parts * target, s"$bytes bytes")
+      // no more parts than the byte bound needs, above the floor
+      assert(parts == floor || bytes > (parts - 1) * target, s"$bytes bytes")
+    }
+  }
 }
