@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared SparkSession tuning for the engine's mains.
+/** Shared SparkSession tuning for the engine's mains and its test suites.
   *
   * The local-filesystem settings matter for measured scaling on a single
   * box: Hadoop's checksummed LocalFileSystem shells out (fork+exec `chmod`)
@@ -13,37 +13,32 @@ import org.apache.spark.sql.SparkSession
   * are harmless.
   */
 object GraftSession {
-  /** File-scan split settings of every engine session.
-    *
-    * Split granularity aligned with the index's 4 MB chunk payload
-    * (InvertedIndex.ChunkTargetBytes): a 3-term BM25 query reads ~tens of
-    * MB of term-pruned chunk rows, and at the 128 MB default that whole
-    * decode+partial-agg ran as 1-2 tasks (measured 1.6 s, near-serial, at
-    * the 480k-file bench corpus; ~0.5 s once split). Scale-adaptive by
-    * construction: split count follows the bytes a query actually scans,
-    * so big batch scans still get big-task amortization while point
-    * queries fan out. The index-build session overrides the split size
-    * explicitly (16 MB, IndexBuildJob) — build scans are throughput-, not
-    * latency-bound.
-    *
-    * Open cost at 1/32 of the split, Spark's own default ratio (4 MB to
-    * 128 MB): at Spark's 4 MB default, every file cost a whole split, so a
-    * scan ran one task per file however small — a 1.7 MB index written as
-    * 32 files, the serving corpus and the query log (one file per logged
-    * query) each paid a task per file. Spark packs files into
-    * splits of at least total/cores bytes (counting the open cost), so
-    * small inputs now scan in about one wave while an input of more than
-    * cores × 4 MB keeps its 4 MB splits. */
-  val scanConf: Map[String, String] = Map(
-    "spark.sql.files.maxPartitionBytes" -> (4L << 20).toString,
-    "spark.sql.files.openCostInBytes" -> (128L << 10).toString)
-
   def builder(app: String, parallelism: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$parallelism]")
       .appName(app)
       .config("spark.sql.shuffle.partitions", parallelism.toString)
-      .config(scanConf)
+      // File-scan splits. Split granularity aligned with the index's 4 MB chunk payload
+      // (InvertedIndex.ChunkTargetBytes): a 3-term BM25 query reads ~tens of
+      // MB of term-pruned chunk rows, and at the 128 MB default that whole
+      // decode+partial-agg ran as 1-2 tasks (measured 1.6 s, near-serial, at
+      // the 480k-file bench corpus; ~0.5 s once split). Scale-adaptive by
+      // construction: split count follows the bytes a query actually scans,
+      // so big batch scans still get big-task amortization while point
+      // queries fan out. The index-build session overrides the split size
+      // explicitly (16 MB, IndexBuildJob) — build scans are throughput-, not
+      // latency-bound.
+      //
+      // Open cost at 1/32 of the split, Spark's own default ratio (4 MB to
+      // 128 MB): at Spark's 4 MB default, every file cost a whole split, so a
+      // scan ran one task per file however small — a 1.7 MB index written as
+      // 32 files, the serving corpus and the query log (one file per logged
+      // query) each paid a task per file. Spark packs files into
+      // splits of at least total/cores bytes (counting the open cost), so
+      // small inputs now scan in about one wave while an input of more than
+      // cores × 4 MB keeps its 4 MB splits.
+      .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
+      .config("spark.sql.files.openCostInBytes", (128L << 10).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

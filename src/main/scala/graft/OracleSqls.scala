@@ -8,7 +8,8 @@ package graft
   * both sides, deterministic ORDER BY where order is part of the contract.
   *
   * The corpus derivation here mirrors [[graft.corpus.Corpus.files]] exactly;
-  * the tokenizer mirrors [[graft.index.Stats.tokens]] ("simple" analyzer).
+  * the tokenizer mirrors the one [[graft.index.Stats.postings]] runs for
+  * the index build ("simple" analyzer: graft.functions.CompactTokens).
   */
 object OracleSqls {
 

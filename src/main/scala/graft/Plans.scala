@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.ExplainMode
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex}
+import graft.index.InvertedIndex
 import graft.search.CompressedSearchEngine
 
 /** Dumps `explain("formatted")` for the load-bearing physical plans into
@@ -28,14 +28,13 @@ object Plans {
     spark.sparkContext.setLogLevel("WARN")
 
     val files = Corpus.files(spark, sfDir)
-    val t = IndexTables.build(files)
+    val mem = CompressedSearchEngine.build(files)
     val toksP = graft.index.Stats.postings(files)
-    val idx = InvertedIndex.build(toksP, t.nDocs, t.avgdl)
     // write + re-read so the query plans show the real parquet scan
     val idxPath = "/tmp/graft_plans_index"
-    InvertedIndex.write(idx, idxPath)
+    InvertedIndex.write(mem.index, idxPath)
     val ceng = new CompressedSearchEngine(
-      InvertedIndex.load(spark, idxPath), t.nDocs, t.avgdl)
+      InvertedIndex.load(spark, idxPath), mem.nDocs, mem.avgdl)
 
     val sections = Seq(
       ("Corpus scan with predicate + projection",
@@ -70,7 +69,7 @@ object Plans {
           "rows, and no map-side sort) and a single `Exchange " +
           "hashpartitioning(term, salt)` feeding an in-partition sort + " +
           "MapPartitions (the streaming var-byte segment encoder).",
-        InvertedIndex.segments(toksP, t.nDocs)),
+        InvertedIndex.segments(toksP, mem.nDocs)),
       ("Index build stage 2: term-keyed merge into chunks",
         "Expect: ONE `Exchange hashpartitioning(term, N)` (explicit count — " +
           "exempt from AQE size-based coalescing, the merge is CPU-per-" +
@@ -79,7 +78,7 @@ object Plans {
           "time, chunk rows emitted as they fill — no per-posting objects, " +
           "no per-term aggregate buffers).",
         InvertedIndex.mergeSegments(
-          InvertedIndex.segments(toksP, t.nDocs), t.avgdl)),
+          InvertedIndex.segments(toksP, mem.nDocs), mem.avgdl)),
       ("Batch multi-query search (offline query replay)",
         "Expect: ONE index parquet scan with `PushedFilters: [In(term, …)]` " +
           "covering the whole batch's terms, the (qid, term) queries table " +

@@ -14,8 +14,8 @@ import graft.search.QueryLog
   * is loaded ONCE (one engine over the index's parquet files, which every
   * query scans with its own pushed-down term filter; the index is not
   * cached), the display corpus is persisted once, in the partitions it is
-  * read in ([[GraftSession.scanConf]] packs a small corpus's files into
-  * about one wave of tasks) — per-query work is only the query's own plan.
+  * read in (the open cost [[GraftSession.builder]] sets packs a small
+  * corpus's files into about one wave of tasks) — per-query work is only the query's own plan.
   * Every query is appended to the query log (S10) before it is searched, so
   * `:suggest` reflects the session's history like the reference's
   * suggestion endpoint. A session is safe to call from several threads (the

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex, Stats}
+import graft.index.Stats
 import graft.search.CompressedSearchEngine
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -15,30 +15,30 @@ import graft.search.CompressedSearchEngine
   */
 object SparkEntry {
 
-  private def tables(s: SparkSession, dir: String): IndexTables =
-    IndexTables.build(Corpus.files(s, dir))
+  /** The build's posting stream over `dir`'s corpus: the corpus-statistics
+    * entries below are projections of it, so their oracles certify the
+    * tokenizer the index build runs. */
+  private def postings(s: SparkSession, dir: String,
+                       analyzer: String = "simple"): DataFrame =
+    Stats.postings(Corpus.files(s, dir), analyzer)
 
-  /** The serving engine over an in-memory index of `files`, built and
-    * scored with `analyzer` — every search entry below runs through it, so
-    * the DuckDB oracles certify the code path Serve/HttpServe run. */
-  private def engine(files: DataFrame,
-                     analyzer: String = "simple"): CompressedSearchEngine = {
-    val t = IndexTables.build(files, analyzer)
-    new CompressedSearchEngine(
-      InvertedIndex.build(Stats.postings(files, analyzer), t.nDocs, t.avgdl),
-      t.nDocs, t.avgdl)
-  }
+  private def tf(stream: DataFrame): DataFrame =
+    stream.select(col("doc_id"), col("term"), col("tf").cast("long").as("tf"))
+      .orderBy("doc_id", "term")
 
-  /** `raw` through the serving lifecycle over `dir`'s corpus, top-10. */
+  /** `raw` through the serving lifecycle over `dir`'s corpus, top-10 —
+    * every search entry below runs the serving engine, so the DuckDB
+    * oracles certify the code path Serve/HttpServe run. */
   private def searchCorpus(s: SparkSession, dir: String, raw: String): DataFrame = {
     val files = Corpus.files(s, dir)
-    engine(files).search(raw, files)
+    CompressedSearchEngine.build(files).search(raw, files)
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val files = Corpus.files(spark, "/root/testdata/sf0.001")
-    Serve.hydrate(engine(files).search("merge sort window", files), files)
+    Serve.hydrate(
+      CompressedSearchEngine.build(files).search("merge sort window", files), files)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -47,27 +47,30 @@ object SparkEntry {
     "q_corpus_files" -> ((s, dir) =>
       Corpus.files(s, dir).orderBy("doc_id")),
     // A1 term frequencies
-    "q_tf" -> ((s, dir) =>
-      tables(s, dir).tf.orderBy("doc_id", "term")),
-    // docstats: BM25 length norm input
+    "q_tf" -> ((s, dir) => tf(postings(s, dir))),
+    // docstats: BM25 length norm input (one idx == 0 row per tokenized doc)
     "q_docstats" -> ((s, dir) =>
-      tables(s, dir).docstats.orderBy("doc_id")),
+      postings(s, dir).filter(col("idx") === 0)
+        .select(col("doc_id"), col("len").cast("long").as("len"))
+        .orderBy("doc_id")),
     // A3 global document frequency
     "q_termstats" -> ((s, dir) =>
-      tables(s, dir).termstats.orderBy("term")),
-    // A4 corpus scalars
+      postings(s, dir).groupBy("term").agg(count(lit(1)).as("df"))
+        .orderBy("term")),
+    // A4 corpus scalars, as the engine scores with them
     "q_corpus_stats" -> ((s, dir) => {
-      val t = tables(s, dir)
-      t.docstats.agg(round(avg(col("len")), 4).as("avgdl"))
-        .withColumn("n_docs", lit(t.nDocs))
+      val e = CompressedSearchEngine.build(Corpus.files(s, dir))
+      s.range(1).select(round(lit(e.avgdl), 4).as("avgdl"),
+        lit(e.nDocs).as("n_docs"))
     }),
     // E5 conjunctive candidates
     "q_candidates_all" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).candidatesAll(Seq("hash", "join"))
-        .orderBy("doc_id")),
+      CompressedSearchEngine.build(Corpus.files(s, dir))
+        .candidatesAll(Seq("hash", "join")).orderBy("doc_id")),
     // E4 disjunctive candidates
     "q_candidates_any" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).decoded(Some(Seq("dup", "vector")))
+      CompressedSearchEngine.build(Corpus.files(s, dir))
+        .decoded(Some(Seq("dup", "vector")))
         .select("doc_id").distinct().orderBy("doc_id")),
     // §3.1 flagship: multi-term BM25 top-10
     "q_bm25_tokens" -> ((s, dir) =>
@@ -89,24 +92,26 @@ object SparkEntry {
       searchCorpus(s, dir, "\"sort merge\" NOT \"hash join\"")),
     // A2 + §2.11: delta-gap varbyte posting codec — encode∘decode = id
     "q_index_roundtrip" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).decoded(None).orderBy("term", "doc_id")),
+      CompressedSearchEngine.build(Corpus.files(s, dir)).decoded(None)
+        .orderBy("term", "doc_id")),
     // block-max skip metadata (128-posting blocks)
     "q_index_stats" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).index.groupBy("term")
+      CompressedSearchEngine.build(Corpus.files(s, dir)).index.groupBy("term")
         .agg(first(col("df")).as("df"),
           sum(size(col("blocks"))).cast("long").as("nblocks"))
         .orderBy("term")),
     // exhaustive BM25 top-k straight from decoded postings (no query parse)
     "q_bm25_compressed" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).searchTopK(Seq("merge", "sort", "window"))),
+      CompressedSearchEngine.build(Corpus.files(s, dir))
+        .searchTopK(Seq("merge", "sort", "window"))),
     // MaxScore/block-range pruned top-k — rank-identical to exhaustive
     "q_bm25_pruned" -> ((s, dir) =>
-      engine(Corpus.files(s, dir))
+      CompressedSearchEngine.build(Corpus.files(s, dir))
         .searchPruned(Seq("merge", "sort", "window"), 10, force = true)),
     // Batch multi-query search (offline query-replay / relevance-eval):
     // 3 queries scored in ONE index scan, per-qid top-k from one window
     "q_batch_search" -> ((s, dir) =>
-      engine(Corpus.files(s, dir)).searchMany(Seq(
+      CompressedSearchEngine.build(Corpus.files(s, dir)).searchMany(Seq(
         0L -> Seq("merge", "sort", "window"),
         1L -> Seq("dup", "stream"),
         2L -> Seq("hash", "join")))),
@@ -114,7 +119,7 @@ object SparkEntry {
     // through the posting-level positions decoder
     "q_positions" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
-      engine(Corpus.files(s, dir)).index
+      CompressedSearchEngine.build(Corpus.files(s, dir)).index
         .select(col("term"), explode(graft.functions.GraftFunctions
           .decodeDocPositions(col("postings"), col("positions"))).as("e"))
         .select(col("term"), col("e.doc_id").as("doc_id"),
@@ -249,7 +254,8 @@ object SparkEntry {
     // O2: pagination — page 2 of 3-per-page over the flagship query
     "q_paged" -> ((s, dir) => {
       val files = Corpus.files(s, dir)
-      engine(files).searchPage("merge sort window", files, page = 2, limit = 3)
+      CompressedSearchEngine.build(files)
+        .searchPage("merge sort window", files, page = 2, limit = 3)
     }),
     // F13: paragraph snippets for the flagship query's result page
     // (first matching newline block, 100-word truncation, whole-doc fallback)
@@ -265,18 +271,18 @@ object SparkEntry {
     "q_phrase_count" -> ((s, dir) => {
       val files = Corpus.files(s, dir)
       search.Extras.phraseCounts(
-        engine(files).phraseCandidates("hash join", files), files, "hash join")
+        CompressedSearchEngine.build(files).phraseCandidates("hash join", files),
+        files, "hash join")
     }),
     // code-aware analyzer (identifier/camelCase/snake subtokens + Porter
     // stem): DuckDB-oracled via a generated pure-SQL Porter stemmer
     // (PorterSql — validated against PorterStemmer on 28k fuzz words);
     // rank parity additionally asserted against the in-repo Scala oracle
-    "q_tf_code" -> ((s, dir) =>
-      IndexTables.build(Corpus.files(s, dir), "code").tf
-        .orderBy("doc_id", "term")),
+    "q_tf_code" -> ((s, dir) => tf(postings(s, dir, "code"))),
     "q_bm25_code" -> ((s, dir) => {
       val files = Corpus.files(s, dir)
-      engine(files, "code").search("merge sort window", files, analyzer = "code")
+      CompressedSearchEngine.build(files, "code")
+        .search("merge sort window", files, analyzer = "code")
     })
   )
 

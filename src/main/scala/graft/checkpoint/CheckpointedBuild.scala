@@ -94,11 +94,11 @@ object CheckpointedBuild {
     * `bucketConc` ≤ 0 → auto (up to 4 in-flight buckets, sequential on a
     * single core; see the comment at the bucket pool). All table data goes
     * through `io` (the Iceberg seam — graft.sources.TableIO); manifests are
-    * the build's own lineage artifacts and stay JSON. With `verifyResume`
-    * (default), completed buckets are re-validated against the CURRENT
-    * input before being skipped: one narrow job recomputes every bucket's
-    * snapshot hash (count + bit_xor of xxhash64(doc_id, sha) — doc_id+sha
-    * columns only, no content read) and any bucket whose manifest
+    * the build's own lineage artifacts and stay JSON. Completed buckets are
+    * always re-validated against the CURRENT input before being skipped:
+    * one narrow job recomputes every bucket's snapshot hash (count +
+    * bit_xor of xxhash64(doc_id, sha) — doc_id+sha columns only, no
+    * content read) and any bucket whose manifest
     * snapshot_id no longer matches is invalidated and rebuilt, so resuming
     * into an outDir after the corpus changed can never mix stale segments
     * with fresh ones. */
@@ -129,7 +129,6 @@ object CheckpointedBuild {
           failAfterBuckets: Int = Int.MaxValue,
           bucketConc: Int = -1,
           io: graft.sources.TableIO = graft.sources.ParquetTableIO,
-          verifyResume: Boolean = true,
           idDomain: Option[(Long, Long)] = None,
           changedIds: Option[(Long, Long)] = None): BuildStats = {
     require(changedIds.isEmpty || idDomain.isDefined,
@@ -191,7 +190,7 @@ object CheckpointedBuild {
     // (delta-metadata contract above); other completed buckets only need
     // their on-disk artifacts present.
     val completedBefore = (0 until nBuckets).filter(isComplete(outDir, _))
-    if (verifyResume && completedBefore.nonEmpty) {
+    if (completedBefore.nonEmpty) {
       val ms = readManifests(outDir).map(m => m.partition_id -> m).toMap
       val scope: Option[(Int, Int)] = changedIds.map { case (clo, chi) =>
         (math.max(0, ((clo - minId) / width).toInt),
@@ -233,11 +232,12 @@ object CheckpointedBuild {
         val hi = lo + width // exclusive
         val slice = files.filter(col("doc_id") >= lo && col("doc_id") < hi)
         // per-row invariant verified inside the scan (BASELINE.json:15)
-        val obs = Observation(s"bucket-$b")
-        val observed = slice.observe(obs,
+        val sliceMetrics = Seq(
           count(lit(1)).as("rows"),
           sum(when(sha2(col("content"), 256) === col("sha"), 1L).otherwise(0L)).as("sha_ok"),
           bit_xor(xxhash64(col("doc_id"), col("sha"))).as("snap"))
+        val obs = Observation(s"bucket-$b")
+        val observed = slice.observe(obs, sliceMetrics.head, sliceMetrics.tail: _*)
         // ONE job per bucket, ONE fused tokenize+compact eval per document,
         // ONE wide exchange: the compact posting stream carries tf, len, and
         // wire-encoded positions in-row (no docstats join, no second
@@ -259,23 +259,25 @@ object CheckpointedBuild {
             sum(length(col("seg")) + length(col("pos"))).as("bytes"),
             sum(col("n")).as("postings"))
         io.overwrite(seg, s"$outDir/segments/bucket=$b")
-        val m = obs.get
         val sm = segObs.get
         val dm = dsObs.get
-        // an all-empty bucket slice (incremental append: the not-yet-loaded
-        // id range) can be optimized to an empty LocalRelation, which drops
-        // the CollectMetrics nodes entirely — empty metric maps mean 0 rows
-        val rows = m.get("rows").map(_.asInstanceOf[Long]).getOrElse(0L)
+        // When the bucket's posting stream is empty (an empty slice, or
+        // docs without a single token), AQE replaces the empty shuffle map
+        // stage with an empty relation and its CollectMetrics nodes go with
+        // it: the metric maps come back empty. Only then are the slice's
+        // metrics taken by one narrow agg of their own.
+        val m = Some(obs.get).filter(_.nonEmpty).getOrElse(
+          slice.agg(sliceMetrics.head, sliceMetrics.tail: _*).head()
+            .getValuesMap[Any](Seq("rows", "sha_ok", "snap")))
+        val rows = m("rows").asInstanceOf[Long]
         val shaOk = if (rows == 0) 0L else m("sha_ok").asInstanceOf[Long]
         require(shaOk == rows, s"sha256 invariant violated in bucket $b: $shaOk/$rows")
-        val nTokens =
-          if (rows == 0) 0L else dm("tokens").asInstanceOf[Long]
-        val nPostings =
-          if (rows == 0 || nTokens == 0) 0L else sm("postings").asInstanceOf[Long]
+        val nTokens = dm.get("tokens").map(_.asInstanceOf[Long]).getOrElse(0L)
+        val nPostings = if (nTokens == 0) 0L else sm("postings").asInstanceOf[Long]
         val snap = if (rows == 0) "empty"
           else java.lang.Long.toHexString(m("snap").asInstanceOf[Long])
         writeManifest(outDir, BucketManifest(b, snap, rows, nPostings,
-          if (rows == 0 || nTokens == 0) 0L else sm("bytes").asInstanceOf[Long],
+          if (nTokens == 0) 0L else sm("bytes").asInstanceOf[Long],
           shaOk, "complete",
           tokens = nTokens,
           docsTok = if (nTokens == 0) 0L else dm("docs_tok").asInstanceOf[Long]))

@@ -34,8 +34,10 @@ final case class TermEntry(term: String, tf: Int, len: Int, pos: Array[Byte])
   *
   * Tokenization is byte-identical to [[AsciiTokens]] (maximal `[A-Za-z0-9]+`
   * runs, ASCII-lowercased — reference `Utils/Utils.java:14` semantics);
-  * `PhraseSpec` cross-validates the fused output against the
-  * per-token `Stats.tokensPos` path.
+  * `PhraseSpec` cross-validates the fused positions against the
+  * per-token `Stats.tokensPos` path, and the `q_tf`, `q_docstats` and
+  * `q_termstats` DuckDB oracles check its tf, len and df directly (they
+  * are projections of `Stats.postings`).
   */
 case class CompactTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = CompactTokens.schema

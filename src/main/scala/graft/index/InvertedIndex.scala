@@ -212,34 +212,18 @@ object InvertedIndex {
       .toDF()
   }
 
-  /** One term's chunk rows from its encoded runs — streaming fast path,
-    * object-path fallback for non-disjoint runs (the salted doc_id-range
-    * build never emits those; reachable only via hand-built segments). */
+  /** One term's chunk rows from its encoded runs. The runs must be
+    * doc-disjoint (the salted doc_id-range build emits nothing else);
+    * overlapping runs fail PostingCodec.mergeStreamsPos's `require`. */
   private[index] def termChunkRows(term: String, df: Long,
       runs: Seq[(Array[Byte], Array[Byte])], avgdl: Double,
       chunkSize: Int = ChunkSize,
-      chunkBytes: Int = ChunkTargetBytes): Iterator[IndexRow] = {
-    def rows(df: Long, outs: Array[PostingCodec.ChunkOut]) =
-      outs.iterator.zipWithIndex.map { case (c, i) =>
+      chunkBytes: Int = ChunkTargetBytes): Iterator[IndexRow] =
+    PostingCodec.mergeStreamsPos(runs, avgdl, Stats.K1, Stats.B,
+      chunkSize, chunkBytes).iterator.zipWithIndex.map { case (c, i) =>
         IndexRow(term, df, i, c.first_doc_id, c.last_doc_id, c.n,
           c.blocks.map(_.max_weight).max, c.blocks, c.bytes, c.pos)
       }
-    try rows(df, PostingCodec.mergeStreamsPos(runs, avgdl, Stats.K1, Stats.B,
-      chunkSize, chunkBytes))
-    catch {
-      case _: IllegalArgumentException =>
-        // non-disjoint runs (hand-built segments only): object-path k-way
-        // merge, then re-encode as ONE run and reuse the SAME streaming
-        // chunk emitter — both paths share the count+byte cut logic, so
-        // they stay byte-identical by construction
-        val merged = PostingCodec.mergeRunsPos(
-          runs.map { case (s, p) => PostingCodec.decodeWithPos(s, p) })
-        val (bytes, _, posBytes) =
-          PostingCodec.encodeWithPos(merged, avgdl, Stats.K1, Stats.B)
-        rows(merged.length.toLong, PostingCodec.mergeStreamsPos(
-          Seq((bytes, posBytes)), avgdl, Stats.K1, Stats.B, chunkSize, chunkBytes))
-    }
-  }
 
   /** Target bytes per output file for the auto-sized write (parquet sweet
     * spot; matches the default maxPartitionBytes read granularity). */

@@ -210,8 +210,8 @@ object PostingCodec {
   /** STREAMING merge of doc-disjoint encoded runs into block-max chunks
     * with O(chunk) memory — the scale-critical path of the stage-2 merge.
     *
-    * The object path (decode → concat → re-encode) materializes one JVM
-    * object + positions array per posting for the WHOLE term before
+    * An object-level merge (decode → concat → re-encode) materializes one
+    * JVM object + positions array per posting for the WHOLE term before
     * chunking; for a term present in every document that is df live
     * objects per task, and at ~2M docs × 32 merge tasks the old-gen fills
     * with short-lived posting objects and the build collapses into GC
@@ -223,8 +223,7 @@ object PostingCodec {
     *
     * Requires runs pairwise doc-disjoint after ordering by first doc_id
     * (the salted doc_id-range build guarantees this); throws
-    * IllegalArgumentException on violation — callers fall back to the
-    * object path ([[mergeRunsPos]] + [[encodeWithPos]]).
+    * IllegalArgumentException on violation.
     */
   /** `chunkBytes`: byte bound on a chunk's payload (postings + positions),
     * checked at BLOCK boundaries only — every non-final chunk's posting
@@ -306,40 +305,5 @@ object PostingCodec {
     }
     flushChunk()
     chunks.toArray
-  }
-
-  /** Merge sorted positional runs (mirrors [[mergeRuns]]). */
-  def mergeRunsPos(runs: Seq[Array[PosPosting]]): Array[PosPosting] = {
-    val nonEmpty = runs.filter(_.nonEmpty).sortBy(_.head.doc_id)
-    if (nonEmpty.isEmpty) return Array.empty
-    val disjoint = nonEmpty.sliding(2).forall {
-      case Seq(a, b) => a.last.doc_id < b.head.doc_id
-      case _         => true
-    }
-    if (disjoint) Array.concat(nonEmpty: _*)
-    else {
-      val all = Array.concat(nonEmpty: _*)
-      java.util.Arrays.sort(all, Ordering.by[PosPosting, Long](_.doc_id))
-      all
-    }
-  }
-
-  /** Merge sorted runs into one sorted array. Fast path: runs whose docId
-    * ranges are pairwise disjoint (the salted range-bucket build produces
-    * these) are concatenated; otherwise a k-way merge. (term, doc) pairs are
-    * unique upstream (groupBy), so no combining is needed. */
-  def mergeRuns(runs: Seq[Array[Posting]]): Array[Posting] = {
-    val nonEmpty = runs.filter(_.nonEmpty).sortBy(_.head.doc_id)
-    if (nonEmpty.isEmpty) return Array.empty
-    val disjoint = nonEmpty.sliding(2).forall {
-      case Seq(a, b) => a.last.doc_id < b.head.doc_id
-      case _         => true
-    }
-    if (disjoint) Array.concat(nonEmpty: _*)
-    else {
-      val all = Array.concat(nonEmpty: _*)
-      java.util.Arrays.sort(all, Ordering.by[Posting, Long](_.doc_id))
-      all
-    }
   }
 }

@@ -1,44 +1,22 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analyze.Analyzer
 
-/** Corpus statistics stage (SURVEY.md §2.4 A1/A3/A4, §7.1 step 3):
-  * `tf(doc_id, term, tf)`, `docstats(doc_id, len)`, `termstats(term, df)`,
-  * plus the scalars `n_docs` / `avgdl` needed by BM25.
+/** Corpus statistics stage (SURVEY.md §2.4 A1/A3/A4, §7.1 step 3).
   *
-  * Everything here is pure declarative DataFrame code: tokenize + explode is
-  * a narrow stage fused by WholeStageCodegen; the groupBys are hash
-  * aggregations with map-side partial aggregation (the scale-correct shape of
-  * the reference's per-document counting loop, `Indexer/TextIndexer.java:32-95`).
+  * [[postings]] is the one source of BM25's corpus statistics: each row
+  * carries a document's tf for one term and the document's length, so
+  * `tf(doc_id, term, tf)`, `docstats(doc_id, len)` (the `idx == 0` rows),
+  * `termstats(term, df)` (rows per term) and `avgdl` are projections of
+  * the stream the index build shuffles (the scale-correct shape of the
+  * reference's per-document counting loop, `Indexer/TextIndexer.java:32-95`).
+  * `n_docs` counts every corpus file, token-less ones included.
   */
 object Stats {
   val K1 = 1.2
   val B = 0.75
-
-  /** Tokenized (doc_id, term) rows. `analyzer` ∈ {"simple", "code"}.
-    * The simple analyzer stays in built-in functions (codegen'd, and
-    * DuckDB-mirrorable); the code analyzer is a Scala UDF over the same
-    * explode shape. */
-  def tokens(files: DataFrame, analyzer: String = "simple"): DataFrame =
-    analyzer match {
-      case "simple" =>
-        graft.functions.GraftFunctions.register(files.sparkSession)
-        files.select(col("doc_id"),
-          explode(graft.functions.GraftFunctions.asciiTokens(col("content")))
-            .as("term"))
-      case "code" =>
-        // per-lang dispatch: the document's lang column selects the
-        // reserved-word stop set inside the tokenizer
-        val tokUdf = udf((c: String, l: String) => Analyzer.codeTokens(c, l))
-        val withLang =
-          if (files.columns.contains("lang")) files
-          else files.withColumn("lang", lit(""))
-        withLang.select(col("doc_id"),
-          explode(tokUdf(col("content"), col("lang"))).as("term"))
-      case other => throw new IllegalArgumentException(s"analyzer: $other")
-    }
 
   /** Positional token stream (doc_id, term, pos, len) — pos is the 0-based
     * token index in the document's analyzer output, len the document's token
@@ -107,51 +85,5 @@ object Stats {
       .select(col("doc_id"), col("pos").as("idx"), col("col.term").as("term"),
         col("col.tf").as("tf"), col("col.len").as("len"),
         col("col.pos").as("pos"))
-  }
-
-  /** tf(doc_id, term, tf) — A1. */
-  def tf(files: DataFrame, analyzer: String = "simple"): DataFrame =
-    tokens(files, analyzer).groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"))
-
-  /** docstats(doc_id, len) — document length in tokens (BM25 length norm). */
-  def docstats(tf: DataFrame): DataFrame =
-    tf.groupBy("doc_id").agg(sum("tf").as("len"))
-
-  /** termstats(term, df) — global document frequency (SURVEY.md §7.4 #2:
-    * global df at index time, not the reference's candidate-filtered df). */
-  def termstats(tf: DataFrame): DataFrame =
-    tf.groupBy("term").agg(count(lit(1)).as("df"))
-
-  /** (n_docs, avgdl). n_docs counts all corpus files (reference
-    * `dbManager.java:319-322` counts the whole collection); avgdl averages
-    * over docs that produced tokens. */
-  def scalars(files: DataFrame, docstats: DataFrame): (Long, Double) = {
-    val n = files.count()
-    val avgdl = docstats.agg(avg(col("len"))).head.getDouble(0)
-    (n, avgdl)
-  }
-}
-
-/** All derived tables for one corpus, built once and reused by the query
-  * entries (`q_tf`, `q_docstats`, `q_termstats`, `q_corpus_stats`) and for
-  * the search engine's `nDocs`/`avgdl`. Small-scale convenience wrapper; the
-  * scale path builds the compressed index instead
-  * (graft.checkpoint.CheckpointedBuild, graft.index.InvertedIndex). */
-final case class IndexTables(
-    files: DataFrame,
-    tf: DataFrame,
-    docstats: DataFrame,
-    termstats: DataFrame,
-    nDocs: Long,
-    avgdl: Double)
-
-object IndexTables {
-  def build(files: DataFrame, analyzer: String = "simple"): IndexTables = {
-    val tf = Stats.tf(files, analyzer)
-    val ds = Stats.docstats(tf)
-    val ts = Stats.termstats(tf)
-    val (n, avgdl) = Stats.scalars(files, ds)
-    IndexTables(files, tf, ds, ts, n, avgdl)
   }
 }

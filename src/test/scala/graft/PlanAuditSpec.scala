@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{IndexTables, InvertedIndex}
+import graft.index.InvertedIndex
 import graft.search.CompressedSearchEngine
 
 /** Asserts the physical-plan properties the engine's 100 TB posture depends
@@ -18,16 +18,14 @@ class PlanAuditSpec extends SparkSpec {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  private lazy val t = IndexTables.build(Corpus.files(spark, sf))
+  private lazy val mem = CompressedSearchEngine.build(Corpus.files(spark, sf))
 
   /** The serving engine over sf's index, written to and re-read from
     * `idxPath` so plans show the real parquet index scan. */
   private def engineAt(idxPath: String): CompressedSearchEngine = {
-    InvertedIndex.write(
-      InvertedIndex.build(graft.index.Stats.postings(Corpus.files(spark, sf)),
-        t.nDocs, t.avgdl), idxPath)
+    InvertedIndex.write(mem.index, idxPath)
     new CompressedSearchEngine(
-      InvertedIndex.load(spark, idxPath), t.nDocs, t.avgdl)
+      InvertedIndex.load(spark, idxPath), mem.nDocs, mem.avgdl)
   }
 
   test("predicate and projection reach the parquet scan") {
@@ -48,7 +46,7 @@ class PlanAuditSpec extends SparkSpec {
   test("segment build: one (term, salt) repartition, single fused tokenize, " +
       "no join, no map-side sort") {
     val p = plan(InvertedIndex.segments(
-      graft.index.Stats.postings(Corpus.files(spark, sf)), t.nDocs))
+      graft.index.Stats.postings(Corpus.files(spark, sf)), mem.nDocs))
     // exactly one explicit repartition — the salted, skew-aware shuffle
     // (REPARTITION_BY_NUM: user-specified count, exempt from AQE's
     // size-based coalescing — the encode stage is CPU-per-posting bound)

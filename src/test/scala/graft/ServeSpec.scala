@@ -100,39 +100,36 @@ class ServeSpec extends SparkSpec {
     val clients = 8
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val cachedBefore = persistedBefore.size
-    // a corpus stored as more files than one wave of tasks, served from a
-    // session with the engine sessions' scan settings
+    // a corpus stored as more files than one wave of tasks
     val corpusPath = tmpDir("graft-serve-corpus") + "/files"
     files.repartition(16).write.parquet(corpusPath)
-    withConf(GraftSession.scanConf) {
-      val s = new Serve.Session(spark, dir, spark.read.parquet(corpusPath), logPath)
-      val server = HttpServe.start(s, 0)
-      try {
-        val want = reqs.map(fetch(server, _))
-        assert(want.forall { case (code, body) =>
-          code == 200 && body.startsWith("[{") && body.endsWith("}]") })
-        // the session caches its corpus once; the scan packed its 16 files
-        // into one wave of partitions
-        val added = spark.sparkContext.getPersistentRDDs
-          .filter { case (id, _) => !persistedBefore.contains(id) }.values.toSeq
-        assert(added.size === 1)
-        assert(added.head.getNumPartitions <= spark.sparkContext.defaultParallelism)
-        val logged = QueryLog.load(spark, logPath).count()
-        // each client sends every request once, starting at its own offset,
-        // so different request kinds overlap
-        val pool = Executors.newFixedThreadPool(clients)
-        val got = try pool.invokeAll((0 until clients).map { c =>
-            (() => reqs.indices.map(j => (c + j) % reqs.size)
-              .map(i => i -> fetch(server, reqs(i)))): Callable[Seq[(Int, (Int, String))]]
-          }.asJava).asScala.toSeq.flatMap(_.get())
-          finally pool.shutdown()
-        assert(QueryLog.load(spark, logPath).count() === logged + clients * searches)
-        assert(got.size === clients * reqs.size)
-        got.foreach { case (i, resp) => assert(resp === want(i), reqs(i)) }
-      } finally {
-        server.stop(0)
-        s.close()
-      }
+    val s = new Serve.Session(spark, dir, spark.read.parquet(corpusPath), logPath)
+    val server = HttpServe.start(s, 0)
+    try {
+      val want = reqs.map(fetch(server, _))
+      assert(want.forall { case (code, body) =>
+        code == 200 && body.startsWith("[{") && body.endsWith("}]") })
+      // the session caches its corpus once; the scan packed its 16 files
+      // into one wave of partitions
+      val added = spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !persistedBefore.contains(id) }.values.toSeq
+      assert(added.size === 1)
+      assert(added.head.getNumPartitions <= spark.sparkContext.defaultParallelism)
+      val logged = QueryLog.load(spark, logPath).count()
+      // each client sends every request once, starting at its own offset,
+      // so different request kinds overlap
+      val pool = Executors.newFixedThreadPool(clients)
+      val got = try pool.invokeAll((0 until clients).map { c =>
+          (() => reqs.indices.map(j => (c + j) % reqs.size)
+            .map(i => i -> fetch(server, reqs(i)))): Callable[Seq[(Int, (Int, String))]]
+        }.asJava).asScala.toSeq.flatMap(_.get())
+        finally pool.shutdown()
+      assert(QueryLog.load(spark, logPath).count() === logged + clients * searches)
+      assert(got.size === clients * reqs.size)
+      got.foreach { case (i, resp) => assert(resp === want(i), reqs(i)) }
+    } finally {
+      server.stop(0)
+      s.close()
     }
     val live = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive &&
       !t.isDaemon && (t.getName.startsWith("HttpServe") || t.getName == "HTTP-Dispatcher"))

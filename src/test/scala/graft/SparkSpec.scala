@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM via Test/fork). */
+/** Shared session for all suites (one JVM via Test/fork), configured like
+  * every engine session. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -19,15 +20,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
-  /** Run `body` with `conf` set on the shared session, then restore the
-    * previous values. */
-  def withConf[T](conf: Map[String, String])(body: => T): T = {
-    val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
-    conf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
   override def afterAll(): Unit =
     try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
     finally super.afterAll()
@@ -35,13 +27,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder("graft-test", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

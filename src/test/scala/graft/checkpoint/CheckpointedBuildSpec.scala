@@ -1,7 +1,9 @@
 package graft.checkpoint
 
 import graft.SparkSpec
+import graft.analyze.Analyzer
 import graft.corpus.Corpus
+import graft.search.CompressedSearchEngine
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -18,18 +20,17 @@ class CheckpointedBuildSpec extends SparkSpec {
     assert(ms.forall(_.status === "complete"))
     assert(ms.map(_.rows).sum === stats.nDocs)
     assert(ms.forall(m => m.sha_ok === m.rows)) // sha256 invariant per row
-    assert(ms.map(_.postings).sum ===
-      graft.index.Stats.tf(files).count())
+    // one posting per distinct (doc, term) of the analyzer, counted in memory
+    assert(ms.map(_.postings).sum === files.select("content").collect()
+      .map(r => Analyzer.simpleTokens(r.getString(0)).distinct.size.toLong).sum)
     // the index is written in at most the files its payload bytes ask for
     // (range bounds come from a row sample: a small index can fill fewer)
     val indexFiles = new java.io.File(s"$out/index").list().count(_.endsWith(".parquet"))
     assert(indexFiles > spark.sparkContext.defaultParallelism)
     assert(indexFiles <= graft.index.InvertedIndex.writeParts(spark, ms.map(_.bytes).sum))
     // ... and an engine session scans those small files in one wave of tasks
-    withConf(graft.GraftSession.scanConf) {
-      assert(spark.read.parquet(s"$out/index").rdd.getNumPartitions <=
-        spark.sparkContext.defaultParallelism)
-    }
+    assert(spark.read.parquet(s"$out/index").rdd.getNumPartitions <=
+      spark.sparkContext.defaultParallelism)
     val eng = CheckpointedBuild.load(spark, out)
     val hits = eng.searchTopK(Seq("merge", "sort"), 10).collect()
     assert(hits.nonEmpty)
@@ -209,15 +210,56 @@ class CheckpointedBuildSpec extends SparkSpec {
     val out = tmpDir("graft-ckpt-eq")
     CheckpointedBuild.run(files, out, nBuckets = 3)
     val ck = CheckpointedBuild.load(spark, out)
-    val t = graft.index.IndexTables.build(files)
-    val direct = new graft.search.CompressedSearchEngine(
-      graft.index.InvertedIndex.build(graft.index.Stats.postings(files),
-        t.nDocs, t.avgdl),
-      t.nDocs, t.avgdl)
+    val direct = CompressedSearchEngine.build(files)
     val got = ck.searchTopK(Seq("merge", "sort", "window"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = direct.searchTopK(Seq("merge", "sort", "window"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got === want)
+  }
+
+  test("a bucket whose docs yield no tokens counts its rows and checks their sha256") {
+    import spark.implicits._
+    val dir = tmpDir("graft-ckpt-tokenless")
+    // bucket 0 (docs 0, 1) has rows but an empty posting stream
+    def corpus(badSha: Long) = {
+      val p = s"$dir/corpus-$badSha"
+      Seq(0L -> "!!! ???", 1L -> "", 2L -> "alpha beta", 3L -> "beta gamma")
+        .toDF("doc_id", "content")
+        .withColumn("sha", when(col("doc_id") === badSha, lit("0" * 64))
+          .otherwise(sha2(col("content"), 256)))
+        .write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val docs = corpus(-1L)
+    val out = s"$dir/index"
+    val stats = CheckpointedBuild.run(docs, out, nBuckets = 2)
+    assert(stats.nDocs === 4)
+    val ms = CheckpointedBuild.readManifests(out)
+    assert(ms.map(m => (m.rows, m.sha_ok, m.postings)) === Seq((2L, 2L, 0L), (2L, 2L, 4L)))
+    assert(ms.head.snapshot_id !== "empty")
+    // the resume re-validation finds bucket 0 unchanged and skips it
+    val seg0 = java.nio.file.Paths.get(s"$out/segments/bucket=0")
+    val seg0Mtime = Files.getLastModifiedTime(seg0)
+    CheckpointedBuild.run(docs, out, nBuckets = 2)
+    assert(Files.getLastModifiedTime(seg0) === seg0Mtime)
+    // the checkpointed engine == the in-memory constructor's engine
+    val ck = CheckpointedBuild.load(spark, out)
+    val mem = CompressedSearchEngine.build(docs)
+    assert((ck.nDocs, ck.avgdl) === ((mem.nDocs, mem.avgdl)))
+    val terms = Seq("alpha", "beta", "gamma")
+    assert(ck.searchTopK(terms).collect().toSeq === mem.searchTopK(terms).collect().toSeq)
+    // a corpus with no tokens at all: avgdl 0.0 on both paths
+    val none = docs.filter(col("doc_id") < 2)
+    val noneStats = CheckpointedBuild.run(none, s"$dir/none", nBuckets = 2)
+    val noneMem = CompressedSearchEngine.build(none)
+    assert((noneStats.nDocs, noneStats.avgdl) === ((2L, 0.0)))
+    assert((noneMem.nDocs, noneMem.avgdl) === ((2L, 0.0)))
+    // a bad sha on a token-less doc fails the build like one on any doc
+    for (bad <- Seq(0L, 2L)) {
+      val e = intercept[IllegalArgumentException](
+        CheckpointedBuild.run(corpus(bad), s"$dir/bad-$bad", nBuckets = 2))
+      assert(e.getMessage.contains("sha256 invariant violated"), s"bad sha on doc $bad")
+    }
   }
 }

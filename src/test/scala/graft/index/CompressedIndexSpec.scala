@@ -1,11 +1,12 @@
 package graft.index
 
 import graft.SparkSpec
+import graft.analyze.Analyzer
 import graft.oracle.LocalOracle
 import graft.search.CompressedSearchEngine
 import org.apache.spark.sql.functions._
 
-/** Compressed index == uncompressed stats tables == in-memory oracle ==
+/** Compressed index == in-memory analyzer counts == in-memory oracle ==
   * pruned path, on seeded random corpora (FIXTURES.md §5 properties). */
 class CompressedIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -20,34 +21,34 @@ class CompressedIndexSpec extends SparkSpec {
     }
   }
 
-  private def build(seed: Int, nDocs: Int, saltBuckets: Int) = {
-    val files = corpus(seed, nDocs).toDF("doc_id", "content")
-    val t = IndexTables.build(files, "simple")
-    val idx = InvertedIndex.build(Stats.postings(files),
-      t.nDocs, t.avgdl, saltBuckets)
-    (t, new CompressedSearchEngine(idx, t.nDocs, t.avgdl))
-  }
+  private def build(seed: Int, nDocs: Int, saltBuckets: Int) =
+    CompressedSearchEngine.build(corpus(seed, nDocs).toDF("doc_id", "content"),
+      saltBuckets = saltBuckets)
 
   test("index roundtrip equals tf ⋈ docstats") {
-    val (t, ce) = build(7, 120, 8)
-    val want = t.tf.join(t.docstats, Seq("doc_id"))
-      .select("term", "doc_id", "tf", "len")
-      .orderBy("term", "doc_id").collect().toSeq
-    val got = ce.decoded(None).select("term", "doc_id", "tf", "len")
-      .orderBy("term", "doc_id").collect().toSeq
+    val ce = build(7, 120, 8)
+    // reference tf and doc lengths from the analyzer, computed in memory
+    val want = corpus(7, 120).flatMap { case (id, content) =>
+      val toks = Analyzer.simpleTokens(content)
+      toks.groupBy(identity).map { case (term, occ) =>
+        (term, id, occ.size, toks.size) }
+    }.sorted
+    val got = ce.decoded(None).select("term", "doc_id", "tf", "len").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getInt(2), r.getInt(3)))
+      .toSeq.sorted
     assert(got === want)
   }
 
   test("salted merge == single-bucket build") {
-    val (_, many) = build(11, 200, 16)
-    val (_, one) = build(11, 200, 1)
+    val many = build(11, 200, 16)
+    val one = build(11, 200, 1)
     val a = many.decoded(None).orderBy("term", "doc_id").collect().toSeq
     val b = one.decoded(None).orderBy("term", "doc_id").collect().toSeq
     assert(a === b)
   }
 
   test("batch multi-query search == per-query searchTopK, per qid") {
-    val (_, ce) = build(17, 180, 8)
+    val ce = build(17, 180, 8)
     val queries = Seq(
       0L -> Seq("merge", "sort", "window"),
       1L -> Seq("dup", "rareterm"),
@@ -70,7 +71,7 @@ class CompressedIndexSpec extends SparkSpec {
   }
 
   test("compressed exhaustive == in-memory oracle scores") {
-    val (_, ce) = build(13, 150, 8)
+    val ce = build(13, 150, 8)
     for (terms <- Seq(Seq("merge", "sort"), Seq("dup"), Seq("rareterm", "hash", "join"))) {
       val got = ce.searchTopK(terms, 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = LocalOracle.search(corpus(13, 150), "simple",
@@ -82,7 +83,7 @@ class CompressedIndexSpec extends SparkSpec {
   test("pruned top-k rank-identical to exhaustive, both τ branches covered") {
     val branches = scala.collection.mutable.Set.empty[Boolean]
     for (seed <- Seq(3, 5, 9)) {
-      val (_, ce) = build(seed, 250, 8)
+      val ce = build(seed, 250, 8)
       for (terms <- Seq(Seq("merge"), Seq("merge", "sort", "window"),
           Seq("dup", "batch"), Seq("rareterm", "spark"),
           Seq("hash", "join", "scan", "filter", "stream"))) {
@@ -103,7 +104,7 @@ class CompressedIndexSpec extends SparkSpec {
     // 2000 docs × up to 62 tokens → ~15 blocks per common term, and the
     // 20× doc-length spread gives real max_weight variance across blocks,
     // so the τ bound actually skips blocks (rank-identity is the contract)
-    val (_, ce) = build(17, 2000, 8)
+    val ce = build(17, 2000, 8)
     for (terms <- Seq(Seq("merge", "rareterm"), Seq("merge", "sort", "window"),
         Seq("dup", "rareterm", "spark"), Seq("hash"))) {
       val got = ce.searchPruned(terms, 10, force = true).collect()

@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import PostingCodec._
 
 /** ScalaCheck properties for the posting-list wire format (SURVEY.md §5.4):
-  * encode∘decode = id, block seeks agree with full decodes, merge of
-  * arbitrary runs equals a flat sort, and block-max bounds really bound
-  * every in-block weight — the invariants MaxScore pruning relies on. */
+  * encode∘decode = id, block seeks agree with full decodes, the streaming
+  * merge of doc-disjoint runs equals chunking the whole list, and block-max
+  * bounds really bound every in-block weight — the invariants MaxScore
+  * pruning relies on. */
 class PostingCodecPropsSpec extends AnyFunSuite {
 
   private val genPosting: Gen[(Long, Int, Int)] = for {
@@ -122,24 +123,9 @@ class PostingCodecPropsSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       mergeStreamsPos(runs, 100.0, 1.2, 0.75, 1 << 17)
     }
-  }
-
-  test("property: mergeRunsPos of doc-disjoint slices == concatenation") {
-    check("mergeRunsPos")(Prop.forAll(genPosPostings, Gen.chooseNum(1, 8)) { (ps, k) =>
-      val slices = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
-      mergeRunsPos(slices).map(_.doc_id).toSeq == ps.map(_.doc_id).toSeq
-    })
-  }
-
-  test("property: mergeRuns of arbitrary splits == flat sort") {
-    // interleaved runs defeat the disjoint fast path; contiguous slices use it
-    check("mergeRuns")(Prop.forAll(genPostings, Gen.chooseNum(1, 8)) { (ps, k) =>
-      val interleaved = (0 until k).map(i => ps.zipWithIndex.collect {
-        case (p, j) if j % k == i => p
-      })
-      val slices = ps.grouped(math.max(1, ps.length / k + 1)).toSeq
-      val expected = ps.sortBy(_.doc_id).toSeq
-      mergeRuns(interleaved).toSeq == expected && mergeRuns(slices).toSeq == expected
-    })
+    // the index build's merge has no fallback: overlapping runs fail loudly
+    assertThrows[IllegalArgumentException] {
+      InvertedIndex.termChunkRows("t", 3L, runs, 100.0)
+    }
   }
 }

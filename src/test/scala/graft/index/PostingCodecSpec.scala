@@ -53,15 +53,4 @@ class PostingCodecSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("mergeRuns: disjoint fast path and overlapping k-way merge") {
-    val a = Array(Posting(1, 1, 5), Posting(3, 2, 5))
-    val b = Array(Posting(10, 1, 7), Posting(12, 1, 7))
-    val c = Array(Posting(5, 4, 9))
-    assert(mergeRuns(Seq(b, a, c)).map(_.doc_id).toSeq === Seq(1L, 3L, 5L, 10L, 12L))
-    val x = Array(Posting(1, 1, 5), Posting(8, 2, 5))
-    val y = Array(Posting(4, 1, 7), Posting(9, 1, 7))
-    assert(mergeRuns(Seq(x, y)).map(_.doc_id).toSeq === Seq(1L, 4L, 8L, 9L))
-    assert(mergeRuns(Seq(Array.empty[Posting])).isEmpty)
-  }
 }

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.index.{IndexTables, InvertedIndex, Stats}
+import graft.index.Stats
 import graft.oracle.LocalOracle
 import org.apache.spark.sql.functions._
 
@@ -31,12 +31,7 @@ class PhraseSpec extends SparkSpec {
     5L -> "nothing to see here")
 
   private lazy val files = docs.toDF("doc_id", "content")
-  private lazy val t = IndexTables.build(files, "simple")
-  private lazy val ce = {
-    val idx = InvertedIndex.build(Stats.postings(files),
-      t.nDocs, t.avgdl, saltBuckets = 4)
-    new CompressedSearchEngine(idx, t.nDocs, t.avgdl)
-  }
+  private lazy val ce = CompressedSearchEngine.build(files, saltBuckets = 4)
 
   test("phrase candidates == substring baseline on boundary-adversarial docs") {
     val got = ce.phraseCandidates("hash join", files)

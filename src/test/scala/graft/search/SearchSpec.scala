@@ -1,7 +1,6 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.index.{IndexTables, InvertedIndex, Stats}
 import graft.oracle.LocalOracle
 import org.apache.spark.sql.functions._
 
@@ -54,10 +53,7 @@ class SearchSpec extends SparkSpec {
       .withColumn("repo", lit("r")).withColumn("path", lit("p"))
       .withColumn("commit", lit("c")).withColumn("lang", lit("scala"))
       .withColumn("sha", sha2(col("content"), 256))
-    val t = IndexTables.build(files, analyzer)
-    val eng = new CompressedSearchEngine(
-      InvertedIndex.build(Stats.postings(files, analyzer), t.nDocs, t.avgdl),
-      t.nDocs, t.avgdl)
+    val eng = CompressedSearchEngine.build(files, analyzer)
     raw => eng.search(raw, files, 10, analyzer).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
