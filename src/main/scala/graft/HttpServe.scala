@@ -17,7 +17,7 @@ import java.util.concurrent.atomic.AtomicInteger
   * the reference's Spring controller runs each request on a pooled worker:
   * concurrent requests are concurrent Spark jobs on the one warm session.
   * The session serializes the only shared mutable state, its query-log
-  * append. Workers are named daemon threads and idle ones time out, so a
+  * buffer. Workers are named daemon threads and idle ones time out, so a
   * stopped server leaves no live threads behind. */
 object HttpServe {
 
@@ -89,11 +89,18 @@ object HttpServe {
 
   /** args: <sfDir> [port] [ckptDir] — builds the checkpoint if not yet
     * published (resumable, [[Serve.open]]), then serves until the process
-    * is killed. */
+    * is killed. A shutdown hook stops the server and closes the session,
+    * which appends its buffered query log; it runs before Spark's own hook
+    * (priority `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`) stops the
+    * SparkContext. */
   def main(args: Array[String]): Unit = {
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val session = Serve.open("graft-http-serve", args.headOption, args.lift(2))
     val server = start(session, port)
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+      server.stop(0)
+      session.close()
+    }, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 40)
     println(s"""{"status": "serving", "port": ${server.getAddress.getPort}, "n_docs": ${session.engine.nDocs}}""")
     Thread.currentThread().join() // serve until killed
   }

@@ -16,11 +16,18 @@ import graft.search.QueryLog
   * cached), the display corpus is persisted once, in the partitions it is
   * read in (the open cost [[GraftSession.builder]] sets packs a small
   * corpus's files into about one wave of tasks) — per-query work is only the query's own plan.
-  * Every query is appended to the query log (S10) before it is searched, so
-  * `:suggest` reflects the session's history like the reference's
-  * suggestion endpoint. A session is safe to call from several threads (the
-  * [[HttpServe]] workers): appends to the log are serialized, and
-  * everything else a request does is its own Spark job.
+  * Every query that passes the engine's checks is logged (S10) before it
+  * is searched, so `:suggest` reflects the session's history like the
+  * reference's suggestion endpoint. The log is buffered in the session:
+  * every [[LogFlushCount]] entries, and on [[Session.close]], one parquet
+  * append writes the buffer, and `:suggest` reads the log plus the buffer.
+  * A request therefore runs only its own query's jobs; a process that is
+  * killed without `close()` loses at most the buffered entries
+  * ([[HttpServe]] closes its session on SIGTERM, this REPL at `:quit` or
+  * end of input). A session
+  * is safe to call from several threads (the [[HttpServe]] workers): the
+  * buffer and its flush are serialized, and everything else a request
+  * does is its own Spark job.
   *
   * Protocol (one request per line, one JSON line per result row):
   *   <query>                 top-10 BM25 (tokens / "phrase" / boolean)
@@ -47,14 +54,24 @@ object Serve {
     sb.append('"').toString
   }
 
-  /** J2/J3 hydrate AFTER top-k: display columns are joined for the result
-    * page only, in the deterministic (score desc, doc_id asc) order. The
-    * join yields at most k rows, so they are sorted in one partition: a
-    * global sort would first run a range-sampling job of its own. */
-  def hydrate(topk: DataFrame, files: DataFrame): DataFrame =
-    topk.join(files.select("doc_id", "repo", "path", "lang"), Seq("doc_id"))
-      .repartition(1)
+  /** Log entries a session buffers before one append writes them. */
+  private[graft] val LogFlushCount = 256
+
+  /** J2/J3 hydrate AFTER top-k: the top-k (at most
+    * [[graft.search.CompressedSearchEngine.MaxResultWindow]] rows of
+    * `(doc_id, score)`) is collected, and the display columns are read by
+    * key for those docs only: one job over `files` filtered to the ids,
+    * with each row's score looked up in a literal map — no join, no
+    * exchange. The rows are sorted in one partition in the deterministic
+    * (score desc, doc_id asc) order: `(doc_id, score, repo, path, lang)`. */
+  def hydrate(topk: DataFrame, files: DataFrame): DataFrame = {
+    val scores = topk.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    files.filter(col("doc_id").isin(scores.keys.toSeq: _*))
+      .select(col("doc_id"), element_at(typedLit(scores), col("doc_id")).as("score"),
+        col("repo"), col("path"), col("lang"))
+      .coalesce(1)
       .sortWithinPartitions(col("score").desc, col("doc_id").asc)
+  }
 
   /** One warm serving session over a published checkpoint dir. */
   final class Session(val spark: SparkSession, ckptDir: String, corpus: DataFrame,
@@ -62,30 +79,48 @@ object Serve {
     val engine: graft.search.CompressedSearchEngine =
       CheckpointedBuild.load(spark, ckptDir)
     private val files = corpus.persist()
+    /** Guards [[buffer]] and its flush. Two parquet appends into one
+      * directory share `<logPath>/_temporary`, which the first job to
+      * commit deletes under the other, so flushes take turns; `suggest`
+      * lists the log and copies the buffer under the same lock, so an
+      * entry is counted once, on disk or in the buffer. */
     private val logLock = new Object
+    /** Logged `(query, normalized)` rows not yet appended to the log. */
+    private val buffer = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
-    /** Two parquet appends into one directory share `<logPath>/_temporary`,
-      * which the first job to commit deletes under the other; so appends
-      * take turns. Each stays synchronous, so a later `:suggest` sees it. */
-    private def log(raw: String): Unit =
-      logLock.synchronized(QueryLog.append(spark, logPath, Seq(raw)))
+    private def flush(): Unit = logLock.synchronized {
+      QueryLog.append(spark, logPath, buffer.map(_._1).toSeq)
+      buffer.clear()
+    }
+
+    /** Buffers `raw` under [[QueryLog.rows]]'s rule; a full buffer is
+      * appended to the log. */
+    private[graft] def log(raw: String): Unit = logLock.synchronized {
+      buffer ++= QueryLog.rows(Seq(raw))
+      if (buffer.size >= LogFlushCount) flush()
+    }
 
     def query(raw: String, k: Int = 10): DataFrame = {
+      val topk = engine.search(raw, files, k)
       log(raw)
-      hydrate(engine.search(raw, files, k), files)
+      hydrate(topk, files)
     }
 
     def page(raw: String, page: Int, limit: Int): DataFrame = {
+      val topk = engine.searchPage(raw, files, page, limit)
       log(raw)
-      hydrate(engine.searchPage(raw, files, page, limit), files)
+      hydrate(topk, files)
     }
 
-    def suggest(prefix: String): DataFrame =
-      // a :suggest before any logged query means no log table yet — that's
-      // an empty suggestion list, not a missing-path error
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(logPath)))
-        spark.range(0).select(lit("").as("query"), lit(0L).as("cnt"))
-      else QueryLog.suggest(QueryLog.load(spark, logPath), prefix)
+    def suggest(prefix: String): DataFrame = {
+      val log = logLock.synchronized {
+        val buffered = QueryLog.frame(spark, buffer.toSeq)
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(logPath)))
+          QueryLog.load(spark, logPath).unionByName(buffered)
+        else buffered
+      }
+      QueryLog.suggest(log, prefix)
+    }
 
     /** Result rows rendered as JSON strings — the wire format shared by the
       * REPL and HTTP fronts. */
@@ -108,7 +143,11 @@ object Serve {
       render(df)
     }
 
-    def close(): Unit = files.unpersist()
+    /** Appends the buffered log entries and releases the cached corpus. */
+    def close(): Unit = {
+      flush()
+      files.unpersist()
+    }
   }
 
   /** The serving fronts' shared start-up: a local session on every core

@@ -155,6 +155,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
     * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec). */
   def search(raw: String, files: DataFrame, k: Int = 10,
              analyzer: String = "simple"): DataFrame = {
+    require(k >= 0 && k <= CompressedSearchEngine.MaxResultWindow,
+      s"k must be in [0, ${CompressedSearchEngine.MaxResultWindow}]: $k")
     def toks(s: String) = graft.analyze.Analyzer.queryTokens(analyzer, s).distinct
     QueryParser.parse(raw) match {
       case Tokens(text) => scoreCand(toks(text), None, k)
@@ -231,11 +233,15 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
   /** O2: paginated serving — reference semantics
     * (`QueryProcessor/QueryProcessor.java:131-139`): 1-based page,
-    * fromIndex = (page-1)·limit, pages past the end are empty. */
+    * fromIndex = (page-1)·limit, pages past the end are empty. The window
+    * `page·limit` is at most [[CompressedSearchEngine.MaxResultWindow]]. */
   def searchPage(raw: String, files: DataFrame, page: Int, limit: Int,
                  analyzer: String = "simple"): DataFrame = {
     require(page >= 1 && limit >= 1, s"page/limit must be >= 1: $page/$limit")
-    search(raw, files, page * limit, analyzer).offset((page - 1) * limit)
+    val window = page.toLong * limit
+    require(window <= CompressedSearchEngine.MaxResultWindow,
+      s"page * limit must be at most ${CompressedSearchEngine.MaxResultWindow}: $window")
+    search(raw, files, window.toInt, analyzer).offset((page - 1) * limit)
   }
 
   /** MaxScore + block-max-WAND pruned top-k — rank-identical to
@@ -362,6 +368,12 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 }
 
 object CompressedSearchEngine {
+
+  /** The deepest result a query may ask for (`k`, or `page·limit`), as
+    * Elasticsearch's `index.max_result_window`: the top-k is sorted in one
+    * task and collected to the driver for hydration, so an unbounded
+    * window can exhaust the heap of the one serving JVM. */
+  val MaxResultWindow = 10000
 
   /** The engine over an in-memory index of `files`, tokenized and scored
     * with `analyzer`: one [[graft.index.Stats.postings]] stream feeds both

@@ -18,6 +18,8 @@ import graft.analyze.Analyzer
   * conflict-free across 1000 executors, and the counter is the groupBy-count
   * view [[counts]], computed at read time or compacted periodically). Empty
   * and normalize-to-empty queries are skipped exactly like the reference.
+  * A serving session buffers its entries and writes one append per flushed
+  * batch ([[graft.Serve]]), not one per query.
   */
 object QueryLog {
 
@@ -26,20 +28,30 @@ object QueryLog {
   def normalize(raw: String): String =
     Analyzer.queryTokens("simple", raw).mkString(" ")
 
-  /** S10: append one batch of raw user queries to the log at `path`
-    * (through the table seam — an Iceberg fast-append at scale). Skips
-    * null/blank raws and queries that normalize to empty
+  /** The log rows `(query, normalized)` of a batch of raw user queries:
+    * null/blank raws and queries that normalize to empty are skipped
     * (`dbManager.java:514-519`). */
-  def append(spark: SparkSession, path: String, queries: Seq[String],
-             io: graft.sources.TableIO = graft.sources.ParquetTableIO): Unit = {
-    import spark.implicits._
-    val rows = queries.iterator
+  def rows(queries: Seq[String]): Seq[(String, String)] =
+    queries.iterator
       .filter(q => q != null && q.trim.nonEmpty)
       .map(q => (q, normalize(q)))
       .filter(_._2.nonEmpty)
       .toSeq
-    if (rows.nonEmpty)
-      io.append(rows.toDF("query", "normalized").coalesce(1), path)
+
+  /** `rows` as a frame with the log table's columns. */
+  def frame(spark: SparkSession, rows: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("query", "normalized")
+  }
+
+  /** S10: append one batch of raw user queries to the log at `path`
+    * (through the table seam — an Iceberg fast-append at scale), as one
+    * file: [[graft.Serve.Session]] calls it once per flushed batch. Rows
+    * follow [[rows]]. */
+  def append(spark: SparkSession, path: String, queries: Seq[String],
+             io: graft.sources.TableIO = graft.sources.ParquetTableIO): Unit = {
+    val batch = rows(queries)
+    if (batch.nonEmpty) io.append(frame(spark, batch).coalesce(1), path)
   }
 
   /** The log table's columns, as [[append]] writes them. */

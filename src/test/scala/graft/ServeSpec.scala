@@ -47,6 +47,11 @@ class ServeSpec extends SparkSpec {
       assert(sug.exists(_.contains("merge sort window")))
       // the repeated query outranks the once-asked ones
       assert(sug.head.contains("\"cnt\":3"))
+      // hydrate reads the display fields by key: no join, no exchange
+      val hydrated = Serve.hydrate(s.engine.search("merge sort window", files), files)
+      val plan = hydrated.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+      assert(hydrated.toJSON.collect().toSeq === all)
       assert(s.handle("") === Seq.empty)
       assert(s.handle(":page x") === Seq("""{"error": "usage: :page <p> <n> <query>"}"""))
 
@@ -82,6 +87,64 @@ class ServeSpec extends SparkSpec {
     } finally s.close()
   }
 
+  test("a result window past MaxResultWindow is a 400, and the session still answers") {
+    val s = new Serve.Session(spark, dir, files, tmpDir("graft-serve-window") + "/querylog")
+    val server = HttpServe.start(s, 0)
+    try {
+      // page * limit overflows an Int (2^32, 2^31), or just passes the window
+      Seq("page=65536&limit=65536", "page=2&limit=1073741824", "page=1&limit=10001")
+        .foreach { pl =>
+          val (code, body) = fetch(server, s"/search?query=merge+sort&$pl")
+          assert(code === 400, s"$pl: $body")
+          assert(body.contains("at most 10000"), body)
+        }
+      val (code, body) = fetch(server, "/search?query=merge+sort+window")
+      assert(code === 200)
+      assert(body.split("\\{\"doc_id\"").length - 1 === 10)
+    } finally {
+      server.stop(0)
+      s.close()
+    }
+  }
+
+  test("query-log buffer: suggestions see buffered queries; close appends them once") {
+    val logPath = tmpDir("graft-serve-buffer") + "/querylog"
+    def parquetFiles(log: String = logPath) = Option(new java.io.File(log).listFiles())
+      .toSeq.flatten.count(_.getName.endsWith(".parquet"))
+    val s = new Serve.Session(spark, dir, files, logPath)
+    val sug = try {
+      // before any query there is no log: an empty list, not an error
+      assert(s.handle(":suggest merge") === Seq.empty)
+      // "?!" normalizes to empty: searched, but not logged
+      Seq("merge sort", "Merge join", "?!", "merge sort", "merge sort").foreach(s.handle)
+      val got = s.handle(":suggest merge")
+      assert(got === Seq("""{"query":"merge sort","cnt":3}""",
+        """{"query":"Merge join","cnt":1}"""))
+      assert(parquetFiles() === 0)
+      got
+    } finally s.close()
+    assert(parquetFiles() === 1)
+    assert(QueryLog.load(spark, logPath).count() === 4)
+    // a new session on the same log: nothing lost, nothing counted twice
+    val s2 = new Serve.Session(spark, dir, files, logPath)
+    try assert(s2.handle(":suggest merge") === sug)
+    finally s2.close()
+    assert(parquetFiles() === 1)
+
+    // the count bound: one append writes the full buffer as one file
+    val full = tmpDir("graft-serve-buffer") + "/querylog"
+    val s3 = new Serve.Session(spark, dir, files, full)
+    try {
+      (1 until Serve.LogFlushCount).foreach(i => s3.log(s"query $i"))
+      assert(parquetFiles(full) === 0)
+      s3.log("query 0")
+      assert(parquetFiles(full) === 1)
+      assert(QueryLog.load(spark, full).count() === Serve.LogFlushCount)
+      assert(s3.handle(":suggest query").size === 10)
+    } finally s3.close()
+    assert(parquetFiles(full) === 1)
+  }
+
   test("concurrent HTTP clients get the sequential responses; no query-log append is lost") {
     val logPath = tmpDir("graft-serve-log") + "/querylog"
     // a load that races the first append sees only the writer's _temporary
@@ -98,6 +161,9 @@ class ServeSpec extends SparkSpec {
       "/suggest?prefix=shuffle")
     val searches = reqs.count(_.startsWith("/search"))
     val clients = 8
+    // log entries a client adds before each request: clients * reqs.size *
+    // perReq crosses LogFlushCount several times
+    val perReq = Serve.LogFlushCount / 2 / reqs.size + 1
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val cachedBefore = persistedBefore.size
     // a corpus stored as more files than one wave of tasks
@@ -115,22 +181,27 @@ class ServeSpec extends SparkSpec {
         .filter { case (id, _) => !persistedBefore.contains(id) }.values.toSeq
       assert(added.size === 1)
       assert(added.head.getNumPartitions <= spark.sparkContext.defaultParallelism)
-      val logged = QueryLog.load(spark, logPath).count()
       // each client sends every request once, starting at its own offset,
-      // so different request kinds overlap
+      // so different request kinds overlap; before each request it logs
+      // entries of its own, so buffer flushes run while others log
       val pool = Executors.newFixedThreadPool(clients)
       val got = try pool.invokeAll((0 until clients).map { c =>
-          (() => reqs.indices.map(j => (c + j) % reqs.size)
-            .map(i => i -> fetch(server, reqs(i)))): Callable[Seq[(Int, (Int, String))]]
+          (() => reqs.indices.map(j => (c + j) % reqs.size).map { i =>
+            (0 until perReq).foreach(n => s.log(s"client $c $i $n"))
+            i -> fetch(server, reqs(i))
+          }): Callable[Seq[(Int, (Int, String))]]
         }.asJava).asScala.toSeq.flatMap(_.get())
         finally pool.shutdown()
-      assert(QueryLog.load(spark, logPath).count() === logged + clients * searches)
       assert(got.size === clients * reqs.size)
       got.foreach { case (i, resp) => assert(resp === want(i), reqs(i)) }
     } finally {
       server.stop(0)
       s.close()
     }
+    // every search of the sequential and concurrent passes and every
+    // client's own entry is in the log once the session is closed
+    assert(QueryLog.load(spark, logPath).count() ===
+      3 + (1 + clients) * searches + clients * reqs.size * perReq)
     val live = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive &&
       !t.isDaemon && (t.getName.startsWith("HttpServe") || t.getName == "HTTP-Dispatcher"))
     assert(live.isEmpty)
