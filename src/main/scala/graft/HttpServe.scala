@@ -89,18 +89,14 @@ object HttpServe {
 
   /** args: <sfDir> [port] [ckptDir] — builds the checkpoint if not yet
     * published (resumable, [[Serve.open]]), then serves until the process
-    * is killed. A shutdown hook stops the server and closes the session,
-    * which appends its buffered query log; it runs before Spark's own hook
-    * (priority `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`) stops the
-    * SparkContext. */
+    * is killed. A shutdown hook ([[Serve.closeOnShutdown]]) stops the
+    * server, then closes the session, which appends its buffered query
+    * log. */
   def main(args: Array[String]): Unit = {
     val port = args.lift(1).map(_.toInt).getOrElse(8080)
     val session = Serve.open("graft-http-serve", args.headOption, args.lift(2))
     val server = start(session, port)
-    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
-      server.stop(0)
-      session.close()
-    }, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 40)
+    Serve.closeOnShutdown(session, () => server.stop(0))
     println(s"""{"status": "serving", "port": ${server.getAddress.getPort}, "n_docs": ${session.engine.nDocs}}""")
     Thread.currentThread().join() // serve until killed
   }

@@ -32,7 +32,8 @@ object Plans {
     val toksP = graft.index.Stats.postings(files)
     // write + re-read so the query plans show the real parquet scan
     val idxPath = "/tmp/graft_plans_index"
-    InvertedIndex.write(mem.index, idxPath)
+    InvertedIndex.write(mem.index, idxPath,
+      nPartitions = InvertedIndex.writeParts(spark, 0L))
     val ceng = new CompressedSearchEngine(
       InvertedIndex.load(spark, idxPath), mem.nDocs, mem.avgdl)
 
@@ -48,19 +49,23 @@ object Plans {
           "decoded postings, hash agg, `TakeOrderedAndProject`.",
         ceng.searchTopK(Seq("merge", "sort", "window"))),
       ("Boolean query over the compressed engine (shared verify scan)",
-        "Expect: ONE scan of the corpus parquet — both phrases' candidate " +
-          "sets union with membership flags (doc_id-scale rows), content is " +
-          "hydrated once for the union, `graft_ascii_lower(content)` is " +
-          "projected once and both `contains` predicates evaluate as columns " +
-          "on it. The two-scans-of-files shape cost bool_or 2× bool_and (r3). " +
+        "Expect: ONE index scan for both phrases' candidate sets — the " +
+          "union of their tokens decoded once and one hash aggregate on " +
+          "doc_id with a `count_if` per phrase (membership flags in0/in1, " +
+          "doc_id-scale rows) — plus one index scan for scoring, and ONE " +
+          "scan of the corpus parquet: content is hydrated once for the " +
+          "union and both `asciicontains` predicates evaluate on that row. " +
+          "The two-scans-of-files shape cost bool_or 2× bool_and (r3). " +
           "Only OR hydrates the union: AND semi-joins to s1 ∩ s2 and NOT " +
           "hydrates s1 only (its result is a subset of phrase 1's matches), " +
           "so the content read never exceeds the operator's feasible set.",
         ceng.search("\"hash join\" OR \"merge sort\"", files)),
       ("Boolean AND over the compressed engine (intersection hydration)",
-        "Expect: the corpus scan is semi-joined on s1 ∩ s2 (two chained " +
-          "left-semi joins), both `contains` evaluate on one shared " +
-          "`graft_ascii_lower` projection, still exactly one corpus scan.",
+        "Expect: two chained `LeftSemi` joins — the corpus scan semi-joined " +
+          "on the docs the count aggregate flags for both phrases (in0 = 1 " +
+          "AND in1 = 1), then the scoring scan semi-joined on the verified " +
+          "docs. Both `asciicontains` predicates evaluate in one filter on " +
+          "the corpus scan, still exactly one corpus scan.",
         ceng.search("\"hash join\" AND \"merge sort\"", files)),
       ("Index build stage 1: salted segment runs",
         "Expect: ONE fused tokenize+compact eval per document (a single " +

@@ -23,11 +23,10 @@ import graft.search.QueryLog
   * append writes the buffer, and `:suggest` reads the log plus the buffer.
   * A request therefore runs only its own query's jobs; a process that is
   * killed without `close()` loses at most the buffered entries
-  * ([[HttpServe]] closes its session on SIGTERM, this REPL at `:quit` or
-  * end of input). A session
-  * is safe to call from several threads (the [[HttpServe]] workers): the
-  * buffer and its flush are serialized, and everything else a request
-  * does is its own Spark job.
+  * (both fronts close their session on SIGTERM, this REPL also at `:quit`
+  * and at end of input). A session is safe to call from several threads
+  * (the [[HttpServe]] workers): the buffer and its flush are serialized,
+  * and everything else a request does is its own Spark job.
   *
   * Protocol (one request per line, one JSON line per result row):
   *   <query>                 top-10 BM25 (tokens / "phrase" / boolean)
@@ -143,10 +142,18 @@ object Serve {
       render(df)
     }
 
-    /** Appends the buffered log entries and releases the cached corpus. */
-    def close(): Unit = {
-      flush()
-      files.unpersist()
+    /** Set by the first [[close]]; guarded by [[logLock]]. */
+    private var closed = false
+
+    /** Appends the buffered log entries and releases the cached corpus.
+      * Only the first call does anything, so a shutdown hook may call it
+      * again after `:quit` closed the session and stopped Spark. */
+    def close(): Unit = logLock.synchronized {
+      if (!closed) {
+        closed = true
+        flush()
+        files.unpersist()
+      }
     }
   }
 
@@ -169,9 +176,21 @@ object Serve {
     new Session(spark, ckptDir, files, s"$ckptDir/querylog")
   }
 
-  /** args: <sfDir> [ckptDir] (see [[open]]). */
+  /** Registers a JVM shutdown hook that runs `before` and then closes
+    * `session`, which appends its buffered query log. It runs before
+    * Spark's own hook (priority `FileSystem.SHUTDOWN_HOOK_PRIORITY + 30`)
+    * stops the SparkContext, so a SIGTERM loses no logged query. */
+  def closeOnShutdown(session: Session, before: () => Unit = () => ()): Unit =
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(() => {
+      before()
+      session.close()
+    }, org.apache.hadoop.fs.FileSystem.SHUTDOWN_HOOK_PRIORITY + 40)
+
+  /** args: <sfDir> [ckptDir] (see [[open]]). The session is closed at
+    * `:quit`, at end of input, or on SIGTERM ([[closeOnShutdown]]). */
   def main(args: Array[String]): Unit = {
     val session = open("graft-serve", args.headOption, args.lift(1))
+    closeOnShutdown(session)
     println(s"""{"status": "serving", "n_docs": ${session.engine.nDocs}}""")
     Iterator.continually(scala.io.StdIn.readLine())
       .takeWhile(l => l != null && l.trim != ":quit")

@@ -225,8 +225,8 @@ object InvertedIndex {
           c.blocks.map(_.max_weight).max, c.blocks, c.bytes, c.pos)
       }
 
-  /** Target bytes per output file for the auto-sized write (parquet sweet
-    * spot; matches the default maxPartitionBytes read granularity). */
+  /** Target bytes per output file for [[writeParts]] (parquet sweet spot;
+    * matches the default maxPartitionBytes read granularity). */
   val WriteTargetBytes: Long = 128L << 20
 
   /** Scale-adaptive write partition count: bytes-driven above, floored at
@@ -253,15 +253,15 @@ object InvertedIndex {
     * still opens every file; parquet min/max stats prune row groups inside
     * a task, not files at planning.
     *
-    * `nPartitions` ≤ 0 → auto-size from the index's payload bytes (one cheap
-    * agg over the already-persisted chunks) by [[writeParts]]: ceil(bytes /
-    * 128 MB), min max(32, 2×cores) — a fixed default under-splits a
-    * 100×-scale index (VERDICT r4 #6: the lc forensics recorded reduce-stage
-    * skew ~10 on the fixed-32 write, heavy top-term range vs tiny median).
-    * Range partitioning is on (term, chunk_id), so a hot term's many chunks
-    * span MULTIPLE output partitions — more partitions directly split the
+    * `nPartitions` comes from [[writeParts]] over the payload bytes the
+    * caller already knows (the build's segment manifest), so the write runs
+    * no byte-sum job of its own — a fixed count under-splits a 100×-scale
+    * index (VERDICT r4 #6: the lc forensics recorded reduce-stage skew ~10
+    * on the fixed-32 write, heavy top-term range vs tiny median). Range
+    * partitioning is on (term, chunk_id), so a hot term's many chunks span
+    * MULTIPLE output partitions — more partitions directly split the
     * hottest term range. */
-  def write(index: DataFrame, path: String, nPartitions: Int = -1,
+  def write(index: DataFrame, path: String, nPartitions: Int,
             io: graft.sources.TableIO = graft.sources.ParquetTableIO): Unit = {
     // Row groups sized to ONE chunk row (ChunkTargetBytes): parquet scans
     // split at row-group granularity, so the default 128 MB row groups
@@ -281,21 +281,11 @@ object InvertedIndex {
     // cannot overlap — the 1-core level improved MORE than the 4-core one
     // and the graded N→4N efficiency collapsed 0.87 → 0.67 (cpuwork
     // 0.92 → 0.876, n4 util down, consistent across 4 paired reps).
-    // Amdahl beats the GC saving: the persist stays. The caller-sized path
-    // still skips the byte-agg job (manifest metadata).
+    // Amdahl beats the GC saving: the persist stays.
     val cached = index.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val parts =
-        if (nPartitions > 0) nPartitions
-        else {
-          val bytes = cached.agg(coalesce(sum(
-            length(col("postings")).cast("long") +
-              length(col("positions")).cast("long")), lit(0L)))
-            .head().getLong(0)
-          writeParts(index.sparkSession, bytes)
-        }
-      io.overwrite(cached.repartitionByRange(parts, col("term"), col("chunk_id"))
+      io.overwrite(cached.repartitionByRange(nPartitions, col("term"), col("chunk_id"))
         .sortWithinPartitions("term", "chunk_id"), path, opts)
     } finally cached.unpersist()
   }

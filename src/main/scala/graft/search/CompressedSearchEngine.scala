@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   *    rank-identical to the exhaustive path (asserted in tests and by the
   *    shared DuckDB oracle).
   *  - [[search]]: the full serving lifecycle (token/phrase/boolean):
-  *    phrases take conjunctive candidates from the index, then the raw
-  *    substring verify over the corpus.
+  *    phrases take conjunctive candidates from the index (one per-doc
+  *    term-count aggregate, `members`, for a phrase and for both sides of
+  *    a boolean), then the raw substring verify over the corpus.
   *
   * Everything stays distributed: the only `collect`s are O(#query-terms)
   * metadata rows and the k threshold scores — never postings.
@@ -94,36 +95,34 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
       .orderBy(col("qid").asc, col("score").desc, col("doc_id").asc)
   }
 
-  /** Per-row bit mask assigning bit i to the i-th distinct term — the
-    * single-phase replacement for countDistinct(term): bit_count(bit_or) ==
-    * n is exactly "all n distinct terms present" without the two-exchange
-    * plan Spark gives countDistinct (partial distinct agg keyed (doc_id,
-    * term), then a second exchange keyed doc_id). Query term lists are tiny,
-    * so the when-chain is a few comparisons per row. */
-  private def termMaskCol(dts: Seq[String]): org.apache.spark.sql.Column =
-    dts.tail.zipWithIndex.foldLeft(
-      when(col("term") === dts.head, lit(1L))) { case (acc, (t, i)) =>
-        acc.when(col("term") === t, lit(1L << (i + 1)))
-    }.otherwise(lit(0L))
+  /** `(doc_id, in0, in1, …)` for the docs that hold every term of at least
+    * one of `sets`: `in_i` is 1 when the doc holds all of `sets(i)`, else 0.
+    * The union of the sets' terms is decoded once and ONE single-phase
+    * aggregate on `doc_id` counts, per set, the doc's postings whose term is
+    * in it. The build emits each `(term, doc_id)` posting exactly once
+    * (CompactTokens compacts per document, a run's doc ids strictly
+    * increase, and `PostingCodec.mergeStreamsPos` requires it), so that
+    * count is the number of the set's distinct terms the doc holds, and
+    * comparing it with the set's length is exact for any number of terms.
+    * A set with a duplicate term can never reach its length, and an empty
+    * set is never a member (its count, 0, would equal its length). */
+  private def members(sets: Seq[Seq[String]]): DataFrame = {
+    val flags = sets.zipWithIndex.map { case (ts, i) =>
+      (if (ts.isEmpty) lit(0)
+       else (count_if(col("term").isin(ts: _*)) === ts.length).cast("int")).as(s"in$i")
+    }
+    decoded(Some(sets.flatten.distinct)).groupBy("doc_id")
+      .agg(flags.head, flags.tail: _*)
+      .filter(sets.indices.map(i => col(s"in$i") === 1).reduce(_ || _))
+  }
 
   /** E5 conjunctive candidates from the index alone (docs containing ALL
     * terms) — checked against the DuckDB oracle (`q_candidates_all`) and,
     * through the phrase and boolean paths, against `LocalOracle` in specs.
-    * ONE single-phase aggregation (bit_or of per-term bits + popcount)
-    * instead of countDistinct's two-exchange plan: halves the exchanges of
-    * every phrase/bool candidate pass. Duplicate terms in `terms` make the
-    * filter unsatisfiable in both formulations (countDistinct ≤ distinct <
-    * length ⇔ popcount ≤ distinct < length). Falls back to countDistinct
-    * past 63 distinct terms. */
+    * One [[members]] aggregate; duplicate terms in `terms` make it
+    * unsatisfiable, and no terms give no candidates. */
   def candidatesAll(terms: Seq[String]): DataFrame =
-    if (terms.isEmpty) index.sparkSession.range(0).select(col("id").as("doc_id"))
-    else if (terms.distinct.length > 63)
-      decoded(Some(terms)).groupBy("doc_id")
-        .agg(countDistinct(col("term")).as("nt"))
-        .filter(col("nt") === terms.length).select("doc_id")
-    else decoded(Some(terms)).groupBy("doc_id")
-      .agg(bit_or(termMaskCol(terms.distinct)).as("tm"))
-      .filter(bit_count(col("tm")) === terms.length).select("doc_id")
+    members(Seq(terms)).select("doc_id")
 
   /** P4 phrase candidates: conjunctive tokens from the index, verified by
     * the raw substring filter over the corpus (`dbManager.java:324-341`
@@ -167,42 +166,18 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
         // naive per-phrase phraseCandidates plan scans `files` content
         // twice — round 3 measured bool_or at 2× phrase from that), and ONE
         // shared INDEX scan for both phrases' conjunctive candidate sets:
-        // the union of both phrases' tokens is decoded once and a single bit_or mask aggregation yields both
-        // memberships ("does this doc hold all of phrase i's tokens" = mask
-        // covers the phrase's bits), replacing two decode+agg subtrees plus
-        // the union/outer-join flag plumbing with one exchange. The
-        // hydration set stays operator-narrowed: a doc outside s1 ∩ s2 can
-        // never satisfy AND, and a NOT result is a subset of phrase 1's
-        // matches — only OR genuinely needs the union. Membership flags
-        // gate each contains so every side keeps its exact
-        // candidates∩substring semantics (reference dbManager verify): a
-        // doc outside a phrase's candidate set cannot match it even if the
-        // raw substring happens to occur.
+        // one members aggregate over the union of both phrases' tokens
+        // yields both memberships. The hydration set stays
+        // operator-narrowed: a doc outside s1 ∩ s2 can never satisfy AND,
+        // and a NOT result is a subset of phrase 1's matches — only OR
+        // genuinely needs the union. Membership flags gate each contains so
+        // every side keeps its exact candidates∩substring semantics
+        // (reference dbManager verify): a doc outside a phrase's candidate
+        // set cannot match it even if the raw substring happens to occur.
         val ts1 = toks(p1)
         val ts2 = toks(p2)
-        // (doc_id, in1, in2) int flags; rows only for docs in s1 ∪ s2
-        val u = (ts1 ++ ts2).distinct
-        val flagged: DataFrame =
-          if (u.isEmpty || u.length > 63)
-            // no tokens (empty sets) or a >63-term union: per-set fallback
-            candidatesAll(ts1).select(col("doc_id"), lit(1).as("in1"), lit(0).as("in2"))
-              .unionByName(candidatesAll(ts2)
-                .select(col("doc_id"), lit(0).as("in1"), lit(1).as("in2")))
-              .groupBy("doc_id")
-              .agg(max(col("in1")).as("in1"), max(col("in2")).as("in2"))
-          else {
-            val bit = u.zipWithIndex.map { case (t, i) => t -> (1L << i) }.toMap
-            // empty phrase ⇒ empty candidate set ⇒ never a member
-            val m1 = if (ts1.isEmpty) -1L else ts1.map(bit).reduce(_ | _)
-            val m2 = if (ts2.isEmpty) -1L else ts2.map(bit).reduce(_ | _)
-            def memberOf(m: Long) =
-              if (m == -1L) lit(0)
-              else when(col("tm").bitwiseAND(lit(m)) === m, 1).otherwise(0)
-            decoded(Some(u)).groupBy("doc_id")
-              .agg(bit_or(termMaskCol(u)).as("tm"))
-              .select(col("doc_id"), memberOf(m1).as("in1"), memberOf(m2).as("in2"))
-              .filter(col("in1") === 1 || col("in2") === 1)
-          }
+        // (doc_id, in0, in1) int flags; rows only for docs in s1 ∪ s2
+        val flagged = members(Seq(ts1, ts2))
         def lowered(p: String) = lit(graft.functions.AsciiLower.lowerString(p))
         // zero-allocation case-folding byte search (graft.functions
         // .AsciiContains) — no lowered content copy per candidate row
@@ -210,20 +185,20 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
         val c2 = graft.functions.GraftFunctions.asciiContains(col("content"), lowered(p2))
         val cand = op match {
           case "and" =>
-            files.join(flagged.filter(col("in1") === 1 && col("in2") === 1)
+            files.join(flagged.filter(col("in0") === 1 && col("in1") === 1)
                 .select("doc_id"), Seq("doc_id"), "left_semi")
               .filter(c1 && c2)
               .select("doc_id")
           case "not" =>
             // a doc in s1 but outside s2 passes regardless of its content
             // (phrase 2 cannot match without its conjunctive candidates)
-            files.join(flagged.filter(col("in1") === 1)
-                .select(col("doc_id"), col("in2")), Seq("doc_id"))
-              .filter(c1 && !(col("in2") === 1 && c2))
+            files.join(flagged.filter(col("in0") === 1)
+                .select(col("doc_id"), col("in1")), Seq("doc_id"))
+              .filter(c1 && !(col("in1") === 1 && c2))
               .select("doc_id")
           case "or" =>
             files.join(flagged, Seq("doc_id"))
-              .filter((col("in1") === 1 && c1) || (col("in2") === 1 && c2))
+              .filter((col("in0") === 1 && c1) || (col("in1") === 1 && c2))
               .select("doc_id")
         }
         val terms = if (op == "not") ts1 else (ts1 ++ ts2).distinct

@@ -28,7 +28,7 @@ object Extras {
     GraftFunctions.register(files.sparkSession)
     import graft.functions.AsciiLower.lowerString
     def has(p: Column, needle: String): Column =
-      contains(GraftFunctions.asciiLower(p), lit(lowerString(needle)))
+      GraftFunctions.asciiContains(p, lit(lowerString(needle)))
     val matches: Column => Column = QueryParser.parse(raw) match {
       case Tokens(text)        => p => has(p, text)
       case Phrase(ph)          => p => has(p, ph)

@@ -23,7 +23,8 @@ class PlanAuditSpec extends SparkSpec {
   /** The serving engine over sf's index, written to and re-read from
     * `idxPath` so plans show the real parquet index scan. */
   private def engineAt(idxPath: String): CompressedSearchEngine = {
-    InvertedIndex.write(mem.index, idxPath)
+    InvertedIndex.write(mem.index, idxPath,
+      nPartitions = InvertedIndex.writeParts(spark, 0L))
     new CompressedSearchEngine(
       InvertedIndex.load(spark, idxPath), mem.nDocs, mem.avgdl)
   }
@@ -149,8 +150,9 @@ class PlanAuditSpec extends SparkSpec {
       assert(p.contains("asciicontains"), p)
       assert(!p.contains("Contains(asciilower"), p)
       // r6: BOTH phrases' conjunctive candidate sets come from ONE decoded
-      // index scan (union-of-terms bit mask agg) + one scoring scan — the
-      // per-phrase candidatesAll subtrees were the third index scan
+      // index scan (one per-doc term-count agg over the union of their
+      // terms) + one scoring scan — the per-phrase candidatesAll subtrees
+      // were the third index scan
       val idxScans = "graft_planspec_index_bool".r.findAllIn(p).length
       assert(idxScans == 2,
         s"[$q] expected 2 index scans (candidates + scoring), got $idxScans in:\n$p")

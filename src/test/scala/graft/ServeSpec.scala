@@ -122,7 +122,11 @@ class ServeSpec extends SparkSpec {
         """{"query":"Merge join","cnt":1}"""))
       assert(parquetFiles() === 0)
       got
-    } finally s.close()
+    } finally {
+      // a second close (a shutdown hook after `:quit`) appends nothing
+      s.close()
+      s.close()
+    }
     assert(parquetFiles() === 1)
     assert(QueryLog.load(spark, logPath).count() === 4)
     // a new session on the same log: nothing lost, nothing counted twice

@@ -28,7 +28,10 @@ class PhraseSpec extends SparkSpec {
     2L -> "hash gamma join",               // tokens present, never adjacent
     3L -> "alpha hash joins beta join",    // prefix-boundary match
     4L -> "rehash joins only",             // substring present, token 'hash'/'join' absent
-    5L -> "nothing to see here")
+    5L -> "nothing to see here",
+    // 70 distinct terms: more than a 64-bit term mask holds; the "!!!"
+    // substring lets a phrase with no tokens reach the verify
+    6L -> ((0 until 70).map(i => s"w$i") :+ "!!!").mkString(" "))
 
   private lazy val files = docs.toDF("doc_id", "content")
   private lazy val ce = CompressedSearchEngine.build(files, saltBuckets = 4)
@@ -44,10 +47,20 @@ class PhraseSpec extends SparkSpec {
 
   test("full phrase + boolean search (fused single-scan boolean " +
       "candidates) == baseline") {
+    def ws(r: Range) = r.map(i => s"w$i").mkString("\"", " ", "\"")
+    val w70 = ws(0 until 70)
     for (q <- Seq("\"hash join\"", "\"hash join\" AND \"join beta\"",
         "\"hash join\" OR \"nothing to\"", "\"hash join\" NOT \"rehash\"",
         "\"hash join\" AND \"hash join\"", "\"absent\" OR \"hash join\"",
-        "\"hash join\" NOT \"hash join\"")) {
+        "\"hash join\" NOT \"hash join\"",
+        // more terms than a 64-bit mask: one set, and a union of two
+        w70, s"$w70 AND ${ws(5 until 7)}", s"$w70 OR \"hash join\"",
+        s"$w70 NOT \"hash join\"", s"\"hash join\" NOT $w70",
+        s"${ws(0 until 40)} OR ${ws(30 until 70)}",
+        // a phrase with no tokens has no candidates, on either side
+        "\"!!!\"", s"\"!!!\" AND ${ws(0 until 2)}", s"${ws(0 until 2)} AND \"!!!\"",
+        "\"!!!\" OR \"hash join\"", "\"hash join\" OR \"!!!\"",
+        s"\"!!!\" NOT ${ws(0 until 2)}", s"${ws(0 until 2)} NOT \"!!!\"")) {
       val got = ce.search(q, files, 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
       val want = LocalOracle.search(docs, "simple", q, 10)
