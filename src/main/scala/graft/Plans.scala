@@ -48,24 +48,31 @@ object Plans {
           "(row-group pruning via min/max stats), generate/explode of " +
           "decoded postings, hash agg, `TakeOrderedAndProject`.",
         ceng.searchTopK(Seq("merge", "sort", "window"))),
+      ("Phrase query over the compressed engine (one index scan)",
+        "Expect: three stages. The index scan (`PushedFilters: [In(term, " +
+          "…)]`) decodes the phrase's tokens once into ONE hash aggregate " +
+          "on doc_id that gives the membership flag in0 (a `count` of the " +
+          "phrase's terms) and the BM25 score (a `sum` of the weights); " +
+          "its rows are broadcast into a `BroadcastHashJoin` with the " +
+          "corpus scan, whose `asciicontains` filter is the substring " +
+          "verify, and `TakeOrderedAndProject` takes the top-k of the join. " +
+          "No second index scan re-scores the verified docs.",
+        ceng.search("\"hash join\"", files)),
       ("Boolean query over the compressed engine (shared verify scan)",
-        "Expect: ONE index scan for both phrases' candidate sets — the " +
-          "union of their tokens decoded once and one hash aggregate on " +
-          "doc_id with a `count_if` per phrase (membership flags in0/in1, " +
-          "doc_id-scale rows) — plus one index scan for scoring, and ONE " +
-          "scan of the corpus parquet: content is hydrated once for the " +
-          "union and both `asciicontains` predicates evaluate on that row. " +
-          "The two-scans-of-files shape cost bool_or 2× bool_and (r3). " +
-          "Only OR hydrates the union: AND semi-joins to s1 ∩ s2 and NOT " +
-          "hydrates s1 only (its result is a subset of phrase 1's matches), " +
-          "so the content read never exceeds the operator's feasible set.",
+        "Expect: ONE index scan for both phrases — the union of their " +
+          "tokens decoded once into one hash aggregate on doc_id with a " +
+          "`count` per phrase (flags in0/in1) and the `sum` of the BM25 " +
+          "weights (score) — broadcast into ONE scan of the corpus parquet: " +
+          "the scan keeps the rows that contain either phrase, the join " +
+          "condition pairs each `asciicontains` with its phrase's flag, and " +
+          "the top-k is taken over the join. The two-scans-of-files shape " +
+          "cost bool_or 2× bool_and (r3).",
         ceng.search("\"hash join\" OR \"merge sort\"", files)),
       ("Boolean AND over the compressed engine (intersection hydration)",
-        "Expect: two chained `LeftSemi` joins — the corpus scan semi-joined " +
-          "on the docs the count aggregate flags for both phrases (in0 = 1 " +
-          "AND in1 = 1), then the scoring scan semi-joined on the verified " +
-          "docs. Both `asciicontains` predicates evaluate in one filter on " +
-          "the corpus scan, still exactly one corpus scan.",
+        "Expect: the same three stages; the aggregate's rows are filtered " +
+          "to the docs flagged for both phrases (in0 = 1 AND in1 = 1) " +
+          "before the broadcast, and both `asciicontains` predicates " +
+          "evaluate in one filter on the one corpus scan.",
         ceng.search("\"hash join\" AND \"merge sort\"", files)),
       ("Index build stage 1: salted segment runs",
         "Expect: ONE fused tokenize+compact eval per document (a single " +

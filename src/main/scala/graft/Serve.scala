@@ -59,13 +59,17 @@ object Serve {
   /** J2/J3 hydrate AFTER top-k: the top-k (at most
     * [[graft.search.CompressedSearchEngine.MaxResultWindow]] rows of
     * `(doc_id, score)`) is collected, and the display columns are read by
-    * key for those docs only: one job over `files` filtered to the ids,
-    * with each row's score looked up in a literal map — no join, no
-    * exchange. The rows are sorted in one partition in the deterministic
-    * (score desc, doc_id asc) order: `(doc_id, score, repo, path, lang)`. */
+    * key for those docs only: one job over `files` that keeps the rows whose
+    * `doc_id` is a key of a literal `doc_id → score` map and looks their
+    * score up in it — no join, no exchange. The map is a reference the
+    * generated code reads, not inlined constants (as an `IN` list of ten
+    * longs would be), so a new query compiles no code; an empty top-k is a
+    * constant-false filter, which reads no corpus rows. The rows are sorted
+    * in one partition in the deterministic (score desc, doc_id asc) order:
+    * `(doc_id, score, repo, path, lang)`. */
   def hydrate(topk: DataFrame, files: DataFrame): DataFrame = {
     val scores = topk.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    files.filter(col("doc_id").isin(scores.keys.toSeq: _*))
+    files.filter(lit(scores.nonEmpty) && map_contains_key(typedLit(scores), col("doc_id")))
       .select(col("doc_id"), element_at(typedLit(scores), col("doc_id")).as("score"),
         col("repo"), col("path"), col("lang"))
       .coalesce(1)

@@ -1,6 +1,6 @@
 package graft.search
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 
@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   *    rank-identical to the exhaustive path (asserted in tests and by the
   *    shared DuckDB oracle).
   *  - [[search]]: the full serving lifecycle (token/phrase/boolean):
-  *    phrases take conjunctive candidates from the index (one per-doc
-  *    term-count aggregate, `members`, for a phrase and for both sides of
-  *    a boolean), then the raw substring verify over the corpus.
+  *    phrases take conjunctive candidates and their BM25 scores from ONE
+  *    index scan (one per-doc aggregate, `members`, for a phrase and for
+  *    both sides of a boolean), then the raw substring verify over the
+  *    corpus and the top-k of the docs that pass it.
   *
   * Everything stays distributed: the only `collect`s are O(#query-terms)
   * metadata rows and the k threshold scores — never postings.
@@ -38,7 +39,7 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
   // native codegen'd decode (graft.functions.DecodePostings) — stays inside
   // whole-stage codegen fused with the explode, no catalyst↔Scala converters
-  private def decodeCol(c: org.apache.spark.sql.Column) =
+  private def decodeCol(c: Column) =
     graft.functions.GraftFunctions.decodePostings(c)
 
   private def rowsFor(terms: Seq[String]): DataFrame =
@@ -95,24 +96,30 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
       .orderBy(col("qid").asc, col("score").desc, col("doc_id").asc)
   }
 
-  /** `(doc_id, in0, in1, …)` for the docs that hold every term of at least
-    * one of `sets`: `in_i` is 1 when the doc holds all of `sets(i)`, else 0.
-    * The union of the sets' terms is decoded once and ONE single-phase
-    * aggregate on `doc_id` counts, per set, the doc's postings whose term is
-    * in it. The build emits each `(term, doc_id)` posting exactly once
-    * (CompactTokens compacts per document, a run's doc ids strictly
-    * increase, and `PostingCodec.mergeStreamsPos` requires it), so that
-    * count is the number of the set's distinct terms the doc holds, and
-    * comparing it with the set's length is exact for any number of terms.
-    * A set with a duplicate term can never reach its length, and an empty
-    * set is never a member (its count, 0, would equal its length). */
-  private def members(sets: Seq[Seq[String]]): DataFrame = {
+  /** `(doc_id, in0, in1, …, score)` for the docs that hold every term of at
+    * least one of `sets`: `in_i` is 1 when the doc holds all of `sets(i)`,
+    * else 0, and `score` is the doc's BM25 score over the `scored` terms
+    * (default: every term of `sets`). The union of the sets' terms is
+    * decoded once and ONE aggregate on `doc_id` counts, per set, the doc's
+    * postings whose term is in it, and sums their weights. The build emits
+    * each `(term, doc_id)` posting exactly once (CompactTokens compacts per
+    * document, a run's doc ids strictly increase, and
+    * `PostingCodec.mergeStreamsPos` requires it), so that count is the
+    * number of the set's distinct terms the doc holds, and comparing it
+    * with the set's length is exact for any number of terms. A set with a
+    * duplicate term can never reach its length, and an empty set is never
+    * a member (its count, 0, would equal its length). A caller that drops
+    * `score` drops its sum too (column pruning). */
+  private def members(sets: Seq[Seq[String]],
+                      scored: Option[Seq[String]] = None): DataFrame = {
     val flags = sets.zipWithIndex.map { case (ts, i) =>
       (if (ts.isEmpty) lit(0)
        else (count_if(col("term").isin(ts: _*)) === ts.length).cast("int")).as(s"in$i")
     }
+    val w = BM25.weight(avgdl, nDocs)
+    val score = round(sum(scored.fold(w)(ts => when(col("term").isin(ts: _*), w))), 4)
     decoded(Some(sets.flatten.distinct)).groupBy("doc_id")
-      .agg(flags.head, flags.tail: _*)
+      .agg(flags.head, flags.tail :+ score.as("score"): _*)
       .filter(sets.indices.map(i => col(s"in$i") === 1).reduce(_ || _))
   }
 
@@ -124,86 +131,67 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   def candidatesAll(terms: Seq[String]): DataFrame =
     members(Seq(terms)).select("doc_id")
 
+  /** The corpus rows of the docs that pass `verify`, joined to the
+    * broadcast [[members]] rows of `sets`. */
+  private def verified(sets: Seq[Seq[String]], scored: Option[Seq[String]],
+                       files: DataFrame, verify: Column): DataFrame =
+    files.join(broadcast(members(sets, scored)), Seq("doc_id")).filter(verify)
+
+  /** Phrase `p` holds in a doc of set `i` (`in_i` = 1) whose raw content
+    * contains it, ASCII case-folded (`dbManager.java:324-341` semantics —
+    * the verify is authoritative). AsciiContains folds [A-Z] on the fly
+    * during the byte search, so no lowered copy of the content is made.
+    * The optimizer pushes the check below the join, onto every corpus row;
+    * running it on the joined candidates only measured no faster
+    * (GATES.md). */
+  private def hit(i: Int, p: String): Column =
+    col(s"in$i") === 1 && graft.functions.GraftFunctions.asciiContains(
+      col("content"), lit(graft.functions.AsciiLower.lowerString(p)))
+
   /** P4 phrase candidates: conjunctive tokens from the index, verified by
-    * the raw substring filter over the corpus (`dbManager.java:324-341`
-    * semantics — the verify is authoritative). GATES.md measured a
+    * the raw substring filter over the corpus. GATES.md measured a
     * positional token-adjacency pre-filter 4.4–14.7× slower than this plan
     * at every corpus size, so it is the only one. */
   def phraseCandidates(phrase: String, files: DataFrame,
-                       analyzer: String = "simple"): DataFrame = {
-    // AsciiContains folds [A-Z] on the fly during the byte search — the
-    // verify scan no longer allocates a lowered copy of every candidate's
-    // content (guide §4: one fused primitive loop per row)
-    val cand = candidatesAll(
-      graft.analyze.Analyzer.queryTokens(analyzer, phrase).distinct)
-    files.join(cand, Seq("doc_id"), "left_semi")
-      .filter(graft.functions.GraftFunctions.asciiContains(col("content"),
-        lit(graft.functions.AsciiLower.lowerString(phrase))))
-      .select("doc_id")
-  }
-
-  private def scoreCand(terms: Seq[String], cand: Option[DataFrame], k: Int): DataFrame = {
-    val base = decoded(Some(terms))
-    val rows = cand.fold(base)(c => base.join(c, Seq("doc_id"), "left_semi"))
-    scoreDecoded(rows, k)
-  }
+                       analyzer: String = "simple"): DataFrame =
+    verified(Seq(graft.analyze.Analyzer.queryTokens(analyzer, phrase).distinct),
+      None, files, hit(0, phrase)).select("doc_id")
 
   /** Full query lifecycle over the persisted index + corpus (serving path):
     * parse → candidates → BM25 → top-k. Certified against the DuckDB
     * oracles (`q_bm25_*`, `q_phrase*`, `q_bool_*`, `q_paged`, `q_snippets*`)
-    * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec). */
+    * and rank-identical to `LocalOracle` on seeded corpora (SearchSpec).
+    *
+    * A token query is [[searchTopK]]. A phrase or boolean query reads the
+    * index ONCE: one [[members]] aggregate over the union of its phrases'
+    * tokens gives each candidate's membership flags and its BM25 score
+    * (for NOT, over phrase 1's tokens only, as its result is a subset of
+    * phrase 1's matches). Those rows are broadcast into ONE scan of the
+    * corpus, which runs every phrase's substring verify on the joined rows
+    * and takes the top-k: three stages in all. Each membership flag gates
+    * its phrase's verify, so every side keeps its exact
+    * candidates ∩ substring semantics (reference dbManager verify): a doc
+    * outside a phrase's candidate set cannot match it even if the raw
+    * substring happens to occur. */
   def search(raw: String, files: DataFrame, k: Int = 10,
              analyzer: String = "simple"): DataFrame = {
     require(k >= 0 && k <= CompressedSearchEngine.MaxResultWindow,
       s"k must be in [0, ${CompressedSearchEngine.MaxResultWindow}]: $k")
     def toks(s: String) = graft.analyze.Analyzer.queryTokens(analyzer, s).distinct
-    QueryParser.parse(raw) match {
-      case Tokens(text) => scoreCand(toks(text), None, k)
-      case Phrase(p)    =>
-        scoreCand(toks(p), Some(phraseCandidates(p, files, analyzer)), k)
+    val hits = QueryParser.parse(raw) match {
+      case Tokens(text) => return searchTopK(toks(text), k)
+      case Phrase(p) => verified(Seq(toks(p)), None, files, hit(0, p))
       case Bool(op, p1, p2) =>
-        // ONE shared corpus scan for both phrases' substring verifies (the
-        // naive per-phrase phraseCandidates plan scans `files` content
-        // twice — round 3 measured bool_or at 2× phrase from that), and ONE
-        // shared INDEX scan for both phrases' conjunctive candidate sets:
-        // one members aggregate over the union of both phrases' tokens
-        // yields both memberships. The hydration set stays
-        // operator-narrowed: a doc outside s1 ∩ s2 can never satisfy AND,
-        // and a NOT result is a subset of phrase 1's matches — only OR
-        // genuinely needs the union. Membership flags gate each contains so
-        // every side keeps its exact candidates∩substring semantics
-        // (reference dbManager verify): a doc outside a phrase's candidate
-        // set cannot match it even if the raw substring happens to occur.
-        val ts1 = toks(p1)
-        val ts2 = toks(p2)
-        // (doc_id, in0, in1) int flags; rows only for docs in s1 ∪ s2
-        val flagged = members(Seq(ts1, ts2))
-        def lowered(p: String) = lit(graft.functions.AsciiLower.lowerString(p))
-        // zero-allocation case-folding byte search (graft.functions
-        // .AsciiContains) — no lowered content copy per candidate row
-        val c1 = graft.functions.GraftFunctions.asciiContains(col("content"), lowered(p1))
-        val c2 = graft.functions.GraftFunctions.asciiContains(col("content"), lowered(p2))
-        val cand = op match {
-          case "and" =>
-            files.join(flagged.filter(col("in0") === 1 && col("in1") === 1)
-                .select("doc_id"), Seq("doc_id"), "left_semi")
-              .filter(c1 && c2)
-              .select("doc_id")
-          case "not" =>
-            // a doc in s1 but outside s2 passes regardless of its content
-            // (phrase 2 cannot match without its conjunctive candidates)
-            files.join(flagged.filter(col("in0") === 1)
-                .select(col("doc_id"), col("in1")), Seq("doc_id"))
-              .filter(c1 && !(col("in1") === 1 && c2))
-              .select("doc_id")
-          case "or" =>
-            files.join(flagged, Seq("doc_id"))
-              .filter((col("in0") === 1 && c1) || (col("in1") === 1 && c2))
-              .select("doc_id")
+        val sets = Seq(toks(p1), toks(p2))
+        op match {
+          case "and" => verified(sets, None, files, hit(0, p1) && hit(1, p2))
+          case "or"  => verified(sets, None, files, hit(0, p1) || hit(1, p2))
+          case "not" => verified(sets, Some(sets.head), files, hit(0, p1) && !hit(1, p2))
         }
-        val terms = if (op == "not") ts1 else (ts1 ++ ts2).distinct
-        scoreCand(terms, Some(cand), k)
     }
+    hits.select("doc_id", "score")
+      .orderBy(col("score").desc, col("doc_id").asc)
+      .limit(k)
   }
 
   /** O2: paginated serving — reference semantics
@@ -332,9 +320,8 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   /** Block-selective variant of [[decodedFrom]]: decodes only blocks whose
     * doc range intersects [lo, hi] and whose max_weight ≥ minw (the block-max
     * skip-pointer read path, graft.functions.DecodePostingsBlocks). */
-  private def decodedBlocksFrom(chunkRows: DataFrame, lo: org.apache.spark.sql.Column,
-                                hi: org.apache.spark.sql.Column,
-                                minw: org.apache.spark.sql.Column): DataFrame =
+  private def decodedBlocksFrom(chunkRows: DataFrame, lo: Column, hi: Column,
+                                minw: Column): DataFrame =
     chunkRows.select(col("term"), col("df"),
         explode(graft.functions.GraftFunctions.decodeBlocks(
           col("postings"), col("blocks"), lo, hi, minw)).as("p"))

@@ -8,7 +8,7 @@ import graft.search.CompressedSearchEngine
 
 /** Asserts the physical-plan properties the engine's 100 TB posture depends
   * on (the same plans PLANS.md documents): pushdown reaches the parquet
-  * scan, candidate sets are semi-join probes, top-k plans as
+  * scan, candidate sets are broadcast into the corpus scan, top-k plans as
   * TakeOrderedAndProject (never a global sort), and the index build has
   * exactly the intended exchanges. */
 class PlanAuditSpec extends SparkSpec {
@@ -118,29 +118,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("HashAggregate"), p)
   }
 
-  test("candidate membership is a semi join, not a materialized set") {
+  /** The final AQE plan of `df`, run once. AdaptiveSparkPlan.toString
+    * prints the Final AND Initial plans; this is the Final section. */
+  private def finalPlan(df: DataFrame): String = {
+    df.collect()
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+  }
+
+  test("the corpus joins the broadcast scored member set") {
     val files = Corpus.files(spark, sf)
-    val p = plan(engineAt("/tmp/graft_planspec_index").search(
-      "\"hash join\" AND \"merge sort\"", files))
-    // the corpus scan is semi-joined on s1 ∩ s2 before the substring verify
-    assert(p.contains("LeftSemi"), p)
+    val ce = engineAt("/tmp/graft_planspec_index")
+    for (q <- Seq("\"hash join\"", "\"hash join\" AND \"merge sort\"")) {
+      val p = finalPlan(ce.search(q, files))
+      // the (doc_id, in0, in1, score) rows are broadcast into the corpus
+      // scan; the corpus is never shuffled to meet them
+      assert(p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+    }
   }
 
   test("compressed boolean query verifies both phrases in ONE corpus scan") {
     val ce = engineAt("/tmp/graft_planspec_index_bool")
     val files = Corpus.files(spark, sf)
-    // phrases chosen to co-occur at sf0.001 (AND/NOT nonempty) — an empty
-    // intermediate would let AQE empty-propagate the corpus scan away
-    for (q <- Seq("\"merge sort\" OR \"table scan\"",
+    // a lone phrase and each operator; phrases chosen to co-occur at
+    // sf0.001 (AND/NOT nonempty) — an empty intermediate would let AQE
+    // empty-propagate the corpus scan away
+    for (q <- Seq("\"merge sort\"", "\"merge sort\" OR \"table scan\"",
         "\"merge sort\" AND \"table scan\"",
         "\"merge sort\" NOT \"table scan\"")) {
-      val df = ce.search(q, files)
-      df.collect() // AQE finalizes the plan at runtime
-      // AdaptiveSparkPlan.toString prints the Final AND Initial plans —
-      // count scans in the final section only
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      // content is hydrated once for the UNION of both candidate sets and
+      val p = finalPlan(ce.search(q, files))
+      // content is read once for the UNION of both candidate sets and
       // both `contains` predicates evaluate on that single scan — the
       // two-scans-of-files shape made bool_or cost 2× bool_and (r3)
       val scans = "documents\\.parquet".r.findAllIn(p).length
@@ -149,13 +156,12 @@ class PlanAuditSpec extends SparkSpec {
       // zero-allocation case-folding search (r6 — no lowered content copy)
       assert(p.contains("asciicontains"), p)
       assert(!p.contains("Contains(asciilower"), p)
-      // r6: BOTH phrases' conjunctive candidate sets come from ONE decoded
-      // index scan (one per-doc term-count agg over the union of their
-      // terms) + one scoring scan — the per-phrase candidatesAll subtrees
-      // were the third index scan
+      // ONE decoded index scan: one aggregate over the union of the
+      // phrases' terms gives both membership flags and the BM25 score, so
+      // no second scan re-decodes the terms to score the verified docs
       val idxScans = "graft_planspec_index_bool".r.findAllIn(p).length
-      assert(idxScans == 2,
-        s"[$q] expected 2 index scans (candidates + scoring), got $idxScans in:\n$p")
+      assert(idxScans == 1,
+        s"[$q] expected 1 index scan (candidates + scores), got $idxScans in:\n$p")
     }
   }
 }

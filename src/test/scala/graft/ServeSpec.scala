@@ -5,6 +5,10 @@ import graft.corpus.Corpus
 import graft.search.QueryLog
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Callable, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.SpecBus
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 
 class ServeSpec extends SparkSpec {
@@ -52,6 +56,10 @@ class ServeSpec extends SparkSpec {
       val plan = hydrated.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
       assert(hydrated.toJSON.collect().toSeq === all)
+      // an empty top-k reads no corpus rows
+      val none = Serve.hydrate(s.engine.search("\"merge sort\" AND \"zzz\"", files), files)
+      assert(none.collect().isEmpty)
+      assert(!none.queryExecution.executedPlan.toString.contains("FileScan"))
       assert(s.handle("") === Seq.empty)
       assert(s.handle(":page x") === Seq("""{"error": "usage: :page <p> <n> <query>"}"""))
 
@@ -85,6 +93,44 @@ class ServeSpec extends SparkSpec {
         assert(inj.startsWith("[") && !inj.contains("\"cnt\":"))
       } finally server.stop(0)
     } finally s.close()
+  }
+
+  test("a new query compiles no code once the session is warm") {
+    val s = new Serve.Session(spark, dir, files, tmpDir("graft-serve-codegen") + "/querylog")
+    try {
+      Seq("merge", "window", "merge").foreach(q => assert(s.handle(q).size === 10))
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      // a term no earlier query asked for: only literals differ, and the
+      // hydrate's ids live in a map the generated code reads
+      assert(s.handle("customer").size === 10)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiled)
+    } finally s.close()
+  }
+
+  test("a served request runs at most 3 jobs for tokens, 4 for a phrase or boolean") {
+    val s = new Serve.Session(spark, dir, files, tmpDir("graft-serve-jobs") + "/querylog")
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      // a stage added to the plan shows here as a job more per request
+      for ((q, most) <- Seq("merge sort window" -> 3, "\"hash join\"" -> 4,
+          "\"merge sort\" AND \"table scan\"" -> 4,
+          "\"merge sort\" OR \"table scan\"" -> 4,
+          "\"merge sort\" NOT \"table scan\"" -> 4)) {
+        SpecBus.drain(sc)
+        jobs.set(0)
+        assert(s.handle(q).nonEmpty, q)
+        SpecBus.drain(sc)
+        assert(jobs.get <= most, s"[$q] ran ${jobs.get} jobs")
+      }
+    } finally {
+      sc.removeSparkListener(listener)
+      s.close()
+    }
   }
 
   test("a result window past MaxResultWindow is a 400, and the session still answers") {
