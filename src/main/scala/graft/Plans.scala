@@ -54,8 +54,9 @@ object Plans {
           "on doc_id that gives the membership flag in0 (a `count` of the " +
           "phrase's terms) and the BM25 score (a `sum` of the weights); " +
           "its rows are broadcast into a `BroadcastHashJoin` with the " +
-          "corpus scan, whose `asciicontains` filter is the substring " +
-          "verify, and `TakeOrderedAndProject` takes the top-k of the join. " +
+          "corpus scan, whose `AsciiContains.containsLower` filter is the " +
+          "substring verify, and `TakeOrderedAndProject` takes the top-k " +
+          "of the join. " +
           "No second index scan re-scores the verified docs.",
         ceng.search("\"hash join\"", files)),
       ("Boolean query over the compressed engine (shared verify scan)",
@@ -64,20 +65,22 @@ object Plans {
           "`count` per phrase (flags in0/in1) and the `sum` of the BM25 " +
           "weights (score) — broadcast into ONE scan of the corpus parquet: " +
           "the scan keeps the rows that contain either phrase, the join " +
-          "condition pairs each `asciicontains` with its phrase's flag, and " +
-          "the top-k is taken over the join. The two-scans-of-files shape " +
+          "condition pairs each `AsciiContains.containsLower` call with its " +
+          "phrase's flag, and the top-k is taken over the join. The " +
+          "two-scans-of-files shape " +
           "cost bool_or 2× bool_and (r3).",
         ceng.search("\"hash join\" OR \"merge sort\"", files)),
       ("Boolean AND over the compressed engine (intersection hydration)",
         "Expect: the same three stages; the aggregate's rows are filtered " +
           "to the docs flagged for both phrases (in0 = 1 AND in1 = 1) " +
-          "before the broadcast, and both `asciicontains` predicates " +
-          "evaluate in one filter on the one corpus scan.",
+          "before the broadcast, and both `AsciiContains.containsLower` " +
+          "predicates evaluate in one filter on the one corpus scan.",
         ceng.search("\"hash join\" AND \"merge sort\"", files)),
       ("Index build stage 1: salted segment runs",
         "Expect: ONE fused tokenize+compact eval per document (a single " +
-          "graft_compact_tokens — tf, len, and wire-encoded positions ride " +
-          "in the posting row, so there is NO docstats join, no per-token " +
+          "`CompactTokens.compact` call — tf, len, and wire-encoded " +
+          "positions ride in the posting row, so there is NO docstats " +
+          "join, no per-token " +
           "rows, and no map-side sort) and a single `Exchange " +
           "hashpartitioning(term, salt)` feeding an in-partition sort + " +
           "MapPartitions (the streaming var-byte segment encoder).",

@@ -2,13 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** ASCII-only lowercase as a native codegen'd Catalyst `Expression`.
+/** ASCII-only lowercase (`graft_ascii_lower`).
   *
   * Why not built-in `lower()`: Spark 4's collation-aware `Lower` routes
   * through ICU (`CollationSupport.Lower.execBinaryICU`), whose shared
@@ -20,19 +19,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * have the high bit set and are untouched), contention-free, and
   * whole-stage-codegen friendly.
   */
-case class AsciiLower(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    AsciiLower.lower(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AsciiLower.lower($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): AsciiLower =
-    copy(child = newChild)
-}
-
 object AsciiLower {
   /** Static helper invoked from generated code. */
   def lower(s: UTF8String): UTF8String = {
@@ -80,7 +66,7 @@ object AsciiLower {
   }
 }
 
-/** Byte-level ASCII tokenizer as a native codegen'd expression: emits the
+/** Byte-level ASCII tokenizer (`graft_tokens`): emits the
   * maximal `[A-Za-z0-9]+` runs of the input, lowercased — exactly
   * `filter(split(ascii_lower(s), "[^a-z0-9]+"), _ != "")` but with ONE
   * right-sized byte[] per token instead of java.util.regex + String churn.
@@ -89,21 +75,9 @@ object AsciiLower {
   * stage); this keeps the tokenize stage allocation-minimal. Multi-byte
   * UTF-8 sequences have the high bit set → treated as separators, same as
   * the regex. */
-case class AsciiTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-
-  override protected def nullSafeEval(input: Any): Any =
-    AsciiTokens.tokenize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.AsciiTokens.tokenize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): AsciiTokens =
-    copy(child = newChild)
-}
-
 object AsciiTokens {
+  val schema: DataType = ArrayType(StringType, containsNull = false)
+
   @inline private def isAlnum(b: Byte): Boolean =
     (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
 
@@ -131,31 +105,14 @@ object AsciiTokens {
   }
 }
 
-/** Case-insensitive-ASCII substring test as ONE codegen'd expression:
-  * `AsciiContains(content, needle)` ⇔
-  * `contains(AsciiLower(content), AsciiLower(needle))`, without materializing
+/** Case-insensitive-ASCII substring test (`graft_ascii_contains`):
+  * `containsLower(content, needle)` ⇔
+  * `contains(asciiLower(content), asciiLower(needle))`, without materializing
   * the lowered copy of `content`. ASCII lowering is a per-byte map (multi-byte
   * UTF-8 sequences have the high bit set and are untouched), so a byte-wise
   * search that folds [A-Z] on the fly is exactly the search over the lowered
   * string — the phrase-verify corpus scan goes from
   * allocate-lowered-copy + memchr to a zero-allocation scan per row. */
-case class AsciiContains(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.BooleanType
-
-  override protected def nullSafeEval(h: Any, n: Any): Any =
-    AsciiContains.containsLower(h.asInstanceOf[UTF8String],
-      n.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (h, n) => s"graft.functions.AsciiContains.containsLower($h, $n)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): AsciiContains =
-    copy(left = newLeft, right = newRight)
-}
-
 object AsciiContains {
   @inline private def low(b: Byte): Byte =
     if (b >= 'A' && b <= 'Z') (b | 0x20).toByte else b
@@ -182,8 +139,18 @@ object AsciiContains {
   }
 }
 
-/** Session registration for graft's native expressions (public registry API —
-  * no private Spark internals). */
+/** Session registration for graft's native functions (public registry API —
+  * no private Spark internals).
+  *
+  * Every function is Spark's own `StaticInvoke` over a static helper of one
+  * of this package's objects, the wrapper Spark's built-ins use to call
+  * static code: it stays inside whole-stage codegen (the generated code
+  * calls the object's static forwarder, e.g.
+  * `graft.functions.DecodePostings.decode`) and the plan prints
+  * `static_invoke(graft.functions.X.helper(...))`. A null argument gives a
+  * null result without calling the helper; only the helpers that can
+  * themselves return null are declared `returnNullable`.
+  */
 object GraftFunctions {
   val AsciiLowerName = "graft_ascii_lower"
   val AsciiTokensName = "graft_tokens"
@@ -204,24 +171,27 @@ object GraftFunctions {
     * threads that are resolving these names. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
-    def define(name: String, builder: Seq[Expression] => Expression): Unit =
+    def define(name: String, obj: AnyRef, helper: String, dataType: DataType,
+               returnNullable: Boolean = false): Unit =
       if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "built-in")
-    define(AsciiContainsName, exprs => AsciiContains(exprs(0), exprs(1)))
-    define(CosineSimName, exprs => CosineSim(exprs(0), exprs(1)))
-    define(SignBucketName, exprs => SignBucket(exprs(0),
-      exprs(1).eval().asInstanceOf[Int]))
-    define(MinHashSigsName, exprs => MinHashSigs(exprs(0),
-      exprs(1).eval().asInstanceOf[Int]))
-    define(SimHashName, exprs => SimHashVal(exprs.head))
-    define(FingerprintName, exprs => FingerprintMin(exprs.head))
-    define(AsciiLowerName, exprs => AsciiLower(exprs.head))
-    define(AsciiTokensName, exprs => AsciiTokens(exprs.head))
-    define(CompactTokensName, exprs => CompactTokens(exprs.head))
-    define(DecodePostingsName, exprs => DecodePostings(exprs.head))
-    define(DecodeDocPositionsName, exprs => DecodeDocPositions(exprs(0), exprs(1)))
-    define(DecodeBlocksName,
-      exprs => DecodePostingsBlocks(exprs(0), exprs(1), exprs(2), exprs(3), exprs(4)))
+        registry.createOrReplaceTempFunction(name, exprs => StaticInvoke(
+          obj.getClass, dataType, helper, exprs,
+          returnNullable = returnNullable), "built-in")
+    define(AsciiContainsName, AsciiContains, "containsLower", BooleanType)
+    define(CosineSimName, CosineSim, "cosine", DoubleType, returnNullable = true)
+    define(SignBucketName, SignBucket, "bucket", LongType)
+    define(MinHashSigsName, MinHashSigs, "sigs", MinHashSigs.schema,
+      returnNullable = true)
+    define(SimHashName, SimHashVal, "simhash", SimHashVal.schema,
+      returnNullable = true)
+    define(FingerprintName, FingerprintMin, "fingerprint", StringType)
+    define(AsciiLowerName, AsciiLower, "lower", StringType)
+    define(AsciiTokensName, AsciiTokens, "tokenize", AsciiTokens.schema)
+    define(CompactTokensName, CompactTokens, "compact", CompactTokens.schema)
+    define(DecodePostingsName, DecodePostings, "decode", DecodePostings.schema)
+    define(DecodeDocPositionsName, DecodeDocPositions, "decode",
+      DecodeDocPositions.schema)
+    define(DecodeBlocksName, DecodePostingsBlocks, "decode", DecodePostings.schema)
   }
 
   /** `ascii_lower(c)` — caller must have [[register]]ed on the session that
@@ -236,7 +206,7 @@ object GraftFunctions {
   def asciiContains(h: Column, n: Column): Column =
     call_function(AsciiContainsName, h, n)
 
-  /** `graft_cosine(a, b)`: fused codegen'd cosine over float arrays —
+  /** `graft_cosine(a, b)`: fused cosine over float arrays —
     * bit-identical to the aggregate/zip_with HOF formulation. */
   def cosineSim(a: Column, b: Column): Column =
     call_function(CosineSimName, a, b)

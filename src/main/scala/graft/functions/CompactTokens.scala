@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -10,18 +8,18 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.index.PostingCodec
 
 /** One compacted posting entry of a single document, produced doc-at-a-time
-  * by [[CompactTokens]] (or [[CompactTokens.fromTokens]] for the code
+  * by [[CompactTokens.compact]] (or [[CompactTokens.fromTokens]] for the code
   * analyzer): `pos` is the final positions wire record — vint(tf) followed
   * by delta varints of the 0-based token positions (prev = -1) — which every
   * later build stage byte-copies, never re-encodes. */
 final case class TermEntry(term: String, tf: Int, len: Int, pos: Array[Byte])
 
-/** Fused tokenize → per-document posting compaction as ONE codegen'd
-  * Catalyst expression: `content → array<struct<term, tf, len, pos>>`, one
-  * entry per DISTINCT term of the document, positions already in wire
-  * format.
+/** Fused tokenize → per-document posting compaction as ONE native
+  * function (`graft_compact_tokens`): `content → array<struct<term, tf, len,
+  * pos>>`, one entry per DISTINCT term of the document, positions already in
+  * wire format.
   *
-  * This is the build's map side collapsed to a single expression eval per
+  * This is the build's map side collapsed to a single function eval per
   * document. The previous shape — tokenize, `posexplode` one row per token,
   * `sortWithinPartitions(doc_id, term, pos)`, then a linear-scan compactor —
   * materialized one UnsafeRow per TOKEN and paid an O(T log T) in-partition
@@ -32,26 +30,14 @@ final case class TermEntry(term: String, tf: Int, len: Int, pos: Array[Byte])
   * dead after the eval — no sort, no per-token rows), and the output
   * explodes straight into the (term, salt) shuffle write.
   *
-  * Tokenization is byte-identical to [[AsciiTokens]] (maximal `[A-Za-z0-9]+`
-  * runs, ASCII-lowercased — reference `Utils/Utils.java:14` semantics);
+  * Tokenization is byte-identical to [[AsciiTokens.tokenize]] (maximal
+  * `[A-Za-z0-9]+` runs, ASCII-lowercased — reference `Utils/Utils.java:14`
+  * semantics);
   * `PhraseSpec` cross-validates the fused positions against the
   * per-token `Stats.tokensPos` path, and the `q_tf`, `q_docstats` and
   * `q_termstats` DuckDB oracles check its tf, len and df directly (they
   * are projections of `Stats.postings`).
   */
-case class CompactTokens(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = CompactTokens.schema
-
-  override protected def nullSafeEval(input: Any): Any =
-    CompactTokens.compact(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CompactTokens.compact($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CompactTokens =
-    copy(child = newChild)
-}
-
 object CompactTokens {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("term", StringType, nullable = false),

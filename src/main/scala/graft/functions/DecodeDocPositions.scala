@@ -1,14 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native codegen'd decode of a posting chunk PLUS its parallel position
-  * stream into one entry per POSTING — `array<struct<doc_id: bigint,
-  * ps: array<int>>>` — the only positions decoder.
+/** Native decode (`graft_decode_doc_positions`) of a posting chunk PLUS its
+  * parallel position stream into one entry per POSTING —
+  * `array<struct<doc_id: bigint, ps: array<int>>>` — the only positions
+  * decoder.
   *
   * No query reads positions: this decoder serves the `q_positions` oracle
   * and PhraseSpec's roundtrip, which certify the stored column by
@@ -17,25 +17,8 @@ import org.apache.spark.sql.types._
   *
   * Wire format of `positions` (PostingCodec.encodeWithPos): per posting, in
   * chunk posting order: vint(count) then count delta-gap varints (prev = -1).
-  * doc ids come from the postings stream (left child).
+  * doc ids come from the postings stream (first argument).
   */
-case class DecodeDocPositions(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DecodeDocPositions.schema
-
-  override protected def nullSafeEval(postings: Any, positions: Any): Any =
-    DecodeDocPositions.decode(postings.asInstanceOf[Array[Byte]],
-      positions.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (p, q) => s"graft.functions.DecodeDocPositions.decode($p, $q)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DecodeDocPositions =
-    copy(left = newLeft, right = newRight)
-}
-
 object DecodeDocPositions {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("doc_id", LongType, nullable = false),

@@ -1,36 +1,21 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native codegen'd decode of a delta-gap var-byte posting chunk
-  * (`graft.index.PostingCodec` wire format) into
+/** Native decode (`graft_decode_postings`) of a delta-gap var-byte posting
+  * chunk (`graft.index.PostingCodec` wire format) into
   * `array<struct<doc_id:bigint, tf:int, len:int>>`.
   *
   * Replaces a Scala `udf` on the query hot path: a UDF routes every row
   * through the catalyst↔Scala converters (case-class encoder, boxing); this
-  * expression decodes the byte[] directly into InternalRows and stays
-  * inside whole-stage codegen, fused with the downstream `explode`. The
-  * decode loop is the §7.5 "Catalyst Expression for var-byte decode"
-  * deferred optimization from SURVEY.md.
+  * helper decodes the byte[] directly into InternalRows and stays inside
+  * whole-stage codegen, fused with the downstream `explode`. The decode loop
+  * is the §7.5 "Catalyst Expression for var-byte decode" deferred
+  * optimization from SURVEY.md.
   */
-case class DecodePostings(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DecodePostings.schema
-
-  override protected def nullSafeEval(input: Any): Any =
-    DecodePostings.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DecodePostings.decode($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DecodePostings =
-    copy(child = newChild)
-}
-
 object DecodePostings {
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
@@ -43,8 +28,18 @@ object DecodePostings {
   def decode(bytes: Array[Byte]): ArrayData = {
     // postings are ≥3 bytes each; presize to the upper bound
     val out = new java.util.ArrayList[AnyRef](bytes.length / 3 + 1)
-    var pos = 0
-    var prev = -1L
+    decodeSpan(bytes, 0, bytes.length, -1L, out)
+    new GenericArrayData(out.toArray(new Array[AnyRef](out.size())))
+  }
+
+  /** Appends the (doc_id, tf, len) rows of the gap/tf/len triples in
+    * `bytes[from, until)` to `out`; `prevDoc` is the delta base (-1 for a
+    * chunk, the previous block's last doc id for a block). The one
+    * var-byte loop of both posting decoders. */
+  def decodeSpan(bytes: Array[Byte], from: Int, until: Int, prevDoc: Long,
+                 out: java.util.ArrayList[AnyRef]): Unit = {
+    var pos = from
+    var prev = prevDoc
 
     @inline def readVLong(): Long = {
       var shift = 0
@@ -60,7 +55,7 @@ object DecodePostings {
       v | ((b & 0x7fL) << shift)
     }
 
-    while (pos < bytes.length) {
+    while (pos < until) {
       val doc = prev + readVLong()
       val tf = readVLong().toInt
       val len = readVLong().toInt
@@ -68,6 +63,5 @@ object DecodePostings {
       out.add(new GenericInternalRow(
         Array[Any](doc, tf, len)): InternalRow)
     }
-    new GenericArrayData(out.toArray(new Array[AnyRef](out.size())))
   }
 }

@@ -1,11 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 
 /** Block-selective decode of a posting chunk — the read path of the
   * block-max skip metadata (north rule: "block-max WAND pruning").
@@ -23,59 +18,12 @@ import org.apache.spark.sql.types._
   *  - rescore: `[lo, hi]` = the candidates' doc range (minw = 0 — every
   *    contribution of a surviving candidate counts).
   */
-case class DecodePostingsBlocks(postings: Expression, blocks: Expression,
-                                lo: Expression, hi: Expression,
-                                minw: Expression) extends Expression {
-  override def children: Seq[Expression] = Seq(postings, blocks, lo, hi, minw)
-  override def nullable: Boolean = children.exists(_.nullable)
-  override def dataType: DataType = DecodePostings.schema
-
-  override def eval(input: InternalRow): Any = {
-    val p = postings.eval(input)
-    val b = blocks.eval(input)
-    val l = lo.eval(input)
-    val h = hi.eval(input)
-    val w = minw.eval(input)
-    // full null propagation across all five children (ADVICE r2): callers
-    // pass literal lo/hi/minw today, but a nullable scalar child must yield
-    // null, not decode with defaults
-    if (p == null || b == null || l == null || h == null || w == null) return null
-    DecodePostingsBlocks.decode(p.asInstanceOf[Array[Byte]],
-      b.asInstanceOf[ArrayData],
-      l.asInstanceOf[Long], h.asInstanceOf[Long], w.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pG = postings.genCode(ctx)
-    val bG = blocks.genCode(ctx)
-    val lG = lo.genCode(ctx)
-    val hG = hi.genCode(ctx)
-    val wG = minw.genCode(ctx)
-    val javaType = CodeGenerator.javaType(dataType)
-    ev.copy(code = code"""
-      ${pG.code}
-      ${bG.code}
-      ${lG.code}
-      ${hG.code}
-      ${wG.code}
-      boolean ${ev.isNull} = ${pG.isNull} || ${bG.isNull} ||
-        ${lG.isNull} || ${hG.isNull} || ${wG.isNull};
-      $javaType ${ev.value} = null;
-      if (!${ev.isNull}) {
-        ${ev.value} = graft.functions.DecodePostingsBlocks.decode(
-          ${pG.value}, ${bG.value}, ${lG.value}, ${hG.value}, ${wG.value});
-      }""")
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): DecodePostingsBlocks =
-    copy(postings = newChildren(0), blocks = newChildren(1),
-      lo = newChildren(2), hi = newChildren(3), minw = newChildren(4))
-}
-
 object DecodePostingsBlocks {
   /** Static helper invoked from generated code. `blocks` rows are
-    * (last_doc_id: long, max_tf: int, max_weight: double, offset: int). */
+    * (last_doc_id: long, max_tf: int, max_weight: double, offset: int).
+    * A null in any of the five arguments gives null without a call (ADVICE
+    * r2): callers pass literal lo/hi/minw today, but a nullable scalar must
+    * yield null, not decode with defaults. */
   def decode(bytes: Array[Byte], blocks: ArrayData,
              lo: Long, hi: Long, minw: Double): ArrayData = {
     val nBlocks = blocks.numElements()
@@ -92,31 +40,7 @@ object DecodePostingsBlocks {
       else if (last >= lo && maxW >= minw) {
         val end = if (i + 1 < nBlocks) blocks.getStruct(i + 1, 4).getInt(3)
           else bytes.length
-        var pos = offset
-        var prev = prevLast
-        while (pos < end) {
-          var shift = 0
-          var v = 0L
-          var b = bytes(pos); pos += 1
-          while ((b & 0x80) != 0) {
-            v |= (b & 0x7fL) << shift; shift += 7; b = bytes(pos); pos += 1
-          }
-          val doc = prev + (v | ((b & 0x7fL) << shift))
-          // tf
-          shift = 0; v = 0L; b = bytes(pos); pos += 1
-          while ((b & 0x80) != 0) {
-            v |= (b & 0x7fL) << shift; shift += 7; b = bytes(pos); pos += 1
-          }
-          val tf = (v | ((b & 0x7fL) << shift)).toInt
-          // len
-          shift = 0; v = 0L; b = bytes(pos); pos += 1
-          while ((b & 0x80) != 0) {
-            v |= (b & 0x7fL) << shift; shift += 7; b = bytes(pos); pos += 1
-          }
-          val len = (v | ((b & 0x7fL) << shift)).toInt
-          prev = doc
-          out.add(new GenericInternalRow(Array[Any](doc, tf, len)): InternalRow)
-        }
+        DecodePostings.decodeSpan(bytes, offset, end, prevLast, out)
       }
       prevLast = last
       i += 1

@@ -1,13 +1,11 @@
 package graft.functions
 
 import java.security.MessageDigest
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared md5 helpers for the fused dedup/fingerprint expressions. All of
+/** Shared md5 helpers for the fused dedup/fingerprint functions. All of
   * them reproduce Spark's `md5()` (lowercase hex over UTF-8 bytes)
   * bit-for-bit — the DuckDB oracles mirror that hash family, so the fused
   * operators must keep it. Digests are compared as UNSIGNED byte arrays:
@@ -43,47 +41,30 @@ private[functions] object Md5Util {
   }
 }
 
-/** Fused per-document MinHash signature: `words → array<string>` of the
-  * nHashes minima min over 3-word shingles of md5("h|" + shingle), or NULL
-  * when the document has fewer than 3 words (no shingles — the groupBy
-  * formulation drops such docs, callers filter the null).
+/** Fused per-document MinHash signature (`graft_minhash_sigs`):
+  * `words → array<string>` of the nHashes minima min over 3-word shingles
+  * of md5("h|" + shingle), or NULL when the document has fewer than 3 words
+  * (no shingles — the groupBy formulation drops such docs, callers filter
+  * the null).
   *
   * Replaces the explode-shingles → groupBy(doc_id) → nHashes min(md5(...))
   * aggregate-column plan (graft.ops.Dedup.minhashWide): the md5 count is
   * identical, but there are no per-shingle rows, no hash-agg probes and no
-  * doc_id exchange — the whole signature is one narrow expression eval per
+  * doc_id exchange — the whole signature is one narrow function eval per
   * document (the CompactTokens pattern applied to dedup).
   */
-case class MinHashSigs(child: Expression, nHashes: Int) extends UnaryExpression {
+object MinHashSigs {
   // 0-or-1-element outer array: consumed via explode_outer + an isNotNull
   // filter on the GENERATOR OUTPUT (the Stats.postings pattern) — filtering
-  // on the expression value itself would let predicate pushdown substitute
-  // the expression below the projection and evaluate every signature twice
-  // (observed in the physical plan as minhashsigs in both Filter and
+  // on the function value itself would let predicate pushdown substitute
+  // the call below the projection and evaluate every signature twice
+  // (observed in the physical plan as the sigs call in both Filter and
   // Project); a generator output cannot be substituted past its Generate.
-  override def dataType: DataType = ArrayType(
+  val schema: DataType = ArrayType(
     ArrayType(StringType, containsNull = false), containsNull = false)
-  override def nullable: Boolean = true
 
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashSigs.sigs(input.asInstanceOf[ArrayData], nHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("mh")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.MinHashSigs.sigs($c, $nHashes);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigs =
-    copy(child = newChild)
-}
-
-object MinHashSigs {
   /** Static helper invoked from generated code; null when < 3 words, else a
-    * single-element wrapper around the signature array (see dataType). */
+    * single-element wrapper around the signature array (see [[schema]]). */
   def sigs(words: ArrayData, nHashes: Int): ArrayData = {
     val nw = words.numElements()
     if (nw < 3) return null
@@ -137,38 +118,21 @@ object MinHashSigs {
   }
 }
 
-/** Fused per-document 32-bit SimHash: `words → bigint` (NULL when the doc
-  * has no tokens — the groupBy formulation drops those rows).
+/** Fused per-document 32-bit SimHash (`graft_simhash`): `words → bigint`
+  * (NULL when the doc has no tokens — the groupBy formulation drops those
+  * rows).
   *
   * Bit j of the result = sign of Σ over token OCCURRENCES of (+1 when the
   * j-th hex digit of md5(token) is odd else −1) — identical to the 32
   * conditional-sum aggregate columns in the previous plan
   * (`instr('0123456789abcdef', digit) % 2 == 0` ⇔ digit value odd), with no
   * explode, no 32-column agg and no doc_id exchange. */
-case class SimHashVal(child: Expression) extends UnaryExpression {
-  // 0-or-1-element outer array — same generator-barrier contract as
-  // [[MinHashSigs]] (explode_outer + isNotNull on the generator output).
-  override def dataType: DataType =
-    ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashVal.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val r = ctx.freshName("sh")
-      s"""org.apache.spark.sql.catalyst.util.ArrayData $r =
-         |  graft.functions.SimHashVal.simhash($c);
-         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashVal =
-    copy(child = newChild)
-}
-
 object SimHashVal {
+  // 0-or-1-element outer array — same generator-barrier contract as
+  // [[MinHashSigs.schema]] (explode_outer + isNotNull on the generator
+  // output).
+  val schema: DataType = ArrayType(LongType, containsNull = false)
+
   /** Static helper invoked from generated code; null when 0 words, else a
     * single-element array holding the hash. */
   def simhash(words: ArrayData): ArrayData = {
@@ -202,27 +166,14 @@ object SimHashVal {
   }
 }
 
-/** Fused rolling 8-char-window fingerprint: `text → string`, the
-  * lexicographic min of md5 over every 8-CHARACTER window (windows slide by
-  * one character; a text shorter than 8 chars is one whole-text window —
-  * `substring(text, i, 8)` semantics). Replaces the interpreted
+/** Fused rolling 8-char-window fingerprint (`graft_fingerprint`):
+  * `text → string`, the lexicographic min of md5 over every 8-CHARACTER
+  * window (windows slide by one character; a text shorter than 8 chars is
+  * one whole-text window — `substring(text, i, 8)` semantics). Replaces the interpreted
   * `aggregate(sequence(...), 'g', least(acc, md5(substring(...))))` HOF
   * fold: one digest-compare loop per document, hex conversion only for the
   * final minimum. Windows are sliced at UTF-8 code-point boundaries, exactly
   * like `substring`. */
-case class FingerprintMin(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-
-  override protected def nullSafeEval(input: Any): Any =
-    FingerprintMin.fingerprint(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.FingerprintMin.fingerprint($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): FingerprintMin =
-    copy(child = newChild)
-}
-
 object FingerprintMin {
   private def numBytesForFirstByte(b: Byte): Int = {
     val u = b & 0xff

@@ -1,18 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 
-/** Native codegen'd cosine similarity over two float-array columns.
+/** Native cosine similarity (`graft_cosine`) over two float-array columns.
   *
   * Replaces the `aggregate(zip_with(a, b, (x,y) -> x*y), 0.0, +)` /
   * `sqrt(...)` higher-order-function composition in graft.ops.Similarity:
   * Spark's HOFs are CodegenFallback — every evaluation walks an interpreted
   * expression tree per array element with boxed lambda variables, and a
-  * cosine needs three such folds per row (dot, |a|, |b|). This expression is
-  * one fused primitive loop.
+  * cosine needs three such folds per row (dot, |a|, |b|). This helper is
+  * one fused primitive loop, called from generated code.
   *
   * Arithmetic is BIT-IDENTICAL to the HOF formulation the DuckDB oracle
   * mirrors: each product is computed as double(a_i)·double(b_i) and summed
@@ -21,28 +18,6 @@ import org.apache.spark.sql.types._
   * zip_with/aggregate semantics: a null element or a length mismatch (which
   * zip_with pads with nulls) nulls the whole fold, hence the result.
   */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineSim.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val r = ctx.freshName("cos")
-      s"""java.lang.Double $r = graft.functions.CosineSim.cosine($a, $b);
-         |if ($r == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $r.doubleValue(); }
-         |""".stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
 object CosineSim {
   /** Static helper invoked from generated code. Returns null (boxed) when the
     * HOF formulation would: length mismatch or any null element. */
@@ -66,25 +41,12 @@ object CosineSim {
   }
 }
 
-/** Native codegen'd sign-LSH bucket: bit d = (embedding[d] > 0), d ∈
-  * [0, nBits). Replaces the interpreted `aggregate(zip_with(slice(...),
+/** Native sign-LSH bucket (`graft_sign_bucket`): bit d = (embedding[d] > 0),
+  * d ∈ [0, nBits). Replaces the interpreted `aggregate(zip_with(slice(...),
   * sequence(...), IF(x>0, pow(2,i), 0)), 0, +)` HOF chain (same null
   * semantics: a null element contributes 0, exactly like `IF(null > 0)`
   * taking the else branch; an embedding shorter than nBits contributes only
   * its existing dimensions, like zip_with's null padding). */
-case class SignBucket(child: Expression, nBits: Int) extends UnaryExpression {
-  override def dataType: DataType = LongType
-
-  override protected def nullSafeEval(input: Any): Any =
-    SignBucket.bucket(input.asInstanceOf[ArrayData], nBits)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SignBucket.bucket($c, $nBits)")
-
-  override protected def withNewChildInternal(newChild: Expression): SignBucket =
-    copy(child = newChild)
-}
-
 object SignBucket {
   /** Static helper invoked from generated code. */
   def bucket(a: ArrayData, nBits: Int): Long = {

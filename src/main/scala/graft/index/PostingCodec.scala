@@ -69,16 +69,6 @@ object PostingCodec {
   }
 
   // ---- varbyte (LEB128, unsigned) ----
-  def writeVLong(out: ArrayBuffer[Byte], v0: Long): Unit = {
-    var v = v0
-    require(v >= 0, s"varint must be non-negative: $v")
-    while ((v & ~0x7fL) != 0L) {
-      out += ((v & 0x7f) | 0x80).toByte
-      v >>>= 7
-    }
-    out += v.toByte
-  }
-
   final class Reader(val bytes: Array[Byte], var pos: Int) {
     def readVLong(): Long = {
       var shift = 0

@@ -55,8 +55,8 @@ object Stats {
   }
 
   /** Compacted posting stream `(doc_id, idx, term, tf, len, pos)` — the
-    * index-build input: ONE fused tokenize+compact expression eval per
-    * document (graft.functions.CompactTokens) emits one entry per DISTINCT
+    * index-build input: ONE fused tokenize+compact function eval per
+    * document (graft.functions.CompactTokens.compact) emits one entry per DISTINCT
     * term with tf, doc length, and the wire-encoded position record. No
     * per-token rows, no pre-shuffle sort, no docstats join. `idx` is the
     * entry's index within its document (idx == 0 exactly once per tokenized

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Lowercased word array (shared with the "simple" analyzer; ascii_lower —
-    * see graft.functions.AsciiLower — requires GraftFunctions.register on
+  /** Lowercased word array (shared with the "simple" analyzer; graft_tokens —
+    * see graft.functions.AsciiTokens — requires GraftFunctions.register on
     * the session first). */
   def wordsCol(text: Column): Column =
     graft.functions.GraftFunctions.asciiTokens(text)
@@ -61,7 +61,7 @@ object Dedup {
       )).as("shingle"))
 
   /** One row per doc with all nHashes MinHash minima as columns m0..m{n-1}.
-    * ZERO exchanges: the whole signature is ONE fused codegen'd expression
+    * ZERO exchanges: the whole signature is ONE fused native function
     * eval per document (graft.functions.MinHashSigs — the CompactTokens
     * pattern applied to dedup). The previous shape exploded one row per
     * shingle and ran nHashes min(md5(...)) aggregate columns through a
@@ -255,7 +255,7 @@ object Dedup {
     * engines. Fully narrow since r6 — no explode, no agg, no exchange. */
   def simhash(documents: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
-    // ONE fused expression eval per doc (graft.functions.SimHashVal): same
+    // ONE fused function eval per doc (graft.functions.SimHashVal): same
     // md5-hex-digit-parity family as the 32 conditional-sum aggregate
     // columns it replaces (digit j odd → +1 else −1, bit j = sum > 0), but
     // with no token explode, no 32-column agg and no doc_id exchange. Docs

@@ -20,21 +20,21 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** dot(a, b) over float arrays as exact double folds (kept as the
-    * HOF reference formulation; [[cosine]] uses the fused codegen'd
-    * expression with identical arithmetic). */
+    * HOF reference formulation; [[cosine]] uses the fused native function
+    * with identical arithmetic). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => acc + v)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Cosine as ONE fused codegen'd primitive loop
-    * (graft.functions.CosineSim). The previous `aggregate`/`zip_with`
+  /** Cosine as ONE fused primitive loop in generated code
+    * (graft.functions.CosineSim.cosine). The previous `aggregate`/`zip_with`
     * composition is a Spark higher-order function — CodegenFallback, i.e.
     * an interpreted expression-tree walk per array element, three folds per
     * row. The fused loop keeps the exact sequential left-fold double
     * arithmetic (same association order), so results are bit-identical
-    * (property-asserted in VectorExprSpec against the HOF formulation). */
+    * (property-asserted in FusedExprSpec against the HOF formulation). */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
 
@@ -190,10 +190,10 @@ object Similarity {
 
   /** Axis-aligned sign LSH bucket over the `embedding` column: bit d =
     * (v[d+1] > 0), d ∈ [0, nBits). Exact on float inputs (no accumulation),
-    * hence engine-identical. Fused codegen'd loop
-    * (graft.functions.SignBucket) — the previous `aggregate`/`zip_with`/
+    * hence engine-identical. One fused loop in generated code
+    * (graft.functions.SignBucket.bucket) — the previous `aggregate`/`zip_with`/
     * `pow` HOF chain is CodegenFallback (interpreted per element); same
-    * null/short-array semantics, asserted in VectorExprSpec. */
+    * null/short-array semantics, asserted in FusedExprSpec. */
   def signBucketExpr(nBits: Int = 8): Column =
     graft.functions.GraftFunctions.signBucket(col("embedding"), nBits)
 

@@ -68,8 +68,8 @@ object TextAnalysis {
   }
 
   /** Rolling 8-char-window fingerprint: lexicographic min of the md5 of
-    * every 8-gram (winnowing with window = whole doc). ONE fused codegen'd
-    * expression eval per document (graft.functions.FingerprintMin) — the
+    * every 8-gram (winnowing with window = whole doc). ONE fused native
+    * function eval per document (graft.functions.FingerprintMin) — the
     * previous `aggregate(sequence(...), 'g', least(acc, md5(substring)))`
     * HOF fold is CodegenFallback: an interpreted expression-tree walk plus a
     * 32-char hex string allocation per character position (measured 3.4 s

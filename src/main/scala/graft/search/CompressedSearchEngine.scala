@@ -37,7 +37,7 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
   // here, not per query, so concurrent requests don't rewrite the registry
   graft.functions.GraftFunctions.register(index.sparkSession)
 
-  // native codegen'd decode (graft.functions.DecodePostings) — stays inside
+  // native decode (graft.functions.DecodePostings.decode) — stays inside
   // whole-stage codegen fused with the explode, no catalyst↔Scala converters
   private def decodeCol(c: Column) =
     graft.functions.GraftFunctions.decodePostings(c)
@@ -319,7 +319,7 @@ final class CompressedSearchEngine(val index: DataFrame, val nDocs: Long,
 
   /** Block-selective variant of [[decodedFrom]]: decodes only blocks whose
     * doc range intersects [lo, hi] and whose max_weight ≥ minw (the block-max
-    * skip-pointer read path, graft.functions.DecodePostingsBlocks). */
+    * skip-pointer read path, graft.functions.DecodePostingsBlocks.decode). */
   private def decodedBlocksFrom(chunkRows: DataFrame, lo: Column, hi: Column,
                                 minw: Column): DataFrame =
     chunkRows.select(col("term"), col("df"),

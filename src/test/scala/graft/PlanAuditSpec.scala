@@ -57,11 +57,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("Sort [term"), p)
     // tf/len/positions ride in the posting row: the build plan has NO join
     assert(!p.contains("Join"), p)
-    // the fused tokenize+compact expression evaluates exactly once per row
+    // the fused tokenize+compact function evaluates exactly once per row
     // (the array is materialized once — not re-evaluated for the generator
     // or a pushed-down non-empty filter at the scan)
-    val tokenizes = "compacttokens".r.findAllIn(p).length
-    assert(tokenizes == 1, s"expected 1 compacttokens eval, got $tokenizes in:\n$p")
+    val tokenizes = "CompactTokens\\.compact\\(".r.findAllIn(p).length
+    assert(tokenizes == 1,
+      s"expected 1 CompactTokens.compact eval, got $tokenizes in:\n$p")
     // the ONLY sort is the post-shuffle (term, salt, doc_id) run sort — the
     // map side no longer sorts per-token rows
     val sorts = "\\bSort \\[".r.findAllIn(p).length
@@ -73,32 +74,32 @@ class PlanAuditSpec extends SparkSpec {
     df.collect() // AQE finalizes the plan at runtime
     val p = df.queryExecution.executedPlan.toString
     val fin = p.split("== Initial Plan ==").head
-    // the whole signature is ONE narrow expression eval per document (r6 —
+    // the whole signature is ONE narrow function eval per document (r6 —
     // no shingle explode, no groupBy agg); the explicit (band, bucket)
     // repartition before the self-join is the ONLY signature-bearing
     // exchange and the join's second side REUSES it instead of recomputing
     // signatures from the raw text
     assert(p.contains("ReusedExchange"), p)
     assert(!p.contains("collect_list"), p)
-    val sigEvals = "minhashsigs".r.findAllIn(fin).length
+    val sigEvals = "MinHashSigs\\.sigs\\(".r.findAllIn(fin).length
     assert(sigEvals == 1,
-      s"expected 1 minhashsigs eval in the final plan, got $sigEvals in:\n$fin")
+      s"expected 1 MinHashSigs.sigs eval in the final plan, got $sigEvals in:\n$fin")
   }
 
   test("simhash: fully narrow — no explode, no agg, no exchange before sort") {
     val df = ops.Dedup.simhash(Corpus.documents(spark, sf))
     val p = plan(df)
-    // r6: the 32 bit-plane sums are folded inside ONE fused expression per
+    // r6: the 32 bit-plane sums are folded inside ONE fused function per
     // document — the only exchange left is the final orderBy's range
-    // partitioning, and the expression evaluates exactly once per row (the
+    // partitioning, and the function evaluates exactly once per row (the
     // explode_outer generator barrier keeps the isNotNull filter from being
     // substituted below the projection)
     val hashEx = "hashpartitioning\\(doc_id".r.findAllIn(p).length
     assert(hashEx == 0, s"expected 0 doc_id hash exchanges, got $hashEx in:\n$p")
     val aggs = "\\bHashAggregate".r.findAllIn(p).length
     assert(aggs == 0, s"expected no aggregates, got $aggs in:\n$p")
-    val evals = "simhashval".r.findAllIn(p).length
-    assert(evals == 1, s"expected 1 simhashval eval, got $evals in:\n$p")
+    val evals = "SimHashVal\\.simhash\\(".r.findAllIn(p).length
+    assert(evals == 1, s"expected 1 SimHashVal.simhash eval, got $evals in:\n$p")
   }
 
   test("near-dup pairs plan is an LSH-bucket equi-join, never a cartesian") {
@@ -154,8 +155,8 @@ class PlanAuditSpec extends SparkSpec {
       assert(scans == 1, s"[$q] expected 1 corpus scan, got $scans in:\n$p")
       // both phrases' substring predicates reach that one scan, as the
       // zero-allocation case-folding search (r6 — no lowered content copy)
-      assert(p.contains("asciicontains"), p)
-      assert(!p.contains("Contains(asciilower"), p)
+      assert(p.contains("AsciiContains.containsLower("), p)
+      assert(!p.contains("AsciiLower.lower("), p)
       // ONE decoded index scan: one aggregate over the union of the
       // phrases' terms gives both membership flags and the BM25 score, so
       // no second scan re-decodes the terms to score the verified docs

@@ -1,12 +1,17 @@
 package graft.functions
 
 import graft.SparkSpec
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Round-6 fused codegen expressions == the HOF/aggregate formulations they
+/** Round-6 fused native functions == the HOF/aggregate formulations they
   * replaced, bit-for-bit, on randomized inputs — the replaced formulations
   * are re-stated inline here as the reference semantics (they are what the
-  * DuckDB oracles mirror). */
+  * DuckDB oracles mirror) — and every Graft function's null and
+  * whole-stage-codegen behaviour. */
 class FusedExprSpec extends SparkSpec {
   import spark.implicits._
 
@@ -144,5 +149,72 @@ class FusedExprSpec extends SparkSpec {
       val want = AsciiLower.lowerString(h).contains(AsciiLower.lowerString(n))
       assert(r.getBoolean(2) === want, s"h=[$h] n=[$n]")
     }
+  }
+
+  /** Every Graft function: its name, the static helper it calls and one
+    * valid non-null value per argument. The posting is doc 3 (tf 1, len 5):
+    * bytes gap 4, tf 1, len 5; its positions record is count 1, gap 1. */
+  private val calls: Seq[(String, String, Seq[(DataType, Any)])] = {
+    import GraftFunctions._
+    val posting = Array[Byte](4, 1, 5)
+    val floats = ArrayType(FloatType)
+    val words = ArrayType(StringType)
+    val blocks = ArrayType(StructType(Seq(
+      StructField("last_doc_id", LongType), StructField("max_tf", IntegerType),
+      StructField("max_weight", DoubleType), StructField("offset", IntegerType))))
+    Seq(
+      (AsciiLowerName, "AsciiLower.lower", Seq(StringType -> "Ab")),
+      (AsciiTokensName, "AsciiTokens.tokenize", Seq(StringType -> "a B")),
+      (AsciiContainsName, "AsciiContains.containsLower",
+        Seq(StringType -> "Hash join", StringType -> "hash")),
+      (CompactTokensName, "CompactTokens.compact", Seq(StringType -> "a b a")),
+      (DecodePostingsName, "DecodePostings.decode", Seq(BinaryType -> posting)),
+      (DecodeDocPositionsName, "DecodeDocPositions.decode",
+        Seq(BinaryType -> posting, BinaryType -> Array[Byte](1, 1))),
+      (DecodeBlocksName, "DecodePostingsBlocks.decode",
+        Seq(BinaryType -> posting, blocks -> Seq(Row(3L, 1, 1.0, 0)),
+          LongType -> 0L, LongType -> 10L, DoubleType -> 0.0)),
+      (CosineSimName, "CosineSim.cosine",
+        Seq(floats -> Seq(1f, 2f), floats -> Seq(2f, 1f))),
+      (SignBucketName, "SignBucket.bucket",
+        Seq(floats -> Seq(1f, -1f), IntegerType -> 2)),
+      (MinHashSigsName, "MinHashSigs.sigs",
+        Seq(words -> Seq("a", "b", "c"), IntegerType -> 4)),
+      (SimHashName, "SimHashVal.simhash", Seq(words -> Seq("a"))),
+      (FingerprintName, "FingerprintMin.fingerprint",
+        Seq(StringType -> "abcdefghij")))
+  }
+
+  test("every Graft function: a null argument gives null, and the call " +
+      "runs inside whole-stage codegen over a parquet scan") {
+    val registered = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(calls.map(_._1).toSet === registered)
+    // a generated-code compile error must fail here, not fall back to the
+    // interpreted plan
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try for ((name, helper, args) <- calls) {
+      val schema = StructType(StructField("id", IntegerType) +:
+        args.indices.map(i => StructField(s"a$i", args(i)._1)))
+      // row 0 sets every argument; row i nulls argument i-1 only
+      val rows = (0 to args.length).map(r => Row.fromSeq(r +:
+        args.indices.map(i => if (i == r - 1) null else args(i)._2)))
+      val dir = tmpDir(name)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        .write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir).select(col("id"),
+        call_function(name, args.indices.map(i => col(s"a$i")): _*))
+      val isNull = df.collect().map(r => r.getInt(0) -> r.isNullAt(1)).toMap
+      assert(isNull === (0 to args.length).map(i => i -> (i > 0)).toMap, name)
+      val plan = df.queryExecution.executedPlan
+      val fused = plan.collect { case w: WholeStageCodegenExec =>
+        w.child.collect { case n => n.expressions }.flatten.flatMap(_.collect {
+          case s: StaticInvoke =>
+            s.staticObject.getName.stripSuffix("$") + "." + s.functionName
+        })
+      }.flatten
+      assert(fused.contains(s"graft.functions.$helper"), s"$name:\n$plan")
+    } finally spark.conf.set("spark.sql.codegen.fallback", fallback)
   }
 }

@@ -159,17 +159,17 @@ class CompressedIndexSpec extends SparkSpec {
       val tf = 1 + (i % 5).toInt
       PostingCodec.PosPosting(i * 3, tf, 30, Array.tabulate(tf)(j => j * 2 + (i % 7).toInt))
     }
-    val segBuf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    val posBuf = scala.collection.mutable.ArrayBuffer.empty[Byte]
+    val segBuf = new PostingCodec.ByteBuf
+    val posBuf = new PostingCodec.ByteBuf
     var prev = -1L
     pps.foreach { p =>
-      PostingCodec.writeVLong(segBuf, p.doc_id - prev)
-      PostingCodec.writeVLong(segBuf, p.tf.toLong)
-      PostingCodec.writeVLong(segBuf, p.len.toLong)
+      segBuf.writeVLong(p.doc_id - prev)
+      segBuf.writeVLong(p.tf.toLong)
+      segBuf.writeVLong(p.len.toLong)
       prev = p.doc_id
-      PostingCodec.writeVLong(posBuf, p.positions.length.toLong)
+      posBuf.writeVLong(p.positions.length.toLong)
       var pp = -1L
-      p.positions.foreach { q => PostingCodec.writeVLong(posBuf, q - pp); pp = q }
+      p.positions.foreach { q => posBuf.writeVLong(q - pp); pp = q }
     }
     val chunks = InvertedIndex.termChunkRows("t", 300L,
       Seq((segBuf.toArray, posBuf.toArray)), avgdl, chunkSize = 64).toArray

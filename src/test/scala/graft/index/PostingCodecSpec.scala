@@ -19,8 +19,8 @@ class PostingCodecSpec extends AnyFunSuite {
     val values = Seq(0L, 1L, 127L, 128L, 16383L, 16384L, Long.MaxValue) ++
       Seq.fill(500)(rnd.nextLong(Long.MaxValue))
     for (v <- values) {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Byte]
-      writeVLong(buf, v)
+      val buf = new ByteBuf
+      buf.writeVLong(v)
       assert(new Reader(buf.toArray, 0).readVLong() === v, s"v=$v")
     }
   }
