@@ -40,9 +40,15 @@ object Analyzer {
     else Some(PorterStemmer.stem(cleaned))
   }
 
-  /** Oracle-parity tokenizer: lowercase, split on non-[a-z0-9] runs. */
+  /** Oracle-parity tokenizer: ASCII-lowercase, split on non-[a-z0-9] runs —
+    * the index's own tokens (graft.functions.AsciiTokens). Java's
+    * `toLowerCase` moves some letters across the ASCII boundary (the Kelvin
+    * sign K → k, İ → i̇, and I → ı under a Turkish default locale), and a
+    * query token so lowered never matches the index's token for the same
+    * text. */
   def simpleTokens(content: String): Seq[String] =
-    content.toLowerCase.split("[^a-z0-9]+").iterator.filter(_.nonEmpty).toSeq
+    graft.functions.AsciiLower.lowerString(content).split("[^a-z0-9]+")
+      .iterator.filter(_.nonEmpty).toSeq
 
   /** Split one raw identifier into subtokens on `_`, camelCase humps and
     * letter↔digit boundaries; returns the parts (the caller decides whether

@@ -1,6 +1,8 @@
 package graft.checkpoint
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.index.{InvertedIndex, Stats}
@@ -35,15 +37,11 @@ object CheckpointedBuild {
                                   sha_ok: Long, status: String,
                                   tokens: Long = 0L, docsTok: Long = 0L)
 
-  final case class BuildStats(nDocs: Long, avgdl: Double, buckets: Int)
-
-  /** Test hook: thrown when `failAfterBuckets` is reached. */
-  final class InjectedFailure(msg: String) extends RuntimeException(msg)
-
-  /** Diagnostic: rows scanned by the last run's resume re-validation job
-    * (0 when it didn't run). Tests assert a `changedIds`-scoped append run
-    * validates only the changed buckets' rows, not the whole corpus. */
-  @volatile private[graft] var lastValidationRows: Long = 0L
+  /** `validatedRows`: rows scanned by this run's resume re-validation job
+    * (0 when it did not run) — a `changedIds`-scoped append run validates
+    * only the changed buckets' rows, not the whole corpus. */
+  final case class BuildStats(nDocs: Long, avgdl: Double, buckets: Int,
+                              validatedRows: Long)
 
   private def manifestPath(outDir: String, b: Int) =
     Paths.get(s"$outDir/manifest/bucket-$b.json")
@@ -61,12 +59,16 @@ object CheckpointedBuild {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The entries of directory `p`, with the directory stream closed. */
+  private def list(p: Path): Seq[Path] = {
+    val l = Files.list(p)
+    try l.iterator().asScala.toSeq finally l.close()
+  }
+
   def readManifests(outDir: String): Seq[BucketManifest] = {
     val dir = Paths.get(s"$outDir/manifest")
     if (!Files.isDirectory(dir)) return Seq.empty
-    import scala.jdk.CollectionConverters._
-    Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".json")).toSeq.sortBy(_.toString)
+    list(dir).filter(_.getFileName.toString.endsWith(".json")).sortBy(_.toString)
       .map { p =>
         val s = Files.readString(p)
         def l(k: String) = s"""\"$k\":\\s*(\\d+)""".r.findFirstMatchIn(s)
@@ -78,31 +80,31 @@ object CheckpointedBuild {
       }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toSeq.foreach(deleteRecursively)
-    Files.deleteIfExists(p)
-  }
-
   private def isComplete(outDir: String, b: Int): Boolean = {
     val p = manifestPath(outDir, b)
     Files.exists(p) && Files.readString(p).contains("\"status\": \"complete\"")
   }
 
-  /** Run (or resume) the bucketed build. Returns corpus stats.
-    * `bucketConc` ≤ 0 → auto (up to 4 in-flight buckets, sequential on a
-    * single core; see the comment at the bucket pool). All table data goes
-    * through `io` (the Iceberg seam — graft.sources.TableIO); manifests are
-    * the build's own lineage artifacts and stay JSON. Completed buckets are
-    * always re-validated against the CURRENT input before being skipped:
-    * one narrow job recomputes every bucket's snapshot hash (count +
-    * bit_xor of xxhash64(doc_id, sha) — doc_id+sha columns only, no
-    * content read) and any bucket whose manifest
-    * snapshot_id no longer matches is invalidated and rebuilt, so resuming
-    * into an outDir after the corpus changed can never mix stale segments
-    * with fresh ones. */
-  /** `idDomain`: the doc_id key space the buckets partition, `(min, max)`
+  /** Run (or resume) the bucketed build. Returns corpus stats. Buckets
+    * build concurrently, up to 4 in flight (see the comment at the bucket
+    * pool). All table data goes through `io` (the Iceberg seam —
+    * graft.sources.TableIO); manifests are the build's own lineage
+    * artifacts and stay JSON. Completed buckets are always re-validated
+    * against the CURRENT input before being skipped: one narrow job
+    * recomputes every bucket's snapshot hash (count + bit_xor of
+    * xxhash64(doc_id, sha) — doc_id+sha columns only, no content read) and
+    * any bucket whose manifest snapshot_id no longer matches is invalidated
+    * and rebuilt, so resuming into an outDir after the corpus changed can
+    * never mix stale segments with fresh ones.
+    *
+    * A failing bucket fails the run, but only after every other bucket job
+    * has ended: `run` then throws the first failed bucket's own exception
+    * (e.g. the sha256 invariant's `IllegalArgumentException`) and leaves a
+    * complete manifest for every bucket that succeeded and none for a
+    * failed one, so a resume into the same `outDir` rebuilds exactly the
+    * failed buckets and never races a job of the failed run.
+    *
+    * `idDomain`: the doc_id key space the buckets partition, `(min, max)`
     * inclusive. Defaults to the CURRENT input's min/max — correct for a
     * one-shot build, but bucket boundaries then move whenever the corpus
     * grows. For incremental append (S3 delta semantics) pass the table's
@@ -124,10 +126,7 @@ object CheckpointedBuild {
     * instead. This is a CONTRACT: rows outside `changedIds` must be
     * byte-identical to the state the manifests recorded — exactly the
     * guarantee snapshot metadata gives. */
-  def run(files: DataFrame, outDir: String, nBuckets: Int = 8,
-          saltBuckets: Int = 32, analyzer: String = "simple",
-          failAfterBuckets: Int = Int.MaxValue,
-          bucketConc: Int = -1,
+  def run(files: DataFrame, outDir: String, nBuckets: Int,
           io: graft.sources.TableIO = graft.sources.ParquetTableIO,
           idDomain: Option[(Long, Long)] = None,
           changedIds: Option[(Long, Long)] = None): BuildStats = {
@@ -144,14 +143,11 @@ object CheckpointedBuild {
     readManifests(outDir).filter(_.partition_id >= nBuckets)
       .foreach(m => Files.deleteIfExists(manifestPath(outDir, m.partition_id)))
     val segRoot = Paths.get(s"$outDir/segments")
-    if (Files.isDirectory(segRoot)) {
-      import scala.jdk.CollectionConverters._
-      Files.list(segRoot).iterator().asScala.toSeq.foreach { p =>
-        val name = p.getFileName.toString
-        val orphan = name.startsWith("bucket=") &&
-          scala.util.Try(name.stripPrefix("bucket=").toInt).toOption.exists(_ >= nBuckets)
-        if (orphan) deleteRecursively(p)
-      }
+    if (Files.isDirectory(segRoot)) list(segRoot).foreach { p =>
+      val name = p.getFileName.toString
+      val orphan = name.startsWith("bucket=") &&
+        scala.util.Try(name.stripPrefix("bucket=").toInt).toOption.exists(_ >= nBuckets)
+      if (orphan) org.apache.commons.io.FileUtils.forceDelete(p.toFile)
     }
     val (minId, maxId) = idDomain.getOrElse {
       val bounds = files.agg(min("doc_id"), max("doc_id")).head()
@@ -190,7 +186,7 @@ object CheckpointedBuild {
     // (delta-metadata contract above); other completed buckets only need
     // their on-disk artifacts present.
     val completedBefore = (0 until nBuckets).filter(isComplete(outDir, _))
-    if (completedBefore.nonEmpty) {
+    val validatedRows = if (completedBefore.isEmpty) 0L else {
       val ms = readManifests(outDir).map(m => m.partition_id -> m).toMap
       val scope: Option[(Int, Int)] = changedIds.map { case (clo, chi) =>
         (math.max(0, ((clo - minId) / width).toInt),
@@ -209,7 +205,6 @@ object CheckpointedBuild {
         .collect()
         .map(r => r.getInt(0) -> ((r.getLong(1),
           java.lang.Long.toHexString(r.getLong(2))))).toMap
-      lastValidationRows = cur.values.map(_._1).sum
       val stale = completedBefore.filter(inScope).filter { b =>
         val m = ms(b)
         val (rows, snap) = cur.getOrElse(b, (0L, "empty"))
@@ -225,7 +220,8 @@ object CheckpointedBuild {
       (stale ++ broken).foreach { b =>
         Files.deleteIfExists(manifestPath(outDir, b))
       }
-    } else lastValidationRows = 0L
+      cur.values.map(_._1).sum
+    }
 
     def buildBucket(b: Int): Unit = {
         val lo = minId + b * width
@@ -247,14 +243,14 @@ object CheckpointedBuild {
         // doc has exactly once), so no extra action runs; avgdl comes from
         // these observed sums.
         val dsObs = Observation(s"ds-$b")
-        val toksP = Stats.postings(observed, analyzer)
+        val toksP = Stats.postings(observed)
           .observe(dsObs,
             coalesce(sum(col("tf")).cast("long"), lit(0L)).as("tokens"),
             coalesce(sum(when(col("idx") === 0, 1L).otherwise(0L)), lit(0L))
               .as("docs_tok"))
         val segObs = Observation(s"seg-$b")
         val seg = InvertedIndex
-          .segments(toksP, nDocs = math.max(1L, width), saltBuckets)
+          .segments(toksP, nDocs = math.max(1L, width))
           .observe(segObs, count(lit(1)).as("groups"),
             sum(length(col("seg")) + length(col("pos"))).as("bytes"),
             sum(col("n")).as("postings"))
@@ -284,41 +280,32 @@ object CheckpointedBuild {
     }
 
     val todo = (0 until nBuckets).filterNot(isComplete(outDir, _))
-    if (failAfterBuckets != Int.MaxValue) {
-      // deterministic sequential path for fault-injection tests
-      var done = 0
-      for (b <- todo) {
-        if (done >= failAfterBuckets)
-          throw new InjectedFailure(s"injected failure before bucket $b")
-        buildBucket(b)
-        done += 1
-      }
-    } else if (todo.nonEmpty) {
+    if (todo.nonEmpty) {
       // Buckets are independent jobs (own segment dir + manifest), so run a
       // few concurrently: Spark backfills idle task slots of one bucket's
       // reduce/tail stages with the next bucket's scan — without this, every
       // bucket boundary is a cluster-wide barrier (on a 1000-executor
       // cluster that idle tail is the dominant scaling loss).
-      // Default: up to 4 in-flight buckets once there is more than one core
+      // Up to 4 in-flight buckets once there is more than one core
       // — measured (3.84M files, 4×1-executor local-cluster): sequential
       // 85.2 s at util 0.824 → conc=2 82.3 s / 0.894 → conc=4 79.2 s /
       // 0.908; local[4] at 1.92M: 39.1 s → 34.4 s / util 0.926. A single
       // core gains nothing (no idle slots to backfill: local[1] measured
       // 123.1 s sequential vs 126.4 s at conc=2, i.e. noise-level slower),
       // and stays sequential. The cap bounds transient memory (concurrent
-      // bucket scans) no matter how wide the cluster; raise it via
-      // `bucketConc` only with executor memory to match.
-      val defConc =
-        math.min(4, math.max(1, spark.sparkContext.defaultParallelism))
-      val conc = math.max(1, math.min(todo.size,
-        if (bucketConc > 0) bucketConc else defConc))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        Await.result(Future.sequence(todo.map(b => Future(buildBucket(b)))), Duration.Inf)
-      } finally pool.shutdown()
+      // bucket scans) no matter how wide the cluster.
+      val conc = math.min(todo.size,
+        math.min(4, math.max(1, spark.sparkContext.defaultParallelism)))
+      // The pool is made here, so its threads inherit the caller's Spark
+      // local properties (job group, scheduler pool, trace tags).
+      val pool = Executors.newFixedThreadPool(conc)
+      // invokeAll returns once every bucket job has ended, failed or not.
+      val jobs = try pool.invokeAll(
+        todo.map(b => (() => buildBucket(b)): Callable[Unit]).asJava)
+      finally pool.shutdown()
+      jobs.asScala.foreach { j =>
+        try j.get() catch { case e: ExecutionException => throw e.getCause }
+      }
     }
 
     // merge + publish (rerun unconditionally; cheap relative to bucket scans)
@@ -337,7 +324,7 @@ object CheckpointedBuild {
       nPartitions = InvertedIndex.writeParts(spark, idxBytes), io = io)
     Files.writeString(Paths.get(s"$outDir/scalars.json"),
       s"""{"n_docs": $nDocs, "avgdl": $avgdl, "buckets": $nBuckets, "status": "published"}""")
-    BuildStats(nDocs, avgdl, nBuckets)
+    BuildStats(nDocs, avgdl, nBuckets, validatedRows)
   }
 
   /** Load a published checkpointed index as a query engine. */

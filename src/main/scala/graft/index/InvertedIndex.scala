@@ -4,22 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import PostingCodec.BlockMeta
 
-/** One bounded chunk of a term's final posting list. Chunks split a term's
-  * postings every [[InvertedIndex.ChunkSize]] entries so a single row (and a
-  * single decode task) stays bounded even for ubiquitous code tokens at
-  * 10^12-file scale — the document-partitioned layout ubiquitous in sharded
-  * IR systems. `max_weight` is the chunk-level bound (max over its blocks).
-  * `positions` is the parallel in-document token-position stream, which no
-  * query reads; it lives in its own parquet column so the BM25 scoring
-  * path never reads a byte of it (column pruning).
+/** One final index row: one bounded chunk of a term's posting list plus
+  * the term-level df. Field order is the index's column order. Chunks split
+  * a term's postings every [[InvertedIndex.ChunkSize]] entries so a single
+  * row (and a single decode task) stays bounded even for ubiquitous code
+  * tokens at 10^12-file scale — the document-partitioned layout ubiquitous
+  * in sharded IR systems. `max_weight` is the chunk-level bound (max over
+  * its blocks). `positions` is the parallel in-document token-position
+  * stream, which no query reads; it lives in its own parquet column so the
+  * BM25 scoring path never reads a byte of it (column pruning).
   */
-final case class IndexChunk(chunk_id: Int, first_doc_id: Long,
-                            last_doc_id: Long, n: Int, max_weight: Double,
-                            blocks: Array[BlockMeta], postings: Array[Byte],
-                            positions: Array[Byte])
-
-/** One final index row: a term's chunk plus the term-level df. Field order
-  * is the index's column order. */
 final case class IndexRow(term: String, df: Long, chunk_id: Int,
                           first_doc_id: Long, last_doc_id: Long, n: Int,
                           max_weight: Double, blocks: Array[BlockMeta],

@@ -192,7 +192,8 @@ object PostingCodec {
   }
 
   /** One finished chunk from the streaming merge ([[mergeStreamsPos]]):
-    * everything [[graft.index.IndexChunk]] needs except the chunk_id. */
+    * the chunk fields of a [[graft.index.IndexRow]] except its chunk_id and
+    * `max_weight` (the max over `blocks`). */
   final case class ChunkOut(first_doc_id: Long, last_doc_id: Long, n: Int,
                             blocks: Array[BlockMeta], bytes: Array[Byte],
                             pos: Array[Byte])

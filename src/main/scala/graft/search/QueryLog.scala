@@ -24,7 +24,9 @@ import graft.analyze.Analyzer
 object QueryLog {
 
   /** Query normalization for the log: the simple analyzer's token stream,
-    * space-joined ("Spark  SQL!" → "spark sql"). */
+    * space-joined ("Spark  SQL!" → "spark sql"). Its ASCII-only lowering
+    * is the one [[suggest]] applies to the prefix, so a prefix of a query
+    * matches that query's normalized form. */
   def normalize(raw: String): String =
     Analyzer.queryTokens("simple", raw).mkString(" ")
 

@@ -20,12 +20,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
+  /** Fails the suite if it left a Spark job running (checked only once the
+    * shared session exists, so a suite that never touched Spark starts
+    * none). */
   override def afterAll(): Unit =
-    try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
-    finally super.afterAll()
+    try SparkSession.getDefaultSession.foreach { s =>
+      val running = SparkSpec.activeJobIds(s)
+      assert(running.isEmpty, s"$suiteName left Spark jobs running: ${running.mkString(", ")}")
+    } finally
+      try tmpDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      finally super.afterAll()
 }
 
 object SparkSpec {
+  /** The session's running jobs, read once every event posted so far has
+    * reached the status store (the store is fed asynchronously). */
+  def activeJobIds(s: SparkSession): Seq[Int] = {
+    org.apache.spark.SpecBus.drain(s.sparkContext)
+    s.sparkContext.statusTracker.getActiveJobIds().toSeq
+  }
+
   lazy val session: SparkSession = {
     val s = GraftSession.builder("graft-test", 4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -61,6 +61,18 @@ class AnalyzerSpec extends AnyFunSuite {
     assert(Analyzer.simpleTokens("") === Seq())
   }
 
+  test("simple query tokens are the index's tokens for non-ASCII letters") {
+    import org.apache.spark.unsafe.types.UTF8String
+    def indexTokens(s: String) = {
+      val arr = graft.functions.AsciiTokens.tokenize(UTF8String.fromString(s))
+      (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
+    }
+    // the Kelvin sign (U+212A) and a dotted capital I (U+0130): Java's
+    // toLowerCase maps both into [a-z], the index's ASCII lowering does not
+    for (s <- Seq("\u212Aelvin", "\u0130NDEX"))
+      assert(Analyzer.simpleTokens(s) === indexTokens(s), s)
+  }
+
   test("identifier splitting") {
     assert(Analyzer.splitIdentifier("parseHttpResponse") === Seq("parse", "Http", "Response"))
     assert(Analyzer.splitIdentifier("HTTPServer") === Seq("HTTP", "Server"))

@@ -4,12 +4,44 @@ import graft.SparkSpec
 import graft.analyze.Analyzer
 import graft.corpus.Corpus
 import graft.search.CompressedSearchEngine
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class CheckpointedBuildSpec extends SparkSpec {
 
   private lazy val files = Corpus.files(spark, "/root/testdata/sf0.001").cache()
+
+  private lazy val idRange = {
+    val r = files.agg(min("doc_id"), max("doc_id")).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def decodedOf(eng: CompressedSearchEngine) =
+    eng.decoded(None).orderBy("term", "doc_id").collect().toSeq
+
+  private def mtime(path: String) =
+    Files.getLastModifiedTime(java.nio.file.Paths.get(path))
+
+  /** `docs` with a wrong sha on doc `id`: the build's own sha256 invariant
+    * fails the bucket that holds it. */
+  private def withBadSha(docs: DataFrame, id: Long): DataFrame =
+    docs.withColumn("sha",
+      when(col("doc_id") === id, lit("0" * 64)).otherwise(col("sha")))
+
+  /** A build of `files` into `dir` in `n` buckets whose bucket `b` has one
+    * bad row: it throws the sha256 invariant of bucket `b`, and leaves a
+    * complete manifest for every other bucket and none for `b`. */
+  private def failBucket(dir: String, b: Int, n: Int): Unit = {
+    val (lo, hi) = idRange
+    val width = math.max(1L, (hi - lo + n) / n)
+    val e = intercept[IllegalArgumentException](
+      CheckpointedBuild.run(withBadSha(files, lo + b * width), dir, nBuckets = n))
+    assert(e.getMessage.contains(s"sha256 invariant violated in bucket $b"))
+    val ms = CheckpointedBuild.readManifests(dir)
+    assert(ms.filter(_.status == "complete").map(_.partition_id) ===
+      (0 until n).filter(_ != b), s"manifests after bucket $b failed")
+  }
 
   test("fresh build publishes manifests, metrics and a queryable index") {
     val out = tmpDir("graft-ckpt-fresh")
@@ -40,18 +72,16 @@ class CheckpointedBuildSpec extends SparkSpec {
     val freshDir = tmpDir("graft-ckpt-a")
     val resumeDir = tmpDir("graft-ckpt-b")
     CheckpointedBuild.run(files, freshDir, nBuckets = 4)
-    // interrupted run: dies after 2 buckets
-    intercept[CheckpointedBuild.InjectedFailure] {
-      CheckpointedBuild.run(files, resumeDir, nBuckets = 4, failAfterBuckets = 2)
-    }
-    assert(CheckpointedBuild.readManifests(resumeDir).count(_.status == "complete") === 2)
-    // resumed run completes only the remaining buckets
+    // interrupted run: one row of bucket 2 fails the sha256 invariant
+    failBucket(resumeDir, 2, 4)
+    val segMtimes = Seq(0, 1, 3).map(i => i -> mtime(s"$resumeDir/segments/bucket=$i"))
+    // resumed run on the good corpus completes only the failed bucket
     CheckpointedBuild.run(files, resumeDir, nBuckets = 4)
+    for ((i, t) <- segMtimes)
+      assert(mtime(s"$resumeDir/segments/bucket=$i") === t, s"bucket $i segments")
     val a = CheckpointedBuild.load(spark, freshDir)
     val b = CheckpointedBuild.load(spark, resumeDir)
-    val da = a.decoded(None).orderBy("term", "doc_id").collect().toSeq
-    val db = b.decoded(None).orderBy("term", "doc_id").collect().toSeq
-    assert(da === db)
+    assert(decodedOf(a) === decodedOf(b))
     assert(a.nDocs === b.nDocs)
     assert(math.abs(a.avgdl - b.avgdl) < 1e-12)
     // manifests of untouched buckets carry identical lineage
@@ -64,33 +94,42 @@ class CheckpointedBuildSpec extends SparkSpec {
   test("resume == fresh at every possible failure point") {
     val freshDir = tmpDir("graft-ckpt-allfresh")
     CheckpointedBuild.run(files, freshDir, nBuckets = 3)
-    val want = CheckpointedBuild.load(spark, freshDir)
-      .decoded(None).orderBy("term", "doc_id").collect().toSeq
+    val want = decodedOf(CheckpointedBuild.load(spark, freshDir))
     for (failAt <- 0 to 2) {
       val dir = tmpDir(s"graft-ckpt-fail$failAt")
-      intercept[CheckpointedBuild.InjectedFailure] {
-        CheckpointedBuild.run(files, dir, nBuckets = 3, failAfterBuckets = failAt)
-      }
+      failBucket(dir, failAt, 3)
       CheckpointedBuild.run(files, dir, nBuckets = 3)
-      val got = CheckpointedBuild.load(spark, dir)
-        .decoded(None).orderBy("term", "doc_id").collect().toSeq
+      val got = decodedOf(CheckpointedBuild.load(spark, dir))
       assert(got === want, s"failure point $failAt")
     }
   }
 
-  test("concurrent bucket jobs == sequential build") {
-    val seqDir = tmpDir("graft-ckpt-seq")
-    val concDir = tmpDir("graft-ckpt-conc")
-    CheckpointedBuild.run(files, seqDir, nBuckets = 4, bucketConc = 1)
-    CheckpointedBuild.run(files, concDir, nBuckets = 4, bucketConc = 4)
-    val a = CheckpointedBuild.load(spark, seqDir)
-    val b = CheckpointedBuild.load(spark, concDir)
-    assert(a.decoded(None).orderBy("term", "doc_id").collect().toSeq ===
-      b.decoded(None).orderBy("term", "doc_id").collect().toSeq)
-    val ma = CheckpointedBuild.readManifests(seqDir)
-    val mb = CheckpointedBuild.readManifests(concDir)
-    assert(ma.map(m => (m.partition_id, m.snapshot_id, m.rows, m.postings)) ===
-      mb.map(m => (m.partition_id, m.snapshot_id, m.rows, m.postings)))
+  test("a failed build returns only after every bucket job has ended") {
+    val (lo, hi) = idRange
+    val width = math.max(1L, (hi - lo + 8) / 8)
+    // 8 buckets on at most 4 pool threads; bucket 0 keeps one row, with a
+    // wrong sha, so its job fails first while the others still build
+    val docs = withBadSha(
+      files.filter(col("doc_id") === lo || col("doc_id") >= lo + width), lo)
+    val dir = tmpDir("graft-ckpt-failwait")
+    val e = intercept[IllegalArgumentException](
+      CheckpointedBuild.run(docs, dir, nBuckets = 8, idDomain = Some((lo, hi))))
+    assert(e.getMessage.contains("sha256 invariant violated in bucket 0"))
+    assert(graft.SparkSpec.activeJobIds(spark).isEmpty)
+    assert(CheckpointedBuild.readManifests(dir).filter(_.status == "complete")
+      .map(_.partition_id) === (1 until 8))
+  }
+
+  test("readManifests closes its directory streams") {
+    val dir = tmpDir("graft-ckpt-fds")
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/manifest"))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/manifest/bucket-0.json"),
+      """{"partition_id": 0, "snapshot_id": "empty", "status": "complete"}""")
+    def openFds = new java.io.File("/proc/self/fd").list().length
+    val before = openFds
+    for (_ <- 1 to 200) assert(CheckpointedBuild.readManifests(dir).length === 1)
+    // a leaked stream per call would add 200; other threads may open a few
+    assert(openFds - before < 50, s"open fds: $before -> $openFds")
   }
 
   test("resume invalidates buckets whose input slice changed (snapshot check)") {
@@ -139,12 +178,12 @@ class CheckpointedBuildSpec extends SparkSpec {
       Files.getLastModifiedTime(java.nio.file.Paths.get(s"$dir/segments/bucket=$i")))
     // append: same id domain, full corpus — only bucket 3's slice changed;
     // changedIds scopes the resume re-validation to that bucket's range
-    CheckpointedBuild.run(files, dir, nBuckets = 4, idDomain = domain,
-      changedIds = Some((cut, hi)))
+    val appendStats = CheckpointedBuild.run(files, dir, nBuckets = 4,
+      idDomain = domain, changedIds = Some((cut, hi)))
     // the validation job scanned ONLY the appended range's rows — an append
     // into a 100 TB table must not pay a full-corpus doc_id+sha scan
     val appendedRows = files.filter(col("doc_id") >= cut).count()
-    assert(CheckpointedBuild.lastValidationRows === appendedRows)
+    assert(appendStats.validatedRows === appendedRows)
     assert(appendedRows < files.count())
     val msAfter = CheckpointedBuild.readManifests(dir)
     assert(msAfter.map(_.rows).sum === files.count())
@@ -211,6 +250,9 @@ class CheckpointedBuildSpec extends SparkSpec {
     CheckpointedBuild.run(files, out, nBuckets = 3)
     val ck = CheckpointedBuild.load(spark, out)
     val direct = CompressedSearchEngine.build(files)
+    // the whole index and the corpus scalars, not only a top-k
+    assert(decodedOf(ck) === decodedOf(direct))
+    assert((ck.nDocs, ck.avgdl) === ((direct.nDocs, direct.avgdl)))
     val got = ck.searchTopK(Seq("merge", "sort", "window"), 10).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val want = direct.searchTopK(Seq("merge", "sort", "window"), 10).collect()

@@ -58,6 +58,15 @@ class SearchSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
+  test("a phrase with a non-ASCII capital finds the doc that contains it") {
+    // "Kelvin" spelled with the Kelvin sign (U+212A): the index holds the
+    // token "elvin", and doc 2's "kelvin" must not stand in for it
+    val kelvin = "\u212Aelvin"
+    val search = engineFor(Seq(1L -> s"temperature on the $kelvin scale",
+      2L -> "the kelvin scale in ascii", 3L -> "a scale model"), "simple")
+    assert(search("\"" + kelvin + " scale\"").map(_._1) === Seq(1L))
+  }
+
   for (analyzer <- Seq("simple", "code"); seed <- Seq(1, 2)) {
     test(s"engine == oracle ($analyzer, seed=$seed)") {
       val docs = randomCorpus(seed, 40)
