@@ -153,6 +153,26 @@ class ServeSpec extends SparkSpec {
     }
   }
 
+  test("a response does not wait on the client's delayed ACK") {
+    val s = new Serve.Session(spark, dir, files, tmpDir("graft-serve-nodelay") + "/querylog")
+    val server = HttpServe.start(s, 0)
+    try {
+      // a 400 runs no Spark job, so its round trip is the socket's cost:
+      // about 44 ms with Nagle's algorithm on (the body waits for the ACK of
+      // the headers), under 1 ms with TCP_NODELAY
+      (1 to 5).foreach(_ => assert(fetch(server, "/search")._1 === 400))
+      val ms = (1 to 20).map { _ =>
+        val t0 = System.nanoTime()
+        assert(fetch(server, "/search")._1 === 400)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(10) < 20, s"median ${ms(10)} ms of ${ms.mkString(", ")}")
+    } finally {
+      server.stop(0)
+      s.close()
+    }
+  }
+
   test("query-log buffer: suggestions see buffered queries; close appends them once") {
     val logPath = tmpDir("graft-serve-buffer") + "/querylog"
     def parquetFiles(log: String = logPath) = Option(new java.io.File(log).listFiles())
